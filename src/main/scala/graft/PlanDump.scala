@@ -1,6 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
+
+/**
+ * Physical-plan dumps over the sf0.001 tables, written relative to the
+ * working directory (the repo root):
+ *  - `PlanDump` writes the curated PLANS.md;
+ *  - `PlanDump <tag> [q,…]` writes one formatted plan per declared query
+ *    (all of them, or the comma-separated subset) to
+ *    `plans/<tag>/<q>_<tag>.txt`.
+ */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.builder()
@@ -8,6 +20,38 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
+    args.headOption match {
+      case Some(tag) => dumpQueries(spark, sf, tag,
+        args.lift(1).map(_.split(',').map(_.trim).toSet))
+      case None => dumpCurated(spark, sf)
+    }
+    spark.stop()
+  }
+
+  /** Every query is dumped with the dedup checkpoint suppressed, as
+    * `dumpInterior` does for the curated dedup entries. */
+  private def dumpQueries(spark: SparkSession, sf: String, tag: String,
+                          only: Option[Set[String]]): Unit = {
+    only.foreach(_.diff(SparkEntry.queries.keySet).foreach(q =>
+      System.err.println(s"unknown query $q")))
+    val outDir = Paths.get("plans", tag)
+    Files.createDirectories(outDir)
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, mk) =>
+        try {
+          val plan = graft.operators.Dedup.explainInterior.withValue(true) {
+            mk(spark, sf).queryExecution.explainString(FormattedMode)
+          }
+          Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)
+          println(s"dumped $name")
+        } catch {
+          case NonFatal(e) => System.err.println(s"FAILED $name: ${e.getMessage}")
+        }
+      }
+  }
+
+  private def dumpCurated(spark: SparkSession, sf: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — key physical plans (generated by graft.PlanDump)\n\n")
     sb.append("Evidence that the declarative formulations get the intended Catalyst\n")
@@ -307,7 +351,8 @@ object PlanDump {
     dumpInterior("Incremental near-dup (new batch vs persisted signature index)", {
       val docs = spark.read.parquet(s"$sf/documents.parquet")
         .select("doc_id", "text")
-      val sigDir = Files.createTempDirectory("plans_sigs").resolve("s").toString
+      val sigDir = org.apache.spark.sql.GraftBridge.createTempDir("plans_sigs")
+        .toPath.resolve("s").toString
       graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text", 3, 64)
         .write.mode("overwrite").parquet(sigDir)
       val newBatch = docs.where(col("doc_id") % 50 === 0)
@@ -351,8 +396,7 @@ object PlanDump {
         "combines, no hot shuffle key); removal sets return as one int " +
         "array per affected doc and reconstruction is a row-local indexed " +
         "filter over the same split.")
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
-    spark.stop()
   }
 }

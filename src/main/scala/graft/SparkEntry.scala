@@ -52,7 +52,8 @@ object SparkEntry {
       (bytes / (128L * 1024)).toInt))
   }
 
-  /** documents spread over a size-derived partition count (dedup family). */
+  /** documents spread over a size-derived partition count (dedup, LM and
+    * tokenizer queries). */
   private def docsSpreadSized(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .repartition(sizeSpreadParts(spark, dir, "documents"))
@@ -637,8 +638,7 @@ object SparkEntry {
     "q_ngram_topk" -> ((s, dir) => {
       // documents is ONE parquet file — without an explicit repartition the
       // whole tokenize+explode runs in a single task (CLAUDE.md trap)
-      t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      docsSpreadSized(s, dir)
         .select(explode(
           graft.functions.TextExpressions.word_shingles(col("text"), 2)).as("ngram"))
         .groupBy("ngram").agg(count(lit(1)).as("n"))
@@ -664,8 +664,7 @@ object SparkEntry {
       // per-lang doc counts, scoring) — persist it for the query's lifetime
       // (released after the eager checkpoint; computed fresh per invocation,
       // nothing survives the run) so train+score scan the parquet once
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .select(col("doc_id"), col("lang"), concat(col("text"),
           lit(" qx"), col("lang"), lit(" qx"), col("lang"),
           lit(" qx"), col("lang")).as("text"))
@@ -694,7 +693,7 @@ object SparkEntry {
       // documents is ONE parquet file — explicit repartition or the whole
       // tokenize+chunk+explode runs in a single task (CLAUDE.md trap)
       TextOps.chunkTokens(
-        t(s, dir, "documents").repartition(sizeSpreadParts(s, dir, "documents")),
+        docsSpreadSized(s, dir),
         "doc_id", "text", chunkSize = 64)
         .orderBy("doc_id", "chunk_idx")
     }),
@@ -718,7 +717,7 @@ object SparkEntry {
     // Window (single-task trap).
     "q_vocabulary" -> ((s, dir) => {
       TextOps.vocabulary(
-        t(s, dir, "documents").repartition(sizeSpreadParts(s, dir, "documents")),
+        docsSpreadSized(s, dir),
         "doc_id", "text", minCount = 5L)
         .orderBy("token_id")
     }),
@@ -742,8 +741,7 @@ object SparkEntry {
     // out of the hashed output to keep cross-engine transcendentals to the
     // ln/round pair already proven by q_tfidf.
     "q_lm_perplexity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val lm = TextOps.bigramLm(docs, "text", k = 0.1)
       try {
@@ -761,8 +759,7 @@ object SparkEntry {
     // oracle replays train (three n-gram count tables) AND score (five
     // joins + the backoff CASE cascade) end-to-end.
     "q_sb_trigram" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val lm = TextOps.stupidBackoffLm(docs, "text")
       try {
@@ -780,8 +777,7 @@ object SparkEntry {
     // range-partitioned sort + zipWithIndex (never a global Window). The
     // oracle replays LM train + score + ROW_NUMBER ranking end-to-end.
     "q_perplexity_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val lm = TextOps.bigramLm(docs, "text", k = 0.1)
       try {
@@ -809,8 +805,7 @@ object SparkEntry {
     // twin, the q_bpe_tokenize blocker; UnigramSpec is the correctness gate).
     // Learn → persistence round-trip → native Viterbi encode, like BPE.
     "q_unigram_tokenize" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
       val learned = graft.ml.Unigram.learn(docs, "text", vocabSize = 600,
         maxWords = 20000, minCount = 2L)
       val model = graft.ml.Unigram.parseUnigramFile(
@@ -830,8 +825,7 @@ object SparkEntry {
     }),
 
     "q_bpe_tokenize" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
       val learned = graft.ml.Bpe.learn(docs, "text", numMerges = 200,
         maxWords = 20000, minCount = 2L)
       val model = graft.ml.Bpe.parseBpeFile(
@@ -857,8 +851,7 @@ object SparkEntry {
     // partition-order FP accumulations) — ClassifierSpec is the gate; the
     // per-row `separated` flag makes a broken model flip visible rows.
     "q_quality_classifier" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
       val train = docs.where(col("doc_id") < 300)
         .select(col("text"), lit(1.0).as("label"))
         .unionByName(docs.where(col("doc_id") < 300)
@@ -882,8 +875,7 @@ object SparkEntry {
     // SQL twin — BpeSpec pins byte symbolization, learner parity and the
     // <unk>-free guarantee).
     "q_bpe_tokenize_bytes" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
       val learned = graft.ml.Bpe.learn(docs, "text", numMerges = 200,
         maxWords = 20000, minCount = 2L, byteLevel = true)
       val model = graft.ml.Bpe.parseBpeFile(
@@ -981,8 +973,7 @@ object SparkEntry {
     // rejoin by line CONTENT; the Spark side groups by the dual
     // (xxhash64, sha2-256) fingerprint, so a fingerprint bug hash-fails.
     "q_remove_boilerplate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .select(col("doc_id"), concat(
           col("text"), lit("\nuniq marker "), col("doc_id").cast("string"),
           when(pmod(col("doc_id"), lit(3)) === 0,
@@ -998,8 +989,7 @@ object SparkEntry {
     // every other copy is dropped, exercising BOTH within-doc and cross-doc
     // duplication plus the keeper's deterministic tie-break.
     "q_dedup_paragraphs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .select(col("doc_id"), concat(
           col("text"),
           lit("\nshared quote "), pmod(col("doc_id"), lit(50)).cast("string"),
@@ -1121,8 +1111,7 @@ object SparkEntry {
     "q_dsir_select" -> ((s, dir) => {
       // docs feed three passes (raw fit, target fit, scoring) — persisted
       // for the query's lifetime, released after the eager checkpoint
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val target = docs.where(col("source").isin("src0", "src1"))
       val model = Dsir.dsirModel(docs, target, "text",
@@ -1204,8 +1193,7 @@ object SparkEntry {
       // the tokenize+explode stage feeds BOTH the doc-frequency aggregate and
       // the occurrence-count join — persist it once (withPersistedStage rule)
       // so the corpus is tokenized a single time
-      val tokStage = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val tokStage = docsSpreadSized(s, dir)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
       Dedup.withPersistedStage(tokStage) { toks =>
         val df = toks.select("doc_id", "tok").distinct()
@@ -1351,8 +1339,7 @@ object SparkEntry {
     // is shingled+minhashed; old docs contribute a pruned (id, sig) scan.
     // DedupSpec proves prev ∪ incremental ≡ full recompute bit-for-bit.
     "q_minhash_lsh_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .select("doc_id", "text")
       val newBatch = docs.where(col("doc_id") < 20)
         .select((col("doc_id") + 1000000).as("doc_id"),
@@ -1362,9 +1349,10 @@ object SparkEntry {
       // column pruning — feeding it the computed signature DataFrame would
       // re-shingle+re-minhash the whole old corpus per reference. Signing
       // the corpus to parquet is part of the measured query (computed fresh
-      // from the inputs on every invocation, nothing persists across runs).
-      val sigDir = java.nio.file.Files.createTempDirectory("graft_incr_sigs")
-        .resolve("sigs").toString
+      // from the inputs on every invocation; the directory is deleted at JVM
+      // shutdown, since the returned DataFrame still reads it lazily).
+      val sigDir = org.apache.spark.sql.GraftBridge.createTempDir("graft_incr_sigs")
+        .toPath.resolve("sigs").toString
       Dedup.minhashSignatures(docs, "doc_id", "text",
         shingleN = 3, numHashes = 64)
         .write.mode("overwrite").parquet(sigDir)
@@ -1382,8 +1370,7 @@ object SparkEntry {
     // the MinHash signature is xxhash64-based (same blocker as
     // q_minhash_lsh); the cross-vs-full equivalence is proven in DedupSpec.
     "q_minhash_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val docs = docsSpreadSized(s, dir)
         .select("doc_id", "text")
       val bench = docs.where(col("doc_id") < 5)
         .select(col("doc_id").as("eval_id"), col("text").as("eval_text"))

@@ -482,12 +482,8 @@ object Dedup {
     // the callers' pair generators already emit distinct (id_a < id_b) pairs
     // — the former distinct() was one full extra exchange of the edge set
     // before the cache
-    // partition count inherited from the pair input (scale-adaptive: a
-    // corpus-scale pair list arrives wide, the tiny checkpointed pair sets
-    // of the bench queries arrive in 1-2 partitions) — a fixed
-    // shuffle.partitions fan-out made every sweep pay full-width task
-    // overhead on id-only data
-    val numParts = math.max(2, pairs.rdd.getNumPartitions)
+    // every sweep runs at the pair input's partition scale
+    val numParts = TextOps.inputScaleParts(pairs)
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .repartition(numParts, col("src")).cache()

@@ -60,19 +60,12 @@ object Dsir {
     def release(): Unit = { ratios.unpersist(blocking = false); () }
   }
 
-  /** Coalesce a ≤B-row derived table to the input's partition scale —
-    * groupBy materializes at shuffle.partitions, and a full-width task wave
-    * per scan of a bucket table is pure fixed cost (scale-adaptive: wide
-    * corpora keep wide caches). */
-  private def inputScaleParts(input: DataFrame): Int =
-    math.max(2, input.rdd.getNumPartitions)
-
   /** Hashed n-gram occurrence counts: (bucket, cnt), ≤ `buckets` rows. */
   def bucketCounts(df: DataFrame, textCol: String, buckets: Int): DataFrame =
     df.select(explode(ngrams(col(textCol))).as("ng"))
       .select(bucketOf(col("ng"), buckets).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-      .coalesce(inputScaleParts(df))
+      .coalesce(TextOps.inputScaleParts(df))
 
   /** Fit the target/raw multinomials and their per-bucket log ratio.
     * Two corpus scans (one per side); the two totals are single-row
@@ -87,11 +80,15 @@ object Dsir {
       .withColumnRenamed("cnt", "cr").persist(StorageLevel.MEMORY_AND_DISK)
     // ONE action for both totals (the two 1-row aggregates union and their
     // cached count stages materialize inside the same job) — the former
-    // two head() calls paid two job barriers for two scalars
-    val tots = tc.agg(coalesce(sum("ct"), lit(0L)).as("tot"))
-      .unionByName(rc.agg(coalesce(sum("cr"), lit(0L)).as("tot"))).collect()
-    val totT = tots(0).getLong(0)
-    val totR = tots(1).getLong(0)
+    // two head() calls paid two job barriers for two scalars. Each row
+    // carries its side, so the totals never depend on union row order.
+    def total(counts: DataFrame, cnt: String, side: String): DataFrame =
+      counts.agg(coalesce(sum(cnt), lit(0L)).as("tot"))
+        .select(lit(side).as("side"), col("tot"))
+    val tots = total(tc, "ct", "target").unionByName(total(rc, "cr", "raw"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val totT = tots("target")
+    val totR = tots("raw")
     val denomT = totT + alpha * buckets
     val denomR = totR + alpha * buckets
     val ratios = tc.join(rc, Seq("bucket"), "full_outer")

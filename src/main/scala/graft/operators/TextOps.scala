@@ -16,14 +16,14 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
 
-  /** Coalesce a (persisted) derived table to the INPUT's partition scale:
-    * groupBy materializes at spark.sql.shuffle.partitions, so a small
-    * cached model/stage table otherwise costs a full-width task wave on
-    * every one of its scans (measured: the fixed per-task cost of those
+  /** The INPUT's partition scale (at least 2), for sizing a derived
+    * table: groupBy materializes at spark.sql.shuffle.partitions, so a
+    * small cached model/stage table otherwise costs a full-width task wave
+    * on every one of its scans (measured: the fixed per-task cost of those
     * waves dominated the LM queries). coalesce is exchange-free and the
     * count inherits the corpus partitioning — corpus-scale models stay
     * wide (scale-adaptive, guide §2). */
-  private def inputScaleParts(input: org.apache.spark.sql.DataFrame): Int =
+  private[graft] def inputScaleParts(input: org.apache.spark.sql.DataFrame): Int =
     math.max(2, input.rdd.getNumPartitions)
 
   /** Whitespace tokenization; empty/blank text → empty array (not [""]). */

@@ -22,4 +22,10 @@ object GraftBridge {
     try Some(scala.concurrent.Await.result(obs.future,
       scala.concurrent.duration.Duration(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)))
     catch { case _: java.util.concurrent.TimeoutException => None }
+
+  /** A fresh directory under `java.io.tmpdir` that Spark deletes recursively
+    * at JVM shutdown (`Utils.createTempDir` is `private[spark]`). For outputs
+    * a returned DataFrame still reads lazily, so they cannot go sooner. */
+  def createTempDir(namePrefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
 }

@@ -58,6 +58,20 @@ class DsirSpec extends AnyFunSuite {
     val rc = counts(raw.select("text").as[String].collect().toSeq)
     val (totT, totR) = (tc.values.sum, rc.values.sum)
     assert(model.targetTotal == totT && model.rawTotal == totR)
+    // the totals follow the corpus, not the row position in the union of
+    // the two totals: corpora of different sizes, in both roles, against
+    // n-gram counts taken without bucketing (n unigrams + n-1 bigrams)
+    def ngramTotal(df: org.apache.spark.sql.DataFrame): Long =
+      df.select("text").as[String].collect()
+        .map(_.trim.split("\\s+").length).map(n => 2L * n - 1).sum
+    val small = target.where(col("doc_id") < 3)
+    val (nRaw, nSmall) = (ngramTotal(raw), ngramTotal(small))
+    assert(nSmall != nRaw)
+    val fwd = Dsir.dsirModel(raw, small, "text", buckets, alpha)
+    val rev = Dsir.dsirModel(small, raw, "text", buckets, alpha)
+    assert(fwd.targetTotal == nSmall && fwd.rawTotal == nRaw)
+    assert(rev.targetTotal == nRaw && rev.rawTotal == nSmall)
+    fwd.release(); rev.release()
     def ratio(b: Int): Double =
       math.log((tc.getOrElse(b, 0L) + alpha) / (totT + alpha * buckets)) -
         math.log((rc.getOrElse(b, 0L) + alpha) / (totR + alpha * buckets))
