@@ -49,6 +49,20 @@ object ImageQueries {
       Cached(features, bundles)
     })
 
+  private val queryId = "img_00000002"
+
+  /** The PQ queries' fixed query image: its vector, its bundle, and the other
+    * error-free rows encoded under the same model version — codes from the
+    * other version's quantizers are not comparable with this version's
+    * tables. */
+  private def imageQuery(c: Cached): (Array[Double], ModelBundle, DataFrame) = {
+    val feats = c.features.where(col("error").isNull)
+    val q = feats.where(col("image_id") === queryId)
+      .select("vector", "model_version").head()
+    (q.getSeq[Double](0).toArray, c.bundles(q.getInt(1)),
+      feats.where(col("model_version") === q.getInt(1) && col("image_id") =!= queryId))
+  }
+
   private def sqL2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 
@@ -135,30 +149,19 @@ object ImageQueries {
         .orderBy("query_id", "rank")
     }),
 
-    // PQ ADC k-NN (T2): driver-computed per-list LUTs of the residual-
-    // transformed query (ds/IVFPQ.java:408–450) ride in ONE broadcast inside a
-    // native adc_distance expression — the scan reads only (pq_code, list_id),
-    // never vectors, and the plan holds no LUT literals (reference-scale LUTs
-    // are demonstrated to plan in PlanSpec).
+    // PQ ADC k-NN (T2): IVFADC search with every list probed — per-list LUTs
+    // of the residual-transformed query (ds/IVFPQ.java:408–450) ride in ONE
+    // broadcast inside a native adc_distance expression; the scan reads only
+    // (pq_code, list_id), never vectors, and the plan holds no LUT literals
+    // (reference-scale LUTs are demonstrated to plan in PlanSpec).
     "q_image_adc_knn" -> ((s, dir) => {
-      val c = pipeline(s, dir)
-      val feats = c.features.where(col("error").isNull)
-      val queryRow = feats.where(col("image_id") === "img_00000002")
-        .select("vector", "model_version").head()
-      val qv = queryRow.getSeq[Double](0).toArray
-      val bundle = c.bundles(queryRow.getInt(1))
-      val luts: Map[Int, Array[Array[Double]]] =
-        bundle.coarseQuantizer.indices.map { li =>
-          val res = graft.kernels.Kernels.residual(qv, bundle.coarseQuantizer(li))
-          li -> graft.kernels.Kernels.adcLookupTable(bundle.transform(res), bundle.pq)
-        }.toMap
-      val adc = PqExpressions.adc_distance(col("pq_code"), col("list_id"),
-        s.sparkContext.broadcast(luts))
-      feats.where(col("image_id") =!= "img_00000002")
-        .withColumn("adc_dist", round(adc, 9))
-        .orderBy(col("adc_dist").asc, col("image_id").asc)
-        .limit(5)
-        .select(col("image_id").as("neighbor_id"), col("adc_dist"), col("list_id"))
+      val (qv, bundle, rows) = imageQuery(pipeline(s, dir))
+      Similarity.ivfPqSearchMany(rows, "image_id", Seq(0L -> qv),
+          bundle.coarseQuantizer, bundle.pq, k = 5,
+          nprobe = bundle.coarseQuantizer.length, transform = bundle.transform)
+        .select(col("neighbor_id"), round(col("adc_dist"), 9).as("adc_dist"),
+          col("list_id"))
+        .orderBy("adc_dist", "neighbor_id")
     }),
 
     // PQ SDC k-NN (T3, ds/PQ.java:334–374): the query is an already-indexed
@@ -172,7 +175,7 @@ object ImageQueries {
     "q_image_sdc_knn" -> ((s, dir) => {
       val c = pipeline(s, dir)
       val feats = c.features.where(col("error").isNull)
-      val queryRow = feats.where(col("image_id") === "img_00000002")
+      val queryRow = feats.where(col("image_id") === queryId)
         .select("pq_code", "model_version").head()
       val qCode = queryRow.getSeq[Int](0).toArray
       val bundle = c.bundles(queryRow.getInt(1))
@@ -181,7 +184,8 @@ object ImageQueries {
       val lut = Array.tabulate(bundle.pq.numSubVectors)(j => sdc(j)(qCode(j)))
       val dist = PqExpressions.adc_distance(col("pq_code"), lit(0),
         s.sparkContext.broadcast(Map(0 -> lut)))
-      feats.where(col("image_id") =!= "img_00000002")
+      feats.where(col("image_id") =!= queryId &&
+          col("model_version") === queryRow.getInt(1))
         .withColumn("sdc_dist", round(dist, 9))
         .orderBy(col("sdc_dist").asc, col("image_id").asc)
         .limit(5)
@@ -193,20 +197,12 @@ object ImageQueries {
     // is residual-quantized to EACH target's coarse list, so the distance is
     // adc_distance with the per-list LUT map selected by the target's list_id.
     "q_image_pair_dist" -> ((s, dir) => {
-      val c = pipeline(s, dir)
-      val feats = c.features.where(col("error").isNull)
-      val queryRow = feats.where(col("image_id") === "img_00000002")
-        .select("vector", "model_version").head()
-      val qv = queryRow.getSeq[Double](0).toArray
-      val bundle = c.bundles(queryRow.getInt(1))
-      val luts: Map[Int, Array[Array[Double]]] =
-        bundle.coarseQuantizer.indices.map { li =>
-          val res = graft.kernels.Kernels.residual(qv, bundle.coarseQuantizer(li))
-          li -> graft.kernels.Kernels.adcLookupTable(bundle.transform(res), bundle.pq)
-        }.toMap
+      val (qv, bundle, rows) = imageQuery(pipeline(s, dir))
+      val luts = bundle.coarseQuantizer.indices
+        .map(li => li -> bundle.ivfPq.lut(qv, li)).toMap
       val dist = PqExpressions.adc_distance(col("pq_code"), col("list_id"),
         s.sparkContext.broadcast(luts))
-      feats.where(col("image_id").isin(
+      rows.where(col("image_id").isin(
           "img_00000004", "img_00000007", "img_00000010", "img_00000012"))
         .withColumn("pair_dist", round(dist, 9))
         .select(col("image_id"), col("pair_dist"), col("list_id"))
@@ -388,9 +384,7 @@ object ImageQueries {
       images.select("image_id", "bytes").as[(String, Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (id, bytes) =>
-            graft.kernels.Imaging.decode(bytes).map { raster =>
-              val descs = cfg.extractor.extract(
-                graft.kernels.Imaging.maxPixelsScaling(raster, cfg.maxPixels))
+            FeaturePipeline.descriptorsOf(bytes, cfg).map { descs =>
               val hist = graft.kernels.Kernels.bow(descs, bc.value)
               val top = hist.indices.maxBy(i => (hist(i), -i))
               (id, descs.length, top, hist(top))
@@ -404,31 +398,16 @@ object ImageQueries {
     // IVFPQ k-NN (T4, ds/IVFPQ.java:408–450): probe only the w nearest coarse
     // lists — the `list_id` predicate prunes partitions when the code table is
     // partitioned by list_id (SnapshotSink does this; proven in
-    // IvfSnapshotSpec), then ADC within the surviving lists.
+    // IvfSnapshotSpec), then ADC within the surviving lists, LUTs shipped for
+    // the probed lists only.
     "q_image_ivf_knn" -> ((s, dir) => {
-      val c = pipeline(s, dir)
-      val feats = c.features.where(col("error").isNull)
-      val queryRow = feats.where(col("image_id") === "img_00000002")
-        .select("vector", "model_version").head()
-      val qv = queryRow.getSeq[Double](0).toArray
-      val bundle = c.bundles(queryRow.getInt(1))
-      val w = 2 // probe width (reference default: 10% of k_c, IVFPQ.java:188)
-      val probed = graft.kernels.Kernels.kNearestCentroids(qv, bundle.coarseQuantizer, w)
-      // LUTs only for the probed lists (what a reference-scale engine ships),
-      // one broadcast, selected by list_id inside the native expression
-      val luts: Map[Int, Array[Array[Double]]] = probed.map { li =>
-        val res = graft.kernels.Kernels.residual(qv, bundle.coarseQuantizer(li))
-        li -> graft.kernels.Kernels.adcLookupTable(bundle.transform(res), bundle.pq)
-      }.toMap
-      val adc = PqExpressions.adc_distance(col("pq_code"), col("list_id"),
-        s.sparkContext.broadcast(luts))
-      feats
-        .where(col("list_id").isin(probed.map(Integer.valueOf): _*) &&
-          col("image_id") =!= "img_00000002")
-        .withColumn("adc_dist", round(adc, 9))
-        .orderBy(col("adc_dist").asc, col("image_id").asc)
-        .limit(5)
-        .select(col("image_id").as("neighbor_id"), col("adc_dist"), col("list_id"))
+      val (qv, bundle, rows) = imageQuery(pipeline(s, dir))
+      // probe width 2 (reference default: 10% of k_c, IVFPQ.java:188)
+      Similarity.ivfPqSearchMany(rows, "image_id", Seq(0L -> qv),
+          bundle.coarseQuantizer, bundle.pq, k = 5, nprobe = 2, transform = bundle.transform)
+        .select(col("neighbor_id"), round(col("adc_dist"), 9).as("adc_dist"),
+          col("list_id"))
+        .orderBy("adc_dist", "neighbor_id")
     })
   )
 }

@@ -112,21 +112,15 @@ object PqExpressions {
     GraftBridge.column(AdcDistance(
       GraftBridge.expression(code), GraftBridge.expression(listId), luts))
 
-  /** Scalar kernel for [[IvfPqEncode]] — one fused pass: coarse-assign, form
-    * the residual (centroid − v, IVFPQ.java:642–648), PQ-encode it
-    * (PQ.java:232–268). Called from interpreted eval AND generated code. */
-  def ivfPqEncodeEval(centroids: Array[Array[Double]],
-                      pq: graft.kernels.Kernels.PqModel,
-                      vec: ArrayData, isFloat: Boolean): InternalRow = {
+  /** Scalar kernel for [[IvfPqEncode]]: array data → [[graft.model.IvfPq]]
+    * encode → struct. Called from interpreted eval AND generated code. */
+  def ivfPqEncodeEval(codec: graft.model.IvfPq, vec: ArrayData,
+                      isFloat: Boolean): InternalRow = {
     val d = vec.numElements()
     val v = new Array[Double](d)
     if (isFloat) { var i = 0; while (i < d) { v(i) = vec.getFloat(i); i += 1 } }
     else { var i = 0; while (i < d) { v(i) = vec.getDouble(i); i += 1 } }
-    if (centroids(0).length != d) throw new IllegalArgumentException(
-      s"ivf_pq_encode: vector has $d dims, coarse centroids have ${centroids(0).length}")
-    val li = graft.kernels.Kernels.nearestCentroid(v, centroids)
-    val code = graft.kernels.Kernels.pqEncode(
-      graft.kernels.Kernels.residual(v, centroids(li)), pq)
+    val (li, code) = codec.encode(v)
     new GenericInternalRow(Array[Any](li, new GenericArrayData(code)))
   }
 
@@ -134,12 +128,11 @@ object PqExpressions {
    * IVFADC index-build expression (ds/IVFPQ.java:100–117): vector →
    * struct(list_id, pq_code) in ONE compiled pass — the coarse scan is not
    * repeated for the residual the way separate list-assignment and encode
-   * projections could be. Coarse centroids and the PQ model ride in
-   * broadcasts (O(1) plan nodes at the reference k_c=8192 / m=64 / k_s=256).
+   * projections could be. The codec (coarse centroids + PQ model + transform)
+   * rides in one broadcast (O(1) plan nodes at the reference k_c=8192 /
+   * m=64 / k_s=256).
    */
-  case class IvfPqEncode(child: Expression,
-                         centroids: Broadcast[Array[Array[Double]]],
-                         pq: Broadcast[graft.kernels.Kernels.PqModel])
+  case class IvfPqEncode(child: Expression, codec: Broadcast[graft.model.IvfPq])
       extends UnaryExpression {
     override def dataType: DataType = StructType(Seq(
       StructField("list_id", IntegerType, nullable = false),
@@ -147,33 +140,27 @@ object PqExpressions {
         nullable = false)))
     override def prettyName: String = "ivf_pq_encode"
 
-    @transient private lazy val table: Array[Array[Double]] = centroids.value
-    @transient private lazy val model: graft.kernels.Kernels.PqModel = pq.value
+    @transient private lazy val model: graft.model.IvfPq = codec.value
     @transient private lazy val isFloat: Boolean =
       child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
     override def nullSafeEval(v: Any): Any =
-      ivfPqEncodeEval(table, model, v.asInstanceOf[ArrayData], isFloat)
+      ivfPqEncodeEval(model, v.asInstanceOf[ArrayData], isFloat)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cRef = ctx.addReferenceObj("coarseBc", centroids,
-        classOf[Broadcast[Array[Array[Double]]]].getName)
-      val pRef = ctx.addReferenceObj("pqBc", pq,
-        classOf[Broadcast[graft.kernels.Kernels.PqModel]].getName)
-      val tbl = ctx.addMutableState("double[][]", "coarseTable",
-        v => s"$v = (double[][]) $cRef.value();")
-      val mdl = ctx.addMutableState("graft.kernels.Kernels.PqModel", "pqModel",
-        v => s"$v = (graft.kernels.Kernels.PqModel) $pRef.value();")
+      val cRef = ctx.addReferenceObj("ivfPqBc", codec,
+        classOf[Broadcast[graft.model.IvfPq]].getName)
+      val mdl = ctx.addMutableState("graft.model.IvfPq", "ivfPq",
+        v => s"$v = (graft.model.IvfPq) $cRef.value();")
       val fl = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
       nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = graft.functions.PqExpressions.ivfPqEncodeEval($tbl, $mdl, $v, $fl);")
+        s"${ev.value} = graft.functions.PqExpressions.ivfPqEncodeEval($mdl, $v, $fl);")
     }
 
     override protected def withNewChildInternal(c: Expression): IvfPqEncode =
       copy(child = c)
   }
 
-  def ivf_pq_encode(vec: Column, centroids: Broadcast[Array[Array[Double]]],
-                    pq: Broadcast[graft.kernels.Kernels.PqModel]): Column =
-    GraftBridge.column(IvfPqEncode(GraftBridge.expression(vec), centroids, pq))
+  def ivf_pq_encode(vec: Column, codec: Broadcast[graft.model.IvfPq]): Column =
+    GraftBridge.column(IvfPqEncode(GraftBridge.expression(vec), codec))
 }

@@ -29,9 +29,10 @@ object Imaging {
 
   /** Decode image bytes → packed-RGB raster. Returns None for null/corrupt
     * bytes (the reference's null-image skip, exm/FeatureExtraction.java:109–116).
-    * JDK 17 ImageIO handles greyscale JPEGs natively — the reference's vendored
-    * ImageIOGreyScale fallback (utl/ImageIOGreyScale.java) existed for an older
-    * JDK bug; we keep the try-twice shape for robustness. */
+    * JDK 17 ImageIO handles greyscale JPEGs natively, so the reference's
+    * retry through its vendored ImageIOGreyScale decoder
+    * (utl/ImageIOGreyScale.java, written for an older JDK bug) has no
+    * counterpart: one ImageIO attempt, and any failure is None. */
   // Per-thread reusable ImageReaders, dispatched on the container's magic
   // bytes: ImageIO.read pays a service-registry scan + reader allocation +
   // disposal PER CALL — pure fixed cost that dominates decode for small
@@ -59,13 +60,7 @@ object Imaging {
 
   private def readViaImageIO(bytes: Array[Byte]): Option[BufferedImage] =
     try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
-    catch {
-      case _: IllegalArgumentException =>
-        // reference retry path (grayscale JPEG, wrong ICC) — re-attempt once
-        try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
-        catch { case _: Throwable => None }
-      case _: Throwable => None
-    }
+    catch { case _: Throwable => None }
 
   def decode(bytes: Array[Byte]): Option[Raster] = {
     if (bytes == null || bytes.length == 0) return None

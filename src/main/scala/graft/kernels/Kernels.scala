@@ -104,16 +104,6 @@ object Kernels {
     best
   }
 
-  def nearestCentroidWithDistance(v: Array[Double], centroids: Array[Array[Double]]): (Int, Double) = {
-    var best = -1; var bestD = Double.MaxValue; var i = 0
-    while (i < centroids.length) {
-      val d = squaredL2Bounded(v, centroids(i), bestD)
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    (best, bestD)
-  }
-
   /** Indices of the k nearest centroids, ascending by distance, ties by lower index
     * (AbstractFeatureAggregator.java:193–220 / IVFPQ.java:575–601 semantics). */
   def kNearestCentroids(v: Array[Double], centroids: Array[Array[Double]], k: Int): Array[Int] = {

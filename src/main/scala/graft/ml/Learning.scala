@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.BoundedTopK
@@ -371,9 +371,5 @@ object Learning {
           size(col("vec")) / m))).as(Seq("block", "vec")))
     val centroids = lloydKMeans(sub, kS, iterations, emptySentinel = Some(1000.0))
     PqModel(Array.tabulate(m)(centroids(_)))
-  }
-
-  implicit private class RichDf(df: DataFrame) {
-    def sparkSessionCompat: SparkSession = df.sparkSession
   }
 }

@@ -42,6 +42,37 @@ final case class ModelBundle(
     transform: VectorTransform) extends Serializable {
   def vladLength: Int = codebooks.map(cb => cb.length * cb(0).length).sum
   def projectedLength: Int = pca.projection.length
+  @transient lazy val ivfPq: IvfPq = IvfPq(coarseQuantizer, pq, transform)
+}
+
+/**
+ * The IVFADC codec (Jégou et al. TPAMI 2011; ds/IVFPQ.java:100–117 encode,
+ * :408–450 search): a vector's list is its nearest coarse centroid and its
+ * code is the PQ code of the transformed residual; a query becomes one ADC
+ * lookup table per probed list, built from its own transformed residual to
+ * that list's centroid. Every encoder and searcher goes through here, so the
+ * stored codes and the query tables can never disagree on the recipe.
+ */
+final case class IvfPq(coarse: Array[Array[Double]], pq: PqModel,
+                       transform: VectorTransform = NoTransform) extends Serializable {
+
+  /** (list_id, pq_code): nearest centroid → residual (centroid − v,
+    * IVFPQ.java:642–648) → transform → PQ encode (PQ.java:232–268). */
+  def encode(v: Array[Double]): (Int, Array[Int]) = {
+    if (coarse(0).length != v.length) throw new IllegalArgumentException(
+      s"IvfPq.encode: vector has ${v.length} dims, coarse centroids have ${coarse(0).length}")
+    val li = Kernels.nearestCentroid(v, coarse)
+    (li, Kernels.pqEncode(transform(Kernels.residual(v, coarse(li))), pq))
+  }
+
+  /** The `nprobe` lists nearest to `q`, ascending by distance, lower index on
+    * ties (IVFPQ.java:575–601). */
+  def probe(q: Array[Double], nprobe: Int): Array[Int] =
+    Kernels.kNearestCentroids(q, coarse, nprobe)
+
+  /** ADC table (m × k_s) of `q` against the codes stored in list `listId`. */
+  def lut(q: Array[Double], listId: Int): Array[Array[Double]] =
+    Kernels.adcLookupTable(transform(Kernels.residual(q, coarse(listId))), pq)
 }
 
 object ModelIO {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.BoundedTopK
+import graft.model.{IvfPq, NoTransform, VectorTransform}
 
 /**
  * Similarity search over an embedding column (`array<float>`):
@@ -21,15 +22,6 @@ import graft.functions.BoundedTopK
  * codegen'd, no UDFs.
  */
 object Similarity {
-
-  /** Σ aᵢ·bᵢ in double precision. */
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def l2NormCol(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
 
   /** Cosine similarity; 0.0 when either side has zero norm. Native Catalyst
     * expression — the HOF formulation evaluated an interpreted lambda per
@@ -105,7 +97,7 @@ object Similarity {
     * per-centroid `struct(aggregate(zip_with(...)))` formulation would pin
     * into the plan (un-compilable at the reference k_c=8192, d=1024). */
   def withListId(df: DataFrame, vecCol: String,
-                 centroids: Array[Array[Double]], listCol: String = "list_id"): Column =
+                 centroids: Array[Array[Double]]): Column =
     graft.functions.CentroidExpressions.nearest_centroid(col(vecCol),
       df.sparkSession.sparkContext.broadcast(centroids))
 
@@ -150,59 +142,34 @@ object Similarity {
 
   /**
    * IVFADC index build over an embedding corpus (ds/IVFPQ.java:100–117): each
-   * row → (id, list_id, pq_code) in one narrow compiled pass — coarse
-   * assignment, residual, and PQ encode fused in a single broadcast-state
-   * expression. The output is the reference's inverted file as a table: write
-   * it through SnapshotSink partitioned by `list_id` and probed searches
-   * partition-prune (IvfSnapshotSpec shape). 8 bits/sub-code × m vs 4·d bytes
-   * raw — the representation that fits 95.2M vectors in 16 GB
+   * row → (id, list_id, pq_code) in one narrow compiled pass — the
+   * [[graft.model.IvfPq]] encode (coarse assignment, residual, PQ encode)
+   * inside a single broadcast-state expression. The output is the
+   * reference's inverted file as a table: write it through SnapshotSink
+   * partitioned by `list_id` and probed searches partition-prune
+   * (IvfSnapshotSpec shape). 8 bits/sub-code × m vs 4·d bytes raw — the
+   * representation that fits 95.2M vectors in 16 GB
    * (exm/YFCC100MExample.java:45–52).
    */
   def ivfPqEncode(df: DataFrame, idCol: String, vecCol: String,
                   centroids: Array[Array[Double]],
                   pq: graft.kernels.Kernels.PqModel): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val enc = graft.functions.PqExpressions.ivf_pq_encode(
-      col(vecCol), sc.broadcast(centroids), sc.broadcast(pq))
+    val enc = graft.functions.PqExpressions.ivf_pq_encode(col(vecCol),
+      df.sparkSession.sparkContext.broadcast(IvfPq(centroids, pq)))
     df.select(col(idCol), enc.as("__enc"))
       .select(col(idCol), col("__enc.list_id").as("list_id"),
         col("__enc.pq_code").as("pq_code"))
   }
 
-  /**
-   * IVFADC k-NN for ONE query vector (ds/IVFPQ.java:408–450, query-at-a-time
-   * like the reference): probe the `nprobe` nearest coarse lists, ship ADC
-   * LUTs for exactly those lists in one broadcast, scan only probed rows
-   * (partition-pruned when `encoded` is list_id-partitioned on disk), rank by
-   * ADC distance ascending with id tie-break. Returns the k best
-   * (neighbor_id, list_id, adc_dist) via TakeOrderedAndProject.
-   */
-  def ivfPqSearch(encoded: DataFrame, idCol: String, queryVec: Array[Double],
-                  centroids: Array[Array[Double]],
-                  pq: graft.kernels.Kernels.PqModel,
-                  k: Int, nprobe: Int): DataFrame = {
-    import graft.kernels.Kernels
-    val probed = Kernels.kNearestCentroids(queryVec, centroids, nprobe)
-    val luts = probed.map(li => li ->
-      Kernels.adcLookupTable(Kernels.residual(queryVec, centroids(li)), pq)).toMap
-    val bcLuts = encoded.sparkSession.sparkContext.broadcast(luts)
-    encoded
-      .where(col("list_id").isin(probed.map(Integer.valueOf).toSeq: _*))
-      .select(col(idCol).as("neighbor_id"), col("list_id"),
-        graft.functions.PqExpressions.adc_distance(col("pq_code"), col("list_id"),
-          bcLuts).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-      .limit(k)
-  }
-
   /** Multi-query IVFADC as ONE join-shaped plan (ds/IVFPQ.java:408–450 at
     * |Q| scale — the set-based twin of what [[ivfTopK]] does for raw cosine):
-    * probe selection and per-(query, list) ADC LUTs are computed driver-side
-    * from the BOUNDED query set and each gets a dense slot in a single
-    * broadcast (|Q|·nprobe tables of m×k_s doubles — the same memory the
-    * per-query loop shipped, in one shipment); a tiny (query_id, probe,
-    * lut_slot) table broadcast-joins the encoded corpus on `list_id` under a
-    * static IN filter (partition-pruned when the corpus is list_id-
+    * probe selection and per-(query, list) ADC LUTs come from the
+    * [[graft.model.IvfPq]] codec driver-side over the BOUNDED query set, and
+    * each LUT gets a dense slot in a single broadcast (|Q|·nprobe tables of
+    * m×k_s doubles); `transform` is the pre-PQ transform the corpus was
+    * encoded under (a [[graft.model.ModelBundle]]'s, or none for
+    * [[ivfPqEncode]] output). A tiny (query_id, probe, lut_slot) table
+    * broadcast-joins the encoded corpus on `list_id` under a static IN filter (partition-pruned when the corpus is list_id-
     * partitioned on disk), `adc_distance` indexes the slot, and a per-query
     * [[BoundedTopK]] (adc asc, id tie-break) replaces N sort+limits. The
     * corpus is scanned ONCE regardless of |Q| — a 10³-row query table is one
@@ -214,17 +181,18 @@ object Similarity {
                       queries: Seq[(Long, Array[Double])],
                       centroids: Array[Array[Double]],
                       pq: graft.kernels.Kernels.PqModel,
-                      k: Int, nprobe: Int): DataFrame = {
+                      k: Int, nprobe: Int,
+                      transform: VectorTransform = NoTransform): DataFrame = {
     require(queries.nonEmpty, "ivfPqSearchMany: empty query set")
-    import graft.kernels.Kernels
+    val codec = IvfPq(centroids, pq, transform)
     val spark = encoded.sparkSession
     val probeRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
     val luts = Map.newBuilder[Int, Array[Array[Double]]]
     var slot = 0
     queries.foreach { case (qid, qv) =>
-      Kernels.kNearestCentroids(qv, centroids, nprobe).foreach { li =>
+      codec.probe(qv, nprobe).foreach { li =>
         probeRows += ((qid, li, slot))
-        luts += slot -> Kernels.adcLookupTable(Kernels.residual(qv, centroids(li)), pq)
+        luts += slot -> codec.lut(qv, li)
         slot += 1
       }
     }

@@ -13,8 +13,9 @@ import graft.model.ModelBundle
  * `Dataset.mapPartitions` — descriptors and rasters never leave the row,
  * image bytes are never shuffled, and the broadcast model bundles are
  * resolved once per partition (mirroring the reference's per-JVM singletons,
- * vec/ImageVectorization.java:55–65). Corrupt images produce an error-channel
- * row instead of failing the job (exm/FeatureExtraction.java:109–116).
+ * vec/ImageVectorization.java:55–65). Corrupt images and rows whose model
+ * version has no bundle produce an error-channel row instead of failing the
+ * job (exm/FeatureExtraction.java:109–116).
  *
  * Typed Dataset (not RDD[Row]): the encoder keeps the rows in Tungsten
  * format and the stage inside the Dataset execution path; the per-image
@@ -66,26 +67,31 @@ object FeaturePipeline {
       .mapPartitions { it =>
         val bundleMap = bc.value
         it.map { in =>
-          val bundle = bundleMap(in.model_version)
-          Imaging.decode(in.bytes) match {
-            case None =>
-              FeatureRow(in.image_id, in.entity_id, in.ts, in.caption, in.phash,
-                in.model_version, 0, None, None, None, Some("decode_failed"))
-            case Some(raster) =>
-              val scaled = Imaging.maxPixelsScaling(raster, cfg.maxPixels)
-              val descriptors = cfg.extractor.extract(scaled)
-              val vec = encodeVector(descriptors, bundle)
-              val listId = Kernels.nearestCentroid(vec, bundle.coarseQuantizer)
-              val res = Kernels.residual(vec, bundle.coarseQuantizer(listId))
-              val code = Kernels.pqEncode(bundle.transform(res), bundle.pq)
-              FeatureRow(in.image_id, in.entity_id, in.ts, in.caption, in.phash,
-                in.model_version, descriptors.length, Some(vec), Some(code),
-                Some(listId), None)
+          def failed(reason: String) =
+            FeatureRow(in.image_id, in.entity_id, in.ts, in.caption, in.phash,
+              in.model_version, 0, None, None, None, Some(reason))
+          bundleMap.get(in.model_version) match {
+            case None => failed("model_missing")
+            case Some(bundle) => descriptorsOf(in.bytes, cfg) match {
+              case None => failed("decode_failed")
+              case Some(descriptors) =>
+                val vec = encodeVector(descriptors, bundle)
+                val (listId, code) = bundle.ivfPq.encode(vec)
+                FeatureRow(in.image_id, in.entity_id, in.ts, in.caption, in.phash,
+                  in.model_version, descriptors.length, Some(vec), Some(code),
+                  Some(listId), None)
+            }
           }
         }
       }
       .toDF()
   }
+
+  /** decode → maxPixelsScaling → extract: the local descriptors of one
+    * image, or None when the bytes do not decode. */
+  def descriptorsOf(bytes: Array[Byte], cfg: PipelineConfig): Option[Array[Array[Double]]] =
+    Imaging.decode(bytes).map(raster =>
+      cfg.extractor.extract(Imaging.maxPixelsScaling(raster, cfg.maxPixels)))
 
   /** descriptors → multiVLAD → (PCA iff it reduces) — the reference's
     * transformToVector order (vec/ImageVectorization.java:169–208). */
@@ -103,13 +109,7 @@ object FeaturePipeline {
     val spark = images.sparkSession
     import spark.implicits._
     images.select("bytes").as[Array[Byte]]
-      .mapPartitions { it =>
-        it.flatMap { bytes =>
-          Imaging.decode(bytes).toSeq.flatMap { raster =>
-            cfg.extractor.extract(Imaging.maxPixelsScaling(raster, cfg.maxPixels))
-          }
-        }
-      }
+      .mapPartitions(_.flatMap(bytes => descriptorsOf(bytes, cfg).iterator.flatten))
       .toDF("vec")
   }
 
@@ -120,15 +120,8 @@ object FeaturePipeline {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(codebooks)
     images.select("bytes").as[Array[Byte]]
-      .mapPartitions { it =>
-        it.flatMap { bytes =>
-          Imaging.decode(bytes).map { raster =>
-            val descriptors = cfg.extractor
-              .extract(Imaging.maxPixelsScaling(raster, cfg.maxPixels))
-            Kernels.multiVlad(descriptors, bc.value)
-          }
-        }
-      }
+      .mapPartitions(_.flatMap(bytes =>
+        descriptorsOf(bytes, cfg).map(Kernels.multiVlad(_, bc.value))))
       .toDF("vec")
   }
 }

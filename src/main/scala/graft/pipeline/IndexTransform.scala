@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
-import graft.kernels.Kernels
 import graft.model.ModelBundle
 import graft.sink.SnapshotSink
 import graft.sink.SnapshotSink.Snapshot
@@ -57,12 +56,7 @@ object IndexTransform {
       .select(col("image_id"), col("model_version"), col(vecCol))
       .as[(String, Int, Option[Array[Double]])]
       .map { case (id, version, vec) =>
-        val enc = vec.map { v =>
-          val bundle = bc.value(version)
-          val listId = Kernels.nearestCentroid(v, bundle.coarseQuantizer)
-          val res = Kernels.residual(v, bundle.coarseQuantizer(listId))
-          (listId, Kernels.pqEncode(bundle.transform(res), bundle.pq))
-        }
+        val enc = vec.map(bc.value(version).ivfPq.encode)
         (id, enc.map(_._1), enc.map(_._2))
       }
       .toDF("image_id", "__new_list_id", "__new_pq_code")

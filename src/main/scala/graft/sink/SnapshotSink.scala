@@ -3,6 +3,8 @@ package graft.sink
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -491,12 +493,5 @@ object SnapshotSink {
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
-  }
-
-  implicit private class IterAsScala[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      override def hasNext: Boolean = it.hasNext
-      override def next(): T = it.next()
-    }
   }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.Synth
 import graft.kernels.Kernels
+import graft.operators.Similarity
 import graft.pipeline.FeaturePipeline
 import graft.sink.SnapshotSink
 import graft.temporal.Temporal
@@ -14,7 +15,8 @@ import graft.temporal.Temporal
 /** The reference's inverted-file pruning (ds/IVFPQ.java:408–450) as Spark
   * partition pruning: code table partitioned by list_id → probing w lists
   * plans a scan of only those partitions, and the ADC result over the probed
-  * lists matches the scalar oracle. */
+  * lists — by hand and through `Similarity.ivfPqSearchMany` — matches the
+  * scalar oracle. */
 class IvfSnapshotSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -70,6 +72,22 @@ class IvfSnapshotSpec extends AnyFunSuite {
         assert(dist >= 0.0 && !dist.isNaN)
       }
     }
+    // the library search over the same-version rows: the featurize-built
+    // index is searched with the bundle's transform, and its ranking is the
+    // scalar oracle's, ids and distances exactly
+    val k = 5
+    val expect = rows.filter(_.getInt(3) == q.getInt(1))
+      .map(r => (r.getString(0),
+        Kernels.adcDistance(r.getSeq[Int](1).toArray, luts(r.getInt(2)))))
+      .sortBy { case (id, d) => (d, id) }.take(k).toSeq
+    val got = Similarity.ivfPqSearchMany(
+        codes.where(col("model_version") === q.getInt(1) &&
+          col("image_id") =!= "img_00000002"),
+        "image_id", Seq(0L -> qv), bundle.coarseQuantizer, bundle.pq, k, w,
+        bundle.transform)
+      .collect().map(r => (r.getString(1), r.getDouble(3)))
+      .sortBy { case (id, d) => (d, id) }.toSeq
+    assert(expect.nonEmpty && got == expect)
     // exact parity for one row computed end-to-end by hand
     val sample = rows.find(_.getInt(3) == q.getInt(1)).get
     val expected = Kernels.adcDistance(sample.getSeq[Int](1).toArray, luts(sample.getInt(2)))
@@ -77,5 +95,26 @@ class IvfSnapshotSpec extends AnyFunSuite {
       Kernels.bytesToCode(Kernels.codeToBytes(sample.getSeq[Int](1).toArray)),
       luts(sample.getInt(2)))
     assert(expected == viaKernel) // byte round-trip invisible (PQ.java:552–558)
+  }
+
+  test("q_image_ivf_knn, q_image_adc_knn and q_image_sdc_knn return only " +
+    "neighbours encoded under the query's model version") {
+    // the image queries read no files: the scale name only sizes the
+    // synthetic image table. At sf0.01 (400 rows) v2 rows reach the v1
+    // query's top 5 when every row is scored with the query's tables; at
+    // sf0.001 (120 rows) none did, so the check would not bite there.
+    val dir = "sf0.01"
+    val features = ImageQueries.pipeline(spark, dir).features
+    val byId = features.select(col("image_id").as("neighbor_id"), col("model_version"))
+    val qVersion = features.where(col("image_id") === "img_00000002")
+      .select("model_version").head().getInt(0)
+    assert(byId.where(col("model_version") =!= qVersion).count() > 0,
+      "the table must hold rows of another version for this check to bite")
+    Seq("q_image_ivf_knn", "q_image_adc_knn", "q_image_sdc_knn").foreach { q =>
+      val versions = ImageQueries.queries(q)(spark, dir).join(byId, Seq("neighbor_id"))
+        .select("model_version").collect().map(_.getInt(0))
+      assert(versions.nonEmpty && versions.forall(_ == qVersion),
+        s"$q neighbour versions ${versions.mkString(",")}, query v$qVersion")
+    }
   }
 }

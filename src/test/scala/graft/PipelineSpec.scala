@@ -11,8 +11,9 @@ import graft.temporal.Temporal
 /** End-to-end pipeline parity vs the scalar oracle (SURVEY.md §5.3): every
   * row of decode→scale→extract→multiVLAD→PCA→coarse→residual→transform→PQ is
   * recomputed with straight-line kernel calls on the driver and compared
-  * allclose(1e-9) / exactly. Also: zero temporal leakage, error channel,
-  * zero-descriptor quirk, determinism. */
+  * allclose(1e-9) / exactly. Also: zero temporal leakage, error channel
+  * (undecodable bytes, unbound model version), zero-descriptor quirk,
+  * determinism. */
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -73,6 +74,21 @@ class PipelineSpec extends AnyFunSuite {
       .select("image_id", "error").collect()
     assert(err.map(_.getString(0)).contains("img_00000001"))
     assert(err.forall(_.getString(1) == "decode_failed"))
+  }
+
+  test("a model version with no bundle becomes a model_missing error row") {
+    val partial = FeaturePipeline.featurize(bound, minted._2 - 2, Synth.defaultConfig)
+      .collect().map(r => r.getString(0) -> r).toMap
+    val full = features.collect().map(r => r.getString(0) -> r).toMap
+    assert(partial.keySet == full.keySet)
+    val (v2, v1) = partial.values.partition(_.getAs[Int]("model_version") == 2)
+    assert(v2.nonEmpty && v1.nonEmpty)
+    v2.foreach { r =>
+      assert(r.getAs[String]("error") == "model_missing", r.getString(0))
+      Seq("vector", "pq_code", "list_id").foreach(c =>
+        assert(r.isNullAt(r.fieldIndex(c)), s"${r.getString(0)} $c"))
+    }
+    v1.foreach(r => assert(r.toSeq == full(r.getString(0)).toSeq, r.getString(0)))
   }
 
   test("zero-descriptor image: VLAD zero-vector → L2 quirk (all-ones) flows through") {

@@ -284,48 +284,33 @@ class SimilaritySpec extends AnyFunSuite {
     "set equal the scalar IVFADC pipeline (ds/IVFPQ.java:408–450)") {
     val (centroids, pq) = pqSetup
     val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
-    val qv = vecs(2)._2.map(_.toDouble)
+      .localCheckpoint(true)
     val k = 10; val nprobe = 3
-    val got = Similarity.ivfPqSearch(enc, "vec_id", qv, centroids, pq, k, nprobe)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    // scalar oracle: encode every vector, keep probed lists, rank by (adc, id)
-    val probed = Kernels.kNearestCentroids(qv, centroids, nprobe).toSet
-    val luts = probed.map(li => li ->
-      Kernels.adcLookupTable(Kernels.residual(qv, centroids(li)), pq)).toMap
-    val expect = vecs.map { case (id, vf) =>
-      val v = vf.map(_.toDouble)
-      val li = Kernels.nearestCentroid(v, centroids)
-      (id, li, if (probed(li))
-        Some(Kernels.adcDistance(Kernels.pqEncode(Kernels.residual(v, centroids(li)), pq),
-          luts(li))) else None)
-    }.collect { case (id, li, Some(d)) => (id, li, d) }
-      .sortBy { case (id, _, d) => (d, id) }.take(k)
-    assert(got.length == expect.length)
-    got.zip(expect).foreach { case ((gid, gli, gd), (eid, eli, ed)) =>
-      assert(gid == eid && gli == eli, s"rank mismatch: got $gid expect $eid")
-      assert(gd == ed, s"adc $gd vs $ed")
+    // each query searched on its own: a one-row probe table
+    (0 until 5).map(qi => vecs(qi * 7)._2.map(_.toDouble)).foreach { qv =>
+      val got = Similarity.ivfPqSearchMany(enc, "vec_id", Seq((0L, qv)), centroids,
+        pq, k, nprobe)
+        .collect().map(r => (r.getLong(1), r.getInt(2), r.getDouble(3)))
+        .sortBy(t => (t._3, t._1)).toSeq
+      // scalar oracle: encode every vector, keep probed lists, rank by (adc, id)
+      val probed = Kernels.kNearestCentroids(qv, centroids, nprobe).toSet
+      val luts = probed.map(li => li ->
+        Kernels.adcLookupTable(Kernels.residual(qv, centroids(li)), pq)).toMap
+      val expect = vecs.map { case (id, vf) =>
+        val v = vf.map(_.toDouble)
+        val li = Kernels.nearestCentroid(v, centroids)
+        (id, li, if (probed(li))
+          Some(Kernels.adcDistance(Kernels.pqEncode(Kernels.residual(v, centroids(li)), pq),
+            luts(li))) else None)
+      }.collect { case (id, li, Some(d)) => (id, li, d) }
+        .sortBy { case (id, _, d) => (d, id) }.take(k)
+      assert(got.length == expect.length)
+      got.zip(expect).foreach { case ((gid, gli, gd), (eid, eli, ed)) =>
+        assert(gid == eid && gli == eli, s"rank mismatch: got $gid expect $eid")
+        assert(gd == ed, s"adc $gd vs $ed")
+      }
+      got.foreach { case (_, li, _) => assert(probed(li), "un-probed list in result") }
     }
-    got.foreach { case (_, li, _) => assert(probed(li), "un-probed list in result") }
-  }
-
-  test("IVFADC snapshot partitioned by list_id: probed search partition-" +
-    "prunes at planning time and matches the in-memory result") {
-    val (centroids, pq) = pqSetup
-    val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
-    val table = java.nio.file.Files.createTempDirectory("graft_eivf")
-      .resolve("codes").toString
-    graft.sink.SnapshotSink.append(enc, table, "vec_id", Seq("list_id"))
-    val back = graft.sink.SnapshotSink.read(spark, table)
-    val qv = vecs(1)._2.map(_.toDouble)
-    val res = Similarity.ivfPqSearch(back, "vec_id", qv, centroids, pq, 10, 2)
-    val plan = res.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") &&
-      plan.replaceAll("\\s", "").contains("list_id"),
-      s"expected list_id in PartitionFilters:\n${plan.take(800)}")
-    val mem = Similarity.ivfPqSearch(enc, "vec_id", qv, centroids, pq, 10, 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val disk = res.collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(disk == mem)
   }
 
   test("ivfPqSearchMany: one probe-join plan (no per-query union), row-for-row " +
@@ -345,8 +330,10 @@ class SimilaritySpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4))
         .sortBy(t => (t._3, t._1)).toSeq).toMap
     queries.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqSearch(enc, "vec_id", qv, centroids, pq, k, nprobe)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+      // query at a time: the same search with this query alone
+      val single = Similarity.ivfPqSearchMany(enc, "vec_id", Seq((qid, qv)), centroids,
+        pq, k, nprobe)
+        .collect().map(r => (r.getLong(1), r.getInt(2), r.getDouble(3)))
         .sortBy(t => (t._3, t._1)).toSeq
       assert(got(qid) == single, s"query $qid: batched != query-at-a-time")
     }
