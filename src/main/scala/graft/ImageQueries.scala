@@ -151,7 +151,7 @@ object ImageQueries {
 
     // PQ ADC k-NN (T2): IVFADC search with every list probed — per-list LUTs
     // of the residual-transformed query (ds/IVFPQ.java:408–450) ride in ONE
-    // broadcast inside a native adc_distance expression; the scan reads only
+    // broadcast inside a native adc_probe expression; the scan reads only
     // (pq_code, list_id), never vectors, and the plan holds no LUT literals
     // (reference-scale LUTs are demonstrated to plan in PlanSpec).
     "q_image_adc_knn" -> ((s, dir) => {

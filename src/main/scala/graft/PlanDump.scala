@@ -190,7 +190,7 @@ object PlanDump {
         "graceful path for a query side too large to broadcast; per-group bounded-heap " +
         "top-k (partial `bounded_top_k` before the exchange) is unchanged.")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    dump("Batched IVFADC search (set-based probe join, one corpus scan)", {
+    dump("Batched IVFADC search (one scan stage, probe table in the LUT broadcast)", {
       val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       val head = emb.where(col("vec_id") < 16).orderBy("vec_id")
         .select("embedding").collect()
@@ -206,10 +206,12 @@ object PlanDump {
         (0 until 3).map(qi => (qi.toLong, head(qi))), centroids, pq,
         k = 10, nprobe = 4)
     }, "ONE scan of the encoded corpus (static IN filter on list_id → partition " +
-      "pruning on a list_id-partitioned snapshot) broadcast-joined to the tiny " +
-      "(query_id, probe, lut_slot) table; adc_distance reads the per-(query, list) " +
-      "LUT broadcast by slot; ObjectHashAggregate(bounded_top_k) ranks per query. " +
-      "No per-query Union — the plan is |Q|-invariant (SimilaritySpec asserts).")
+      "pruning on a list_id-partitioned snapshot) and no join: one broadcast maps " +
+      "each probed list to the ids of the queries probing it and their LUTs, " +
+      "Generate inline(adc_probe(pq_code, list_id)) emits (query_id, adc_dist) per " +
+      "probing query, and ObjectHashAggregate(bounded_top_k) ranks per query. No " +
+      "per-query Union, no BroadcastExchange — the plan is |Q|-invariant " +
+      "(SimilaritySpec asserts).")
     dump("Per-group mean embedding (native vec_mean aggregate)",
       SparkEntry.queries("q_embed_label_centroid")(spark, sf),
       "ObjectHashAggregate partial→final around one exchange: each task folds its " +

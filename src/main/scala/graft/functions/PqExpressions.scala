@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -23,30 +23,48 @@ import org.apache.spark.sql.types._
  */
 object PqExpressions {
 
+  /** Broadcast map keyed by list_id → direct-index array (null = un-probed).
+    * Built ONCE per generated-class instance / per interpreted expression on
+    * the executor — the per-row path is plain array indexing. */
+  private def byListId[T <: AnyRef: scala.reflect.ClassTag](m: Map[Int, T],
+                                                            what: String): Array[T] = {
+    require(m.nonEmpty, s"$what: empty LUT map")
+    val table = new Array[T](m.keys.max + 1)
+    m.foreach { case (li, v) =>
+      require(li >= 0, s"$what: negative list_id $li")
+      table(li) = v
+    }
+    table
+  }
+
+  def buildLutTable(luts: Broadcast[Map[Int, Array[Array[Double]]]])
+      : Array[Array[Array[Double]]] = byListId(luts.value, "adc_distance")
+
+  def lutMissing(listId: Int): Nothing = lutMissing("adc_distance", listId)
+
+  private def lutMissing(what: String, listId: Int): Nothing = throw new IllegalArgumentException(
+    s"$what: no LUT for list_id=$listId (un-probed list reached the scan)")
+
+  /** `table(li)`, failing loudly when list `li` has no entry. */
+  private def entry[T <: AnyRef](table: Array[T], li: Int, what: String): T =
+    if (li >= 0 && li < table.length && table(li) != null) table(li) else lutMissing(what, li)
+
+  /** Σ_j lut[j][code_j], j = 0…m−1 in order (ds/PQ.java:303–317). */
+  private def adcSum(code: ArrayData, lut: Array[Array[Double]], what: String): Double = {
+    val m = lut.length
+    require(code.numElements() == m,
+      s"$what: code has ${code.numElements()} sub-codes, LUT has $m")
+    var d = 0.0; var j = 0
+    while (j < m) { d += lut(j)(code.getInt(j)); j += 1 }
+    d
+  }
+
   /**
    * Σ_j LUT[list_id][j][code_j] — ADC distance of the broadcast query LUTs
    * against a stored PQ code. `luts` maps list_id → (m × k_s) table; for
    * non-IVF (single global LUT) or SDC (LUT rows = sdcTable[j][queryCode_j])
    * pass a single-entry map and a literal list id.
    */
-  /** Broadcast LUT map → direct-index jagged array (list_id-indexed; null =
-    * un-probed). Built ONCE per generated-class instance / per interpreted
-    * expression on the executor — the per-row path is plain array indexing. */
-  def buildLutTable(luts: Broadcast[Map[Int, Array[Array[Double]]]])
-      : Array[Array[Array[Double]]] = {
-    val m = luts.value
-    require(m.nonEmpty, "adc_distance: empty LUT map")
-    val table = new Array[Array[Array[Double]]](m.keys.max + 1)
-    m.foreach { case (li, lut) =>
-      require(li >= 0, s"adc_distance: negative list_id $li")
-      table(li) = lut
-    }
-    table
-  }
-
-  def lutMissing(listId: Int): Nothing = throw new IllegalArgumentException(
-    s"adc_distance: no LUT for list_id=$listId (un-probed list reached the scan)")
-
   case class AdcDistance(
       left: Expression, // pq_code: array<int>
       right: Expression, // list_id: int
@@ -59,18 +77,9 @@ object PqExpressions {
     @transient private lazy val lutTable: Array[Array[Array[Double]]] =
       buildLutTable(luts)
 
-    override def nullSafeEval(codeAny: Any, listAny: Any): Any = {
-      val code = codeAny.asInstanceOf[ArrayData]
-      val li = listAny.asInstanceOf[Int]
-      val lut = if (li >= 0 && li < lutTable.length && lutTable(li) != null)
-        lutTable(li) else lutMissing(li)
-      require(code.numElements() == lut.length,
-        s"adc_distance: code has ${code.numElements()} sub-codes, LUT has ${lut.length}")
-      var d = 0.0; var j = 0
-      val m = lut.length
-      while (j < m) { d += lut(j)(code.getInt(j)); j += 1 }
-      d
-    }
+    override def nullSafeEval(codeAny: Any, listAny: Any): Any =
+      adcSum(codeAny.asInstanceOf[ArrayData],
+        entry(lutTable, listAny.asInstanceOf[Int], "adc_distance"), "adc_distance")
 
     // generated: the broadcast resolves in the class init (once per task,
     // executor-side), the per-row path is two array indexes + an m-step loop —
@@ -111,6 +120,54 @@ object PqExpressions {
                    luts: Broadcast[Map[Int, Array[Array[Double]]]]): Column =
     GraftBridge.column(AdcDistance(
       GraftBridge.expression(code), GraftBridge.expression(listId), luts))
+
+  /** The queries probing one inverted list: their ids and their (m × k_s)
+    * ADC tables against that list, index-aligned. */
+  final case class ProbeList(queryIds: Array[Long], luts: Array[Array[Array[Double]]])
+
+  /**
+   * IVFADC batch scan (ds/IVFPQ.java:408–450 for a query set): a stored row's
+   * (pq_code, list_id) → one (query_id, adc_dist) per query that probes the
+   * row's list. `probes` maps list_id → [[ProbeList]], so the probe table
+   * rides in the same broadcast as the LUTs and the scan needs no join; a
+   * row of an un-probed list fails loudly (the caller's IN filter keeps
+   * them out). `inline` expands the result into rows.
+   */
+  case class AdcProbe(
+      left: Expression, // pq_code: array<int>
+      right: Expression, // list_id: int
+      probes: Broadcast[Map[Int, ProbeList]])
+      extends BinaryExpression with CodegenFallback {
+
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("adc_dist", DoubleType, nullable = false))), containsNull = false)
+    override def prettyName: String = "adc_probe"
+
+    @transient private lazy val table: Array[ProbeList] =
+      byListId(probes.value, "adc_probe")
+
+    override def nullSafeEval(codeAny: Any, listAny: Any): Any = {
+      val code = codeAny.asInstanceOf[ArrayData]
+      val p = entry(table, listAny.asInstanceOf[Int], "adc_probe")
+      val out = new Array[Any](p.queryIds.length)
+      var q = 0
+      while (q < out.length) {
+        out(q) = new GenericInternalRow(
+          Array[Any](p.queryIds(q), adcSum(code, p.luts(q), "adc_probe")))
+        q += 1
+      }
+      new GenericArrayData(out)
+    }
+
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcProbe =
+      copy(left = l, right = r)
+  }
+
+  def adc_probe(code: Column, listId: Column,
+                probes: Broadcast[Map[Int, ProbeList]]): Column =
+    GraftBridge.column(AdcProbe(
+      GraftBridge.expression(code), GraftBridge.expression(listId), probes))
 
   /** Scalar kernel for [[IvfPqEncode]]: array data → [[graft.model.IvfPq]]
     * encode → struct. Called from interpreted eval AND generated code. */

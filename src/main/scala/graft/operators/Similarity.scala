@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.BoundedTopK
+import graft.functions.PqExpressions.{ProbeList, adc_probe}
 import graft.model.{IvfPq, NoTransform, VectorTransform}
 
 /**
@@ -161,22 +162,25 @@ object Similarity {
         col("__enc.pq_code").as("pq_code"))
   }
 
-  /** Multi-query IVFADC as ONE join-shaped plan (ds/IVFPQ.java:408–450 at
-    * |Q| scale — the set-based twin of what [[ivfTopK]] does for raw cosine):
+  /** Multi-query IVFADC as ONE scan stage (ds/IVFPQ.java:408–450 at |Q|
+    * scale — the set-based twin of what [[ivfTopK]] does for raw cosine):
     * probe selection and per-(query, list) ADC LUTs come from the
-    * [[graft.model.IvfPq]] codec driver-side over the BOUNDED query set, and
-    * each LUT gets a dense slot in a single broadcast (|Q|·nprobe tables of
-    * m×k_s doubles); `transform` is the pre-PQ transform the corpus was
-    * encoded under (a [[graft.model.ModelBundle]]'s, or none for
-    * [[ivfPqEncode]] output). A tiny (query_id, probe, lut_slot) table
-    * broadcast-joins the encoded corpus on `list_id` under a static IN filter (partition-pruned when the corpus is list_id-
-    * partitioned on disk), `adc_distance` indexes the slot, and a per-query
-    * [[BoundedTopK]] (adc asc, id tie-break) replaces N sort+limits. The
-    * corpus is scanned ONCE regardless of |Q| — a 10³-row query table is one
-    * probe join, not a 10³-branch union plan. For corpus×corpus workloads
-    * use the LSH/near-dup operators instead — an unbounded query side must
-    * not drive driver-side LUT construction. Returns (query_id, neighbor_id,
-    * list_id, adc_dist), per query the k best by (adc_dist asc, id asc). */
+    * [[graft.model.IvfPq]] codec driver-side over the BOUNDED query set and
+    * are grouped per list into ONE broadcast: list l → the ids of the queries
+    * probing l and their LUTs (|Q|·nprobe tables of m×k_s doubles);
+    * `transform` is the pre-PQ transform the corpus was encoded under (a
+    * [[graft.model.ModelBundle]]'s, or none for [[ivfPqEncode]] output). The
+    * encoded corpus is scanned under a static `list_id IN (…)` filter
+    * (partition-pruned when the corpus is list_id-partitioned on disk);
+    * `adc_probe` maps each row to its (query_id, adc_dist) pairs, `inline`
+    * expands them, and a per-query [[BoundedTopK]] (adc asc, id tie-break)
+    * replaces N sort+limits. No join, no per-query union: the corpus is
+    * scanned ONCE and the plan is the same for any |Q|. Rows with a null
+    * `list_id` or `pq_code` (featurize error rows) give no candidates. For
+    * corpus×corpus workloads use the LSH/near-dup operators instead — an
+    * unbounded query side must not drive driver-side LUT construction.
+    * Returns (query_id, neighbor_id, list_id, adc_dist), per query the k best
+    * by (adc_dist asc, id asc). */
   def ivfPqSearchMany(encoded: DataFrame, idCol: String,
                       queries: Seq[(Long, Array[Double])],
                       centroids: Array[Array[Double]],
@@ -184,28 +188,23 @@ object Similarity {
                       k: Int, nprobe: Int,
                       transform: VectorTransform = NoTransform): DataFrame = {
     require(queries.nonEmpty, "ivfPqSearchMany: empty query set")
+    require(k >= 1, s"ivfPqSearchMany: k=$k must be >= 1")
+    require(nprobe >= 1, s"ivfPqSearchMany: nprobe=$nprobe must be >= 1")
+    val dupIds = queries.groupBy(_._1).collect { case (q, vs) if vs.size > 1 => q }
+    require(dupIds.isEmpty,
+      s"ivfPqSearchMany: duplicate query ids ${dupIds.toSeq.sorted.mkString(",")}")
     val codec = IvfPq(centroids, pq, transform)
-    val spark = encoded.sparkSession
-    val probeRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-    val luts = Map.newBuilder[Int, Array[Array[Double]]]
-    var slot = 0
-    queries.foreach { case (qid, qv) =>
-      codec.probe(qv, nprobe).foreach { li =>
-        probeRows += ((qid, li, slot))
-        luts += slot -> codec.lut(qv, li)
-        slot += 1
+    val probes = queries
+      .flatMap { case (qid, qv) => codec.probe(qv, nprobe).map(li => (li, qid, qv)) }
+      .groupBy(_._1)
+      .map { case (li, ps) =>
+        li -> ProbeList(ps.map(_._2).toArray, ps.map(p => codec.lut(p._3, li)).toArray)
       }
-    }
-    val bcLuts = spark.sparkContext.broadcast(luts.result())
-    val allLists = probeRows.map(_._2).distinct.sorted
-    import spark.implicits._
-    val probeDf = broadcast(probeRows.toSeq.toDF("query_id", "probe", "__lut"))
+    val bcProbes = encoded.sparkSession.sparkContext.broadcast(probes)
     val scored = encoded
-      .where(col("list_id").isin(allLists.map(Integer.valueOf).toSeq: _*))
-      .join(probeDf, col("probe") === col("list_id"))
-      .select(col("query_id"), col(idCol), col("list_id"),
-        graft.functions.PqExpressions.adc_distance(col("pq_code"), col("__lut"),
-          bcLuts).as("adc_dist"))
+      .where(col("list_id").isin(probes.keys.toSeq.sorted.map(Integer.valueOf): _*))
+      .select(col(idCol), col("list_id"),
+        inline(adc_probe(col("pq_code"), col("list_id"), bcProbes)))
     scored.groupBy(col("query_id"))
       .agg(BoundedTopK.topK(col("adc_dist"), col(idCol), col("list_id"), k,
         ascending = true).as("__tk"))

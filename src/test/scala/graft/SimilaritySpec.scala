@@ -266,6 +266,32 @@ class SimilaritySpec extends AnyFunSuite {
     (centroids, pq)
   }
 
+  /** Scalar IVFADC oracle: encode every vector of `rows`, keep the lists
+    * `qv` probes, rank by (adc, id); `got` (id, list, adc) must equal its top
+    * k exactly — same ids, same lists, bit-identical distances. */
+  private def assertIvfAdcOracle(got: Seq[(Long, Int, Double)], qv: Array[Double],
+                                 rows: Seq[(Long, Array[Float])], k: Int,
+                                 nprobe: Int): Unit = {
+    val (centroids, pq) = pqSetup
+    val probed = Kernels.kNearestCentroids(qv, centroids, nprobe).toSet
+    val luts = probed.map(li => li ->
+      Kernels.adcLookupTable(Kernels.residual(qv, centroids(li)), pq)).toMap
+    val expect = rows.map { case (id, vf) =>
+      val v = vf.map(_.toDouble)
+      val li = Kernels.nearestCentroid(v, centroids)
+      (id, li, if (probed(li))
+        Some(Kernels.adcDistance(Kernels.pqEncode(Kernels.residual(v, centroids(li)), pq),
+          luts(li))) else None)
+    }.collect { case (id, li, Some(d)) => (id, li, d) }
+      .sortBy { case (id, _, d) => (d, id) }.take(k)
+    assert(got.length == expect.length)
+    got.zip(expect).foreach { case ((gid, gli, gd), (eid, eli, ed)) =>
+      assert(gid == eid && gli == eli, s"rank mismatch: got $gid expect $eid")
+      assert(gd == ed, s"adc $gd vs $ed")
+    }
+    got.foreach { case (_, li, _) => assert(probed(li), "un-probed list in result") }
+  }
+
   test("ivfPqEncode matches the scalar kernels row-for-row (coarse assign, " +
     "residual, PQ code — one fused expression)") {
     val (centroids, pq) = pqSetup
@@ -292,24 +318,7 @@ class SimilaritySpec extends AnyFunSuite {
         pq, k, nprobe)
         .collect().map(r => (r.getLong(1), r.getInt(2), r.getDouble(3)))
         .sortBy(t => (t._3, t._1)).toSeq
-      // scalar oracle: encode every vector, keep probed lists, rank by (adc, id)
-      val probed = Kernels.kNearestCentroids(qv, centroids, nprobe).toSet
-      val luts = probed.map(li => li ->
-        Kernels.adcLookupTable(Kernels.residual(qv, centroids(li)), pq)).toMap
-      val expect = vecs.map { case (id, vf) =>
-        val v = vf.map(_.toDouble)
-        val li = Kernels.nearestCentroid(v, centroids)
-        (id, li, if (probed(li))
-          Some(Kernels.adcDistance(Kernels.pqEncode(Kernels.residual(v, centroids(li)), pq),
-            luts(li))) else None)
-      }.collect { case (id, li, Some(d)) => (id, li, d) }
-        .sortBy { case (id, _, d) => (d, id) }.take(k)
-      assert(got.length == expect.length)
-      got.zip(expect).foreach { case ((gid, gli, gd), (eid, eli, ed)) =>
-        assert(gid == eid && gli == eli, s"rank mismatch: got $gid expect $eid")
-        assert(gd == ed, s"adc $gd vs $ed")
-      }
-      got.foreach { case (_, li, _) => assert(probed(li), "un-probed list in result") }
+      assertIvfAdcOracle(got, qv, vecs, k, nprobe)
     }
   }
 
@@ -321,10 +330,13 @@ class SimilaritySpec extends AnyFunSuite {
     val queries = (0 until 5).map(qi => (qi.toLong, vecs(qi * 7)._2.map(_.toDouble)))
     val k = 10; val nprobe = 3
     val many = Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, k, nprobe)
-    // set-based shape: ONE scan of the encoded corpus joined against the probe
-    // table — not |Q| unioned scans (the round-4 shape this replaces)
+    // set-based shape: ONE scan of the encoded corpus — not |Q| unioned scans
+    // (the round-4 shape) and no join to a probe table: the per-list probe
+    // table rides in the LUT broadcast
     val plan = many.queryExecution.executedPlan.toString
     assert(!plan.contains("Union"), s"per-query union survived:\n${plan.take(1200)}")
+    assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"),
+      s"probe join survived:\n${plan.take(1200)}")
     val got = many.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4))
@@ -337,6 +349,56 @@ class SimilaritySpec extends AnyFunSuite {
         .sortBy(t => (t._3, t._1)).toSeq
       assert(got(qid) == single, s"query $qid: batched != query-at-a-time")
     }
+  }
+
+  test("ivfPqSearchMany: shared probed lists, an empty probed list and null " +
+    "list_id/pq_code rows; per query equal to query-at-a-time and the scalar oracle") {
+    val (centroids, pq) = pqSetup
+    val emptyList = 5
+    val listOf = vecs.map { case (id, v) =>
+      id -> Kernels.nearestCentroid(v.map(_.toDouble), centroids) }.toMap
+    val kept = vecs.filter { case (id, _) => listOf(id) != emptyList }
+    // featurize-style error rows: null list and code, or a probed list and a null code
+    val nullRows = Seq((9000L, None: Option[Int], None: Option[Seq[Int]]),
+      (9001L, None, None), (9002L, Some(0), None), (9003L, Some(emptyList), None))
+      .toDF("vec_id", "list_id", "pq_code")
+    val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
+      .where(col("list_id") =!= emptyList)
+      .unionByName(nullRows)
+      .localCheckpoint(true)
+    // query 105 sits on the emptied list's centroid, so it probes that list
+    val queries = (0 until 5).map(qi => (100L + qi, vecs(qi * 11)._2.map(_.toDouble))) :+
+      (105L -> centroids(emptyList))
+    val k = 10; val nprobe = 3
+    val probed = queries.map { case (_, qv) => Kernels.kNearestCentroids(qv, centroids, nprobe) }
+    assert(probed.flatten.distinct.size < probed.flatten.size, "queries share no list")
+    assert(probed.last.contains(emptyList))
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[(Long, Int, Double)]] =
+      df.collect().map(r => (r.getLong(0), (r.getLong(1), r.getInt(2), r.getDouble(3))))
+        .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(t => (t._3, t._1)).toSeq).toMap
+    val got = rows(Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, k, nprobe))
+    assert(got.keySet == queries.map(_._1).toSet)
+    queries.foreach { case (qid, qv) =>
+      val single = rows(Similarity.ivfPqSearchMany(enc, "vec_id", Seq((qid, qv)),
+        centroids, pq, k, nprobe))
+      assert(got(qid) == single(qid), s"query $qid: batched != query-at-a-time")
+      assert(got(qid).forall(_._1 < 9000L), s"query $qid: a null row became a candidate")
+      assertIvfAdcOracle(got(qid), qv, kept, k, nprobe)
+    }
+  }
+
+  test("ivfPqSearchMany rejects duplicate query ids, k < 1 and nprobe < 1") {
+    val (centroids, pq) = pqSetup
+    val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
+    val q = vecs(0)._2.map(_.toDouble)
+    def msg(queries: Seq[(Long, Array[Double])], k: Int, nprobe: Int): String =
+      intercept[IllegalArgumentException](
+        Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, k, nprobe)
+      ).getMessage
+    assert(msg(Seq((1L, q), (2L, q), (1L, q)), 10, 2)
+      .contains("ivfPqSearchMany: duplicate query ids 1"))
+    assert(msg(Seq((1L, q)), 0, 2).contains("ivfPqSearchMany: k=0 must be >= 1"))
+    assert(msg(Seq((1L, q)), 10, 0).contains("ivfPqSearchMany: nprobe=0 must be >= 1"))
   }
 
   test("ivfPqSearchMany partition-prunes a list_id-partitioned snapshot " +

@@ -1,0 +1,84 @@
+#!/usr/bin/env python3
+"""Alternating parent/change comparison over perfbench.
+
+    python3 tools/ab.py <parent_dir> <change_dir> --workload knn --seeds 11-20
+
+For each seed in the inclusive range, runs `python3 perfbench/run.py
+--workload W --seed S --seconds N --trace 0` once in each checkout, N being
+BENCHMARK.json's run_seconds (the parent first on even pairs, the change
+first on odd ones). Then prints, for every end-to-end metric in the
+change's BENCHMARK.json: each side's median and quartiles, the parent's IQR,
+the change's win count (ties count for neither), and whether the pairs support
+a gain (wins >= 9/10 of pairs and median gap > parent IQR). Failed operations
+are summed per side. Reads only perfbench's result line; writes nothing.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def run(checkout, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                       stderr=subprocess.DEVNULL, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.strip()]
+    if p.returncode != 0 or not lines:
+        sys.exit(f"{checkout}: seed {seed} exited with {p.returncode}")
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent_dir")
+    ap.add_argument("change_dir")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", default="11-20", help="first-last, inclusive")
+    a = ap.parse_args()
+    with open(os.path.join(a.change_dir, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    seconds = spec["run_seconds"]
+    first, last = (int(x) for x in a.seeds.split("-"))
+    sides = {"parent": a.parent_dir, "change": a.change_dir}
+    results = {"parent": [], "change": []}
+    for i, seed in enumerate(range(first, last + 1)):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        for side in order:
+            r = run(sides[side], a.workload, seed, seconds)
+            results[side].append(r)
+            vals = " ".join(f"{n}={m['value']:.4g}" for n, m in r["metrics"].items())
+            print(f"seed {seed} {side}: failed={r['failed']}/{r['attempted']} {vals}",
+                  file=sys.stderr, flush=True)
+
+    pairs = len(results["parent"])
+    print(f"{a.workload}: {pairs} pairs, {seconds:g} s runs")
+    print(f"{'metric':<12} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
+          f"{'parent IQR':>10} {'gap':>8} {'wins':>6}  gain")
+    for m in spec["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        p = [r["metrics"][name]["value"] for r in results["parent"]]
+        c = [r["metrics"][name]["value"] for r in results["change"]]
+        pq, cq = quartiles(p), quartiles(c)
+        iqr = pq[2] - pq[0]
+        gap = cq[1] - pq[1]
+        wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
+        gain = wins * 10 >= pairs * 9 and abs(gap) > iqr and (gap < 0) == lower
+        fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
+        print(f"{name:<12} {fmt(pq):>26} {fmt(cq):>26} {iqr:>10.4g} "
+              f"{gap / pq[1]:>+8.1%} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no'}")
+    for side in ("parent", "change"):
+        failed = sum(r["failed"] for r in results[side])
+        attempted = sum(r["attempted"] for r in results[side])
+        print(f"{side}: {failed} of {attempted} operations failed")
+
+
+if __name__ == "__main__":
+    main()
