@@ -41,13 +41,14 @@ object SparkEntry {
     * writers × 32 bucket files plus a 32-task codegen-compile lock convoy
     * per stage, which dominated the dedup queries end-to-end. A size-derived
     * count keeps the spread proportional to the data (it GROWS to the full
-    * width on a bigger corpus) instead of inheriting the core count. */
+    * width on a bigger corpus) instead of inheriting the core count. The
+    * size comes from the path's Hadoop FileSystem, so `file:`, `hdfs:` and
+    * `s3a:` tables are sized like plain local paths. */
   private def sizeSpreadParts(spark: SparkSession, dir: String,
                               name: String): Int = {
-    val f = new java.io.File(s"$dir/$name.parquet")
-    val bytes =
-      if (f.isDirectory) f.listFiles.filter(_.isFile).map(_.length).sum
-      else f.length
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val bytes = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(path).getLength
     math.max(2, math.min(spark.sparkContext.defaultParallelism,
       (bytes / (128L * 1024)).toInt))
   }
@@ -706,8 +707,7 @@ object SparkEntry {
       // full-width spread (measured: the size-derived count regressed this
       // one — the shard Window re-partitions anyway and the tokenization
       // benefits from the wider first stage)
-      TextOps.packSequences(
-        t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism),
+      TextOps.packSequences(docsSpread(s, dir),
         "doc_id", "text", seqLen = 256, numShards = 8)
         .orderBy("doc_id")
     }),

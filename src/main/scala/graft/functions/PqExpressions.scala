@@ -17,15 +17,15 @@ import org.apache.spark.sql.types._
  * reference config (k_c=8192, m=64, k_s=256, exm/YFCC100MExample.java:86–90)
  * that plan is ~134M literal nodes and never compiles. Here the LUTs live in
  * a Spark broadcast (shipped once per executor, not per task, and never in
- * the plan tree), keyed by the row's `list_id`; the distance is a compiled
- * m-step loop. At query time a reference-scale engine LUTs only the probed
+ * the plan tree), keyed by the row's `list_id`; the distance is an m-step
+ * loop over array indexes. At query time a reference-scale engine LUTs only the probed
  * lists (w ≈ k_c/10), which is exactly the map this expression carries.
  */
 object PqExpressions {
 
   /** Broadcast map keyed by list_id → direct-index array (null = un-probed).
-    * Built ONCE per generated-class instance / per interpreted expression on
-    * the executor — the per-row path is plain array indexing. */
+    * Built ONCE per expression instance on the executor — the per-row path
+    * is plain array indexing. */
   private def byListId[T <: AnyRef: scala.reflect.ClassTag](m: Map[Int, T],
                                                             what: String): Array[T] = {
     require(m.nonEmpty, s"$what: empty LUT map")
@@ -36,11 +36,6 @@ object PqExpressions {
     }
     table
   }
-
-  def buildLutTable(luts: Broadcast[Map[Int, Array[Array[Double]]]])
-      : Array[Array[Array[Double]]] = byListId(luts.value, "adc_distance")
-
-  def lutMissing(listId: Int): Nothing = lutMissing("adc_distance", listId)
 
   private def lutMissing(what: String, listId: Int): Nothing = throw new IllegalArgumentException(
     s"$what: no LUT for list_id=$listId (un-probed list reached the scan)")
@@ -69,48 +64,17 @@ object PqExpressions {
       left: Expression, // pq_code: array<int>
       right: Expression, // list_id: int
       luts: Broadcast[Map[Int, Array[Array[Double]]]])
-      extends BinaryExpression {
+      extends BinaryExpression with CodegenFallback {
 
     override def dataType: DataType = DoubleType
     override def prettyName: String = "adc_distance"
 
     @transient private lazy val lutTable: Array[Array[Array[Double]]] =
-      buildLutTable(luts)
+      byListId(luts.value, "adc_distance")
 
     override def nullSafeEval(codeAny: Any, listAny: Any): Any =
       adcSum(codeAny.asInstanceOf[ArrayData],
         entry(lutTable, listAny.asInstanceOf[Int], "adc_distance"), "adc_distance")
-
-    // generated: the broadcast resolves in the class init (once per task,
-    // executor-side), the per-row path is two array indexes + an m-step loop —
-    // the IVFPQ scan stays inside whole-stage codegen (ds/PQ.java:303-317's
-    // tight loop, compiled)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("adcLuts", luts,
-        classOf[Broadcast[Map[Int, Array[Array[Double]]]]].getName)
-      val table = ctx.addMutableState("double[][][]", "adcLutTable",
-        v => s"$v = graft.functions.PqExpressions.buildLutTable($bcRef);")
-      nullSafeCodeGen(ctx, ev, (code, li) => {
-        val lut = ctx.freshName("lut"); val j = ctx.freshName("j")
-        val d = ctx.freshName("d"); val m = ctx.freshName("m")
-        s"""
-           |if ($li < 0 || $li >= $table.length || $table[$li] == null) {
-           |  graft.functions.PqExpressions.lutMissing($li);
-           |}
-           |final double[][] $lut = $table[$li];
-           |final int $m = $lut.length;
-           |if ($code.numElements() != $m) {
-           |  throw new IllegalArgumentException("adc_distance: code has " +
-           |    $code.numElements() + " sub-codes, LUT has " + $m);
-           |}
-           |double $d = 0.0;
-           |for (int $j = 0; $j < $m; $j++) {
-           |  $d += $lut[$j][$code.getInt($j)];
-           |}
-           |${ev.value} = $d;
-         """.stripMargin
-      })
-    }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcDistance =
       copy(left = l, right = r)

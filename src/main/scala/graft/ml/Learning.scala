@@ -1,5 +1,8 @@
 package graft.ml
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,7 +25,7 @@ import graft.kernels.Kernels.PqModel
  *    set (the reference pads missing PQ clusters with 1000-sentinels,
  *    qnt/ProductQuantizationLearning.java:285–303).
  *
- *  - [[learnPca]] — mean vector + Gram-matrix accumulation (one treeAggregate
+ *  - [[learnPca]] — mean vector + Gram-matrix accumulation (one aggregate
  *    pass, d×d driver matrix) + Breeze eigendecomposition; eigenvalues sorted
  *    descending like dim/PCA.java:120–177. Above [[largeDimThreshold]] it
  *    dispatches to [[learnPcaDistributed]] — covariance-free subspace
@@ -31,6 +34,17 @@ import graft.kernels.Kernels.PqModel
  *    never materializes the 8.6 GB d×d Gram anywhere.
  */
 object Learning {
+
+  /** Fold every partition into a fresh `zero` with `seqOp`, then merge the
+    * partials with `combOp` on the driver in PARTITION-ID order. Spark's
+    * `treeAggregate` merges them in task-completion order, and floating-point
+    * sums depend on that order, so a model learned from a multi-partition
+    * input changed from run to run; here it is a function of the input and
+    * its partitioning. The driver holds one partial per partition. */
+  private def aggregateInOrder[T, U: ClassTag](rdd: RDD[T], zero: => U)(
+      seqOp: (U, T) => U, combOp: (U, U) => U): U =
+    rdd.mapPartitions(it => Iterator.single(it.foldLeft(zero)(seqOp)))
+      .collect().foldLeft(zero)(combOp)
 
   /** data: (block: Int, vec: Array[Double]) rows. Returns block → k×d centroids. */
   def lloydKMeans(
@@ -77,9 +91,9 @@ object Learning {
       var iter = 0
       while (iter < iterations) {
         val bc = spark.sparkContext.broadcast(centroids)
-        // one treeAggregate pass: per (block, cluster) → (Σvec, count)
+        // one aggregate pass: per (block, cluster) → (Σvec, count)
         val nB = blocks.length
-        val (sums, counts) = rdd.treeAggregate(
+        val (sums, counts) = aggregateInOrder(rdd,
           (Array.ofDim[Double](nB * k * d), Array.ofDim[Long](nB * k)))(
           seqOp = { case ((s, c), (b, v)) =>
             val bi = blockIdx(b)
@@ -154,7 +168,7 @@ object Learning {
 
   /**
    * PCA learning: one distributed pass accumulating (n, Σx, Σxxᵀ) via
-   * treeAggregate, then Breeze eigSym of the covariance on the driver;
+   * [[aggregateInOrder]], then Breeze eigSym of the covariance on the driver;
    * components sorted by eigenvalue descending (dim/PCA.java:172).
    * Returns (means, eigenvalues, V_t rows) — whitening is folded in by the
    * caller via Kernels.PcaModel (load-path parity, dim/PCA.java:282–313).
@@ -167,7 +181,7 @@ object Learning {
     val rdd = vectors.select("vec").rdd.map(_.getSeq[Double](0).toArray)
     val d = rdd.first().length
     if (d > largeDimThreshold) return learnPcaDistributed(vectors, numComponents)
-    val (n, sumX, gram) = rdd.treeAggregate(
+    val (n, sumX, gram) = aggregateInOrder(rdd,
       (0L, new Array[Double](d), new Array[Double](d * d)))(
       seqOp = { case ((cnt, s, g), v) =>
         var i = 0
@@ -232,7 +246,7 @@ object Learning {
       val d = rdd.first().length
       val spark = vectors.sparkSession
       // pass 1: n and mean
-      val (n, sumX) = rdd.treeAggregate((0L, new Array[Double](d)))(
+      val (n, sumX) = aggregateInOrder(rdd, (0L, new Array[Double](d)))(
         seqOp = { case ((cnt, s), v) =>
           var i = 0; while (i < d) { s(i) += v(i); i += 1 }
           (cnt + 1, s)
@@ -250,11 +264,11 @@ object Learning {
       var q = Array.fill(b)(Array.fill(d)(rnd.nextGaussian()))
       orthonormalizeColumns(q)
 
-      // Y = Σ_rows (x−μ)((x−μ)ᵀQ); O(d·b) per task, one treeAggregate per sweep
+      // Y = Σ_rows (x−μ)((x−μ)ᵀQ); O(d·b) per task, one aggregate pass per sweep
       def covTimes(qCur: Array[Array[Double]]): Array[Array[Double]] = {
         val bc = spark.sparkContext.broadcast(qCur)
         val bcMeans = spark.sparkContext.broadcast(means)
-        val y = rdd.treeAggregate(Array.ofDim[Double](b, d))(
+        val y = aggregateInOrder(rdd, Array.ofDim[Double](b, d))(
           seqOp = { (acc, v) =>
             val qq = bc.value; val mu = bcMeans.value
             val c = new Array[Double](d)

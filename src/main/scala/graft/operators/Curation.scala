@@ -623,33 +623,29 @@ object Curation {
   }
 
   /** Persist [[paragraphFingerprints]] of `df` into a
-    * [[graft.sink.SnapshotSink]] table (resume-safe, delimiter recorded in
-    * lineage; [[readParagraphFingerprints]] refuses a mismatched delimiter —
-    * unit boundaries ARE the dedup semantics). */
+    * [[graft.sink.SnapshotSink]] table (resume-safe). The delimiter is the
+    * table's sink format: an append or a [[readParagraphFingerprints]] under
+    * another delimiter is refused — unit boundaries ARE the dedup semantics. */
   def persistParagraphFingerprints(df: DataFrame, table: String, idCol: String,
                                    textCol: String,
                                    delim: String = "\n\n"): Unit = {
     graft.sink.SnapshotSink.appendMissing(
       paragraphFingerprints(df, idCol, textCol, delim), table, "fp_key",
-      Seq.empty, lineage = Map("op" -> "paragraph_fingerprints",
-        "delim_hex" -> delim.getBytes("UTF-8").map("%02x".format(_)).mkString))
+      Seq.empty, format = fingerprintFormat(delim))
     ()
   }
 
+  private def fingerprintFormat(delim: String): Map[String, String] =
+    Map("op" -> "paragraph_fingerprints",
+      "delim_hex" -> delim.getBytes("UTF-8").map("%02x".format(_)).mkString)
+
   /** Read a [[persistParagraphFingerprints]] table back for
-    * [[dedupParagraphsIncremental]], validating the recorded delimiter. */
+    * [[dedupParagraphsIncremental]]; the sink refuses a table built with
+    * another delimiter. */
   def readParagraphFingerprints(spark: org.apache.spark.sql.SparkSession,
                                 table: String,
-                                delim: String = "\n\n"): DataFrame = {
-    val hex = delim.getBytes("UTF-8").map("%02x".format(_)).mkString
-    graft.sink.SnapshotSink.lastSnapshot(table).foreach { snap =>
-      val rec = snap.lineage.get("delim_hex")
-      require(rec.forall(_ == hex),
-        s"fingerprint table $table was built with delimiter 0x${rec.orNull}; " +
-          s"consumer expects 0x$hex — unit boundaries are the dedup semantics")
-    }
-    graft.sink.SnapshotSink.read(spark, table)
-  }
+                                delim: String = "\n\n"): DataFrame =
+    graft.sink.SnapshotSink.read(spark, table, fingerprintFormat(delim))
 
   /**
    * INCREMENTAL [[dedupParagraphs]] — keep-first exact unit dedup of a NEW

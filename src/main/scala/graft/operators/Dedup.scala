@@ -323,8 +323,9 @@ object Dedup {
     * table, resume-safe: only ids not already committed are shingled +
     * minhashed (the F2 already-indexed discipline), so a re-run after a crash
     * or a grown re-curation pays for genuinely new documents only. LSH
-    * parameters ride the snapshot lineage; [[readMinhashSignatures]] refuses
-    * a table whose recorded parameters disagree with the consumer's.
+    * parameters are the table's sink format: an append under other
+    * parameters is refused, and so is a [[readMinhashSignatures]] that
+    * expects other ones.
     *
     * FIRST-WRITE-WINS: a re-appearing id with changed text keeps its
     * originally committed signature (appendMissing never rewrites a
@@ -335,35 +336,25 @@ object Dedup {
                                numHashes: Int = 64): Unit = {
     val sigs = minhashSignatures(df, idCol, textCol, shingleN, numHashes)
     graft.sink.SnapshotSink.appendMissing(sigs, table, idCol, Seq.empty,
-      lineage = Map("op" -> "minhash_signatures",
-        "shingle_n" -> shingleN.toString, "num_hashes" -> numHashes.toString,
-        "sh_encoding" -> "xxh64s42"))
+      format = signatureFormat(shingleN, numHashes))
     ()
   }
 
+  /** Sink format of a [[persistMinhashSignatures]] table. `sh_encoding`
+    * names the storage of `sh`: the xxhash64 image of the shingle set
+    * (array<long>), not the shingle strings of tables from before round 8. */
+  private def signatureFormat(shingleN: Int, numHashes: Int): Map[String, String] =
+    Map("op" -> "minhash_signatures", "shingle_n" -> shingleN.toString,
+      "num_hashes" -> numHashes.toString, "sh_encoding" -> "xxh64s42")
+
   /** Read a [[persistMinhashSignatures]] table back for
-    * [[minhashLshPairsIncremental]], validating the recorded LSH parameters
-    * against the consumer's (silently mixing signature spaces would produce
+    * [[minhashLshPairsIncremental]]; the sink refuses a table built under
+    * other LSH parameters (silently mixing signature spaces would produce
     * garbage buckets, not an error). */
   def readMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
                             table: String, shingleN: Int = 3,
-                            numHashes: Int = 64): DataFrame = {
-    graft.sink.SnapshotSink.lastSnapshot(table).foreach { snap =>
-      val (sn, nh) = (snap.lineage.get("shingle_n"), snap.lineage.get("num_hashes"))
-      require(sn.forall(_ == shingleN.toString) && nh.forall(_ == numHashes.toString),
-        s"signature table $table was built with shingle_n=${sn.orNull}, " +
-          s"num_hashes=${nh.orNull}; consumer expects $shingleN/$numHashes")
-      // round-8 storage change: `sh` is the xxhash64 image of the shingle
-      // set (array<long>). A table written before that (no sh_encoding key)
-      // stores strings — refuse it loudly here instead of failing analysis
-      // deep inside the verify join.
-      require(snap.lineage.get("sh_encoding").contains("xxh64s42"),
-        s"signature table $table stores sh as " +
-          s"${snap.lineage.getOrElse("sh_encoding", "strings (pre-hashed-sh format)")}; " +
-          "this consumer reads xxh64s42 hashed shingles — re-sign the corpus")
-    }
-    graft.sink.SnapshotSink.read(spark, table)
-  }
+                            numHashes: Int = 64): DataFrame =
+    graft.sink.SnapshotSink.read(spark, table, signatureFormat(shingleN, numHashes))
 
   /** SimHash per document (row-local). */
   def simhashTable(df: DataFrame, idCol: String, textCol: String): DataFrame =

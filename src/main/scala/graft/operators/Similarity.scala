@@ -391,10 +391,10 @@ object Similarity {
       withListId(df, vecCol, centroids).as("list_id"))
 
   /** Stable fingerprint of a centroid model (MD5 over the raw double bits,
-    * row-major). Recorded in the assignment snapshot's lineage and validated
-    * on read: [[semanticNearDupPairsIncremental]]'s contract is ONE centroid
-    * model across old and new — mixing models silently mis-buckets, so the
-    * mismatch must fail loudly at read time instead. */
+    * row-major). Part of the assignment table's sink format, so it is
+    * checked on every append and read: [[semanticNearDupPairsIncremental]]'s
+    * contract is ONE centroid model across old and new — mixing models
+    * silently mis-buckets, so the mismatch must fail loudly instead. */
   def centroidFingerprint(centroids: Array[Array[Double]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val bb = java.nio.ByteBuffer.allocate(8)
@@ -411,35 +411,30 @@ object Similarity {
     * [[graft.sink.SnapshotSink]] table, resume-safe: only ids not already
     * committed are centroid-assigned (at SemDeDup scale that is the k_c·d
     * dominant cost per vector), so a grown re-curation or a crash replay
-    * pays for genuinely new vectors only. The centroid-model fingerprint
-    * rides the snapshot lineage; [[readSemanticAssignments]] refuses a
-    * table built under a different model. */
+    * pays for genuinely new vectors only. The centroid-model fingerprint is
+    * the table's sink format: an append or a [[readSemanticAssignments]]
+    * under a different model is refused. */
   def persistSemanticAssignments(df: DataFrame, table: String, idCol: String,
                                  vecCol: String,
                                  centroids: Array[Array[Double]]): Unit = {
     val assign = semanticAssignments(df, idCol, vecCol, centroids)
     graft.sink.SnapshotSink.appendMissing(assign, table, idCol, Seq.empty,
-      lineage = Map("op" -> "semantic_assignments",
-        "centroid_md5" -> centroidFingerprint(centroids),
-        "k_c" -> centroids.length.toString))
+      format = assignmentFormat(centroids))
     ()
   }
 
+  private def assignmentFormat(centroids: Array[Array[Double]]): Map[String, String] =
+    Map("op" -> "semantic_assignments",
+      "centroid_md5" -> centroidFingerprint(centroids),
+      "k_c" -> centroids.length.toString)
+
   /** Read a [[persistSemanticAssignments]] table back for
-    * [[semanticNearDupPairsIncremental]], validating the recorded
-    * centroid-model fingerprint against the consumer's. */
+    * [[semanticNearDupPairsIncremental]]; the sink refuses a table built
+    * under another centroid model. */
   def readSemanticAssignments(spark: org.apache.spark.sql.SparkSession,
                               table: String,
-                              centroids: Array[Array[Double]]): DataFrame = {
-    graft.sink.SnapshotSink.lastSnapshot(table).foreach { snap =>
-      val fp = snap.lineage.get("centroid_md5")
-      require(fp.forall(_ == centroidFingerprint(centroids)),
-        s"assignment table $table was built under centroid model " +
-          s"${fp.orNull}; the consumer's model differs — incremental " +
-          "SemDeDup requires one model across old and new")
-    }
-    graft.sink.SnapshotSink.read(spark, table)
-  }
+                              centroids: Array[Array[Double]]): DataFrame =
+    graft.sink.SnapshotSink.read(spark, table, assignmentFormat(centroids))
 
   /**
    * INCREMENTAL SemDeDup — [[semanticNearDupPairs]] against a persisted

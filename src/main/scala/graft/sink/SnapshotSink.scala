@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JInt, JNothing, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /**
  * Iceberg-shaped snapshot table on Parquet (SURVEY.md §7 step 7 — no Iceberg
@@ -29,7 +31,14 @@ import org.apache.spark.sql.functions._
  *    committed keys (the F2 already-indexed dedup,
  *    ds/AbstractSearchStructure.java:537–546);
  *  - lineage + metrics per snapshot (north rule): per-partition row counts,
- *    key column, model versions present, wall-clock, parent snapshot id.
+ *    key column, model versions present, wall-clock, parent snapshot id;
+ *  - one table format: every manifest records the writer's `format` tags
+ *    (e.g. an operator's name and parameters). An append whose format differs
+ *    from the head's is refused before it writes anything, [[compact]] carries
+ *    the head's format forward, and `read(spark, table, format)` refuses a
+ *    table any of whose read manifests has another format (the Delta Lake
+ *    log-owned table format). Operators declare their format; they never
+ *    inspect manifests themselves.
  */
 object SnapshotSink {
 
@@ -40,7 +49,8 @@ object SnapshotSink {
       rowCount: Long,
       partitionRowCounts: Map[String, Long],
       keyCol: String,
-      lineage: Map[String, String])
+      lineage: Map[String, String],
+      format: Map[String, String])
 
   private def snapshotsDir(table: String): Path = Paths.get(table, "_snapshots")
 
@@ -60,16 +70,18 @@ object SnapshotSink {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  def lastSnapshot(table: String): Option[Snapshot] = {
+  private val ManifestName = "v(\\d+)\\.json".r
+
+  /** Committed snapshot ids, ascending — one directory listing, no parse. */
+  private def snapshotIds(table: String): Seq[Int] = {
     val dir = snapshotsDir(table)
-    if (!Files.isDirectory(dir)) return None
-    val ids = listDir(dir)
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d+\\.json") =>
-        s.stripPrefix("v").stripSuffix(".json").toInt }
-    if (ids.isEmpty) None
-    else Some(readSnapshot(table, ids.max))
+    if (!Files.isDirectory(dir)) Seq.empty
+    else listDir(dir).map(_.getFileName.toString)
+      .collect { case ManifestName(id) => id.toInt }.sorted
   }
+
+  def lastSnapshot(table: String): Option[Snapshot] =
+    snapshotIds(table).lastOption.map(readSnapshot(table, _))
 
   def readSnapshot(table: String, id: Int): Snapshot = {
     val text = new String(
@@ -83,16 +95,43 @@ object SnapshotSink {
     * asserts against (reads must NOT parse history below a compaction). */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
 
+  /** Refuse `snap` unless its format equals `expected`, naming the table and
+    * every key that differs. */
+  private def requireFormat(table: String, snap: Snapshot,
+                            expected: Map[String, String], role: String): Unit = {
+    val keys = (snap.format.keySet ++ expected.keySet)
+      .filter(k => snap.format.get(k) != expected.get(k)).toSeq.sorted
+    def show(m: Map[String, String], k: String) = m.getOrElse(k, "<absent>")
+    require(keys.isEmpty,
+      s"table $table (v${snap.id}) has another format than the $role expects: " +
+        keys.map(k => s"$k=${show(snap.format, k)} (table) vs ${show(expected, k)} ($role)")
+          .mkString(", ") +
+        " — rebuild the table with the expected format, or write to another table")
+  }
+
+  /** The head snapshot, after refusing an append whose format differs. */
+  private def headFor(table: String, format: Map[String, String]): Option[Snapshot] = {
+    val head = lastSnapshot(table)
+    head.foreach(requireFormat(table, _, format, "writer"))
+    head
+  }
+
   /**
    * Append `df` to the table partitioned by `partitionCols`, committing a new
-   * snapshot. Returns the committed snapshot. `keyCol` is the resume identity.
+   * snapshot. Returns the committed snapshot. `keyCol` is the resume identity;
+   * `format` is the table-format contract (see the object doc).
    */
   def append(df: DataFrame, table: String, keyCol: String,
              partitionCols: Seq[String],
-             lineage: Map[String, String] = Map.empty): Snapshot = {
+             lineage: Map[String, String] = Map.empty,
+             format: Map[String, String] = Map.empty): Snapshot =
+    commit(df, table, keyCol, partitionCols, lineage, format, headFor(table, format))
+
+  private def commit(df: DataFrame, table: String, keyCol: String,
+                     partitionCols: Seq[String], lineage: Map[String, String],
+                     format: Map[String, String], parent: Option[Snapshot]): Snapshot = {
     val spark = df.sparkSession
     val t0 = System.currentTimeMillis()
-    val parent = lastSnapshot(table)
     val snapId = parent.map(_.id + 1).getOrElse(1)
     val tableRoot = Paths.get(table)
     Files.createDirectories(tableRoot)
@@ -142,7 +181,8 @@ object SnapshotSink {
       lineage ++ Map(
         "commit_millis" -> (System.currentTimeMillis() - t0).toString,
         "write_millis" -> (tWrite - t0).toString,
-        "fs_millis" -> (System.currentTimeMillis() - tWrite).toString))
+        "fs_millis" -> (System.currentTimeMillis() - tWrite).toString),
+      format)
     // manifest write IS the commit point (write temp + atomic rename)
     val dir = snapshotsDir(table)
     Files.createDirectories(dir)
@@ -156,6 +196,12 @@ object SnapshotSink {
   def read(spark: SparkSession, table: String): DataFrame =
     readAsOf(spark, table, Int.MaxValue)
 
+  /** Read the current committed state of a table of the given `format`:
+    * refuses the table if any manifest the read parses has another format
+    * (a table written before its format was recorded has an empty one). */
+  def read(spark: SparkSession, table: String, format: Map[String, String]): DataFrame =
+    load(spark, table, Int.MaxValue, Some(format))
+
   /**
    * Time travel: the table state as of snapshot `asOf` (inclusive) — the
    * union of the files of all snapshots ≤ asOf that are not subsumed by a
@@ -164,11 +210,16 @@ object SnapshotSink {
    * historical state (the Iceberg `VERSION AS OF` semantics over our
    * manifest chain).
    */
-  def readAsOf(spark: SparkSession, table: String, asOf: Int): DataFrame = {
+  def readAsOf(spark: SparkSession, table: String, asOf: Int): DataFrame =
+    load(spark, table, asOf, None)
+
+  private def load(spark: SparkSession, table: String, asOf: Int,
+                   format: Option[Map[String, String]]): DataFrame = {
     val snaps = snapshotsForRead(table, asOf)
     require(snaps.nonEmpty, s"no snapshots in $table at or before v$asOf")
+    format.foreach(f => snaps.foreach(requireFormat(table, _, f, "reader")))
     val root = Paths.get(table)
-    val files = activeFiles(snaps).map(f => root.resolve(f).toString)
+    val files = snaps.flatMap(_.files).map(f => root.resolve(f).toString)
     spark.read.option("basePath", table).parquet(files: _*).drop(snapDirCol)
   }
 
@@ -176,7 +227,8 @@ object SnapshotSink {
    * The manifests a read at `asOf` actually needs: walk ids NEWEST-FIRST and
    * stop descending once a compaction's `compacts_through` horizon covers the
    * rest — manifests below the horizon contribute no active files, so they
-   * are never opened or parsed. This bounds read planning to O(commits since
+   * are never opened or parsed, and the files of the returned snapshots are
+   * exactly the read's files. This bounds read planning to O(commits since
    * the last compaction) manifest parses + one directory listing, instead of
    * O(all history): with the documented compact-regularly operational
    * contract (any long-lived ingest should [[compact]] periodically anyway
@@ -186,17 +238,9 @@ object SnapshotSink {
    * history (maintenance ops, by design).
    */
   private def snapshotsForRead(table: String, asOf: Int): Seq[Snapshot] = {
-    val dir = snapshotsDir(table)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val ids = listDir(dir)
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d+\\.json") =>
-        s.stripPrefix("v").stripSuffix(".json").toInt }
-      .filter(_ <= asOf)
-      .sorted(Ordering[Int].reverse)
     var cutoff = 0
     val out = Seq.newBuilder[Snapshot]
-    val it = ids.iterator
+    val it = snapshotIds(table).filter(_ <= asOf).reverseIterator
     var go = true
     while (go && it.hasNext) {
       val id = it.next()
@@ -211,30 +255,14 @@ object SnapshotSink {
     out.result()
   }
 
-  /** Files visible for the state defined by `snaps` (ids ≤ some asOf):
-    * newest-first walk; a compaction snapshot subsumes every snapshot with
-    * id ≤ its `compacts_through`. */
-  private def activeFiles(snaps: Seq[Snapshot]): Seq[String] = {
-    var cutoff = 0
-    val out = Seq.newBuilder[String]
-    snaps.sortBy(-_.id).foreach { s =>
-      if (s.id > cutoff) {
-        out ++= s.files
-        s.lineage.get("compacts_through")
-          .foreach(t => cutoff = math.max(cutoff, t.toInt))
-      }
-    }
-    out.result()
-  }
-
   /**
    * Compaction: rewrite the CURRENT state as one snapshot whose manifest
-   * carries `compacts_through = <previous head id>` — readers at or after
-   * the compaction see only the rewritten files, while time travel below it
-   * still resolves the original small files (they stay on disk until
-   * [[vacuum]]). The small-file problem of a many-append ingest (one file
-   * per writer task per commit) is repaired without breaking atomicity:
-   * the compaction is itself an ordinary manifest-last commit.
+   * carries `compacts_through = <previous head id>` and the head's format —
+   * readers at or after the compaction see only the rewritten files, while
+   * time travel below it still resolves the original small files (they stay
+   * on disk until [[vacuum]]). The small-file problem of a many-append ingest
+   * (one file per writer task per commit) is repaired without breaking
+   * atomicity: the compaction is itself an ordinary manifest-last commit.
    */
   def compact(spark: SparkSession, table: String, keyCol: String,
               partitionCols: Seq[String],
@@ -248,8 +276,8 @@ object SnapshotSink {
       else current.repartition( // up-to-k files per partition dir (hash split on the key)
         partitionCols.map(col) :+
           pmod(xxhash64(col(keyCol)), lit(filesPerPartition)): _*)
-    append(compacted, table, keyCol, partitionCols,
-      Map("compacts_through" -> head.id.toString))
+    commit(compacted, table, keyCol, partitionCols,
+      Map("compacts_through" -> head.id.toString), head.format, Some(head))
   }
 
   /**
@@ -289,8 +317,9 @@ object SnapshotSink {
   def vacuumOrphans(table: String): Seq[String] = {
     val root = Paths.get(table)
     if (!Files.isDirectory(root)) return Seq.empty
-    val head = lastSnapshot(table).map(_.id).getOrElse(0)
-    val referenced = allSnapshots(table).flatMap(_.files)
+    val snaps = allSnapshots(table)
+    val head = snaps.lastOption.map(_.id).getOrElse(0)
+    val referenced = snaps.flatMap(_.files)
     val DataDir = (java.util.regex.Pattern.quote(snapDirCol) + "=snap(\\d+)-.*").r
     listDir(root).flatMap { p =>
       p.getFileName.toString match {
@@ -303,16 +332,8 @@ object SnapshotSink {
     }
   }
 
-  def allSnapshots(table: String): Seq[Snapshot] = {
-    val dir = snapshotsDir(table)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    listDir(dir)
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d+\\.json") =>
-        s.stripPrefix("v").stripSuffix(".json").toInt }
-      .sorted
-      .map(readSnapshot(table, _))
-  }
+  def allSnapshots(table: String): Seq[Snapshot] =
+    snapshotIds(table).map(readSnapshot(table, _))
 
   /**
    * Resumable append: write only input rows whose `keyCol` is not yet in the
@@ -320,8 +341,9 @@ object SnapshotSink {
    */
   def appendMissing(df: DataFrame, table: String, keyCol: String,
                     partitionCols: Seq[String],
-                    lineage: Map[String, String] = Map.empty): Option[Snapshot] =
-    appendMissingImpl(df, table, keyCol, partitionCols, None, lineage)
+                    lineage: Map[String, String] = Map.empty,
+                    format: Map[String, String] = Map.empty): Option[Snapshot] =
+    appendMissingImpl(df, table, keyCol, partitionCols, None, lineage, format)
 
   /**
    * Partition-scoped resume: like [[appendMissing]] but the anti-join probes
@@ -336,15 +358,18 @@ object SnapshotSink {
    */
   def appendMissingScoped(df: DataFrame, table: String, keyCol: String,
                           partitionCols: Seq[String], scope: org.apache.spark.sql.Column,
-                          lineage: Map[String, String] = Map.empty): Option[Snapshot] =
-    appendMissingImpl(df, table, keyCol, partitionCols, Some(scope), lineage)
+                          lineage: Map[String, String] = Map.empty,
+                          format: Map[String, String] = Map.empty): Option[Snapshot] =
+    appendMissingImpl(df, table, keyCol, partitionCols, Some(scope), lineage, format)
 
   private def appendMissingImpl(df: DataFrame, table: String, keyCol: String,
                                 partitionCols: Seq[String],
                                 scope: Option[org.apache.spark.sql.Column],
-                                lineage: Map[String, String]): Option[Snapshot] = {
+                                lineage: Map[String, String],
+                                format: Map[String, String]): Option[Snapshot] = {
     val spark = df.sparkSession
-    val fresh = lastSnapshot(table) match {
+    val head = headFor(table, format)
+    val fresh = head match {
       case None => df
       case Some(_) =>
         val committed = read(spark, table)
@@ -352,7 +377,7 @@ object SnapshotSink {
         df.join(existing, Seq(keyCol), "left_anti")
     }
     if (fresh.isEmpty) None
-    else Some(append(fresh, table, keyCol, partitionCols, lineage))
+    else Some(commit(fresh, table, keyCol, partitionCols, lineage, format, head))
   }
 
   /** Commits with at most this many files read footers on the driver pool;
@@ -407,87 +432,50 @@ object SnapshotSink {
     try reader.getRecordCount finally reader.close()
   }
 
-  // ------------------------------------------------------------- json (flat)
+  // ------------------------------------------------------------- manifest
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
+  /** A manifest is one JSON object, rendered and parsed through json4s's AST
+    * (Spark's own schema-JSON codec, already on the classpath). Map keys are
+    * written sorted so a manifest's bytes are a function of its content. */
   private def renderSnapshot(s: Snapshot): String = {
-    val files = s.files.map(f => "\"" + esc(f) + "\"").mkString("[", ",", "]")
-    val parts = s.partitionRowCounts.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
-    val lin = s.lineage.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
-    s"""{"id":${s.id},"parent_id":${s.parentId},"row_count":${s.rowCount},""" +
-      s""""key_col":"${esc(s.keyCol)}","files":$files,""" +
-      s""""partition_row_counts":$parts,"lineage":$lin}"""
+    def obj[V](m: Map[String, V])(v: V => JValue): JObject =
+      JObject(m.toList.sortBy(_._1).map { case (k, x) => k -> v(x) })
+    JsonMethods.compact(JObject(
+      "id" -> JInt(s.id),
+      "parent_id" -> JInt(s.parentId),
+      "row_count" -> JInt(s.rowCount),
+      "key_col" -> JString(s.keyCol),
+      "files" -> JArray(s.files.map(JString(_)).toList),
+      "partition_row_counts" -> obj(s.partitionRowCounts)(JInt(_)),
+      "lineage" -> obj(s.lineage)(JString(_)),
+      "format" -> obj(s.format)(JString(_))))
   }
 
-  /** Minimal parser for the flat JSON we render (no nested objects beyond the
-    * two maps, no arrays of objects). */
+  /** Inverse of [[renderSnapshot]]. An absent map reads as empty: a manifest
+    * written before the format contract has no `format` and an empty format. */
   private def parseSnapshot(text: String): Snapshot = {
-    def intField(name: String): Long = {
-      val m = ("\"" + name + "\":(-?\\d+)").r.findFirstMatchIn(text)
-      m.get.group(1).toLong
+    val json = JsonMethods.parse(text)
+    def bad(k: String) = new IllegalStateException(s"manifest field '$k' missing or mistyped")
+    def num(k: String)(v: JValue): Long = v match {
+      case JInt(n) => n.toLong
+      case _ => throw bad(k)
     }
-    def strField(name: String): String = {
-      val m = ("\"" + name + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(text)
-      unesc(m.get.group(1))
+    def str(k: String)(v: JValue): String = v match {
+      case JString(x) => x
+      case _ => throw bad(k)
     }
-    def block(name: String, open: Char, close: Char): String = {
-      val start = text.indexOf("\"" + name + "\":") + name.length + 3
-      var depth = 0; var i = start; val sb = new StringBuilder
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (c == open) depth += 1
-        if (depth > 0) sb.append(c)
-        if (c == close) { depth -= 1; if (depth == 0) return sb.toString }
-        i += 1
-      }
-      sb.toString
+    def obj[V](k: String)(v: String => JValue => V): Map[String, V] = json \ k match {
+      case JObject(kvs) => kvs.map { case (kk, x) => kk -> v(k)(x) }.toMap
+      case JNothing => Map.empty
+      case _ => throw bad(k)
     }
-    val filesBlock = block("files", '[', ']')
-    val files = "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(filesBlock).map(m => unesc(m.group(1))).toSeq
-    val partsBlock = block("partition_row_counts", '{', '}')
-    val parts = "\"((?:[^\"\\\\]|\\\\.)*)\":(\\d+)".r
-      .findAllMatchIn(partsBlock).map(m => unesc(m.group(1)) -> m.group(2).toLong).toMap
-    val linBlock = block("lineage", '{', '}')
-    val lin = "\"((?:[^\"\\\\]|\\\\.)*)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(linBlock).map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-    Snapshot(intField("id").toInt, intField("parent_id").toInt, files,
-      intField("row_count"), parts, strField("key_col"), lin)
-  }
-
-  /** Single-pass inverse of [[esc]]: sequential String.replace corrupted
-    * "\\n" (escaped backslash + n → backslash-newline) and never decoded the
-    * \WWWW control escapes — paths/lineage with backslashes or control chars
-    * must round-trip exactly for resume to work. */
-  private def unesc(s: String): String = {
-    if (s.indexOf('\\') < 0) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case _ => sb.append(c); i += 1 // not one of ours: keep literally
-        }
-      } else { sb.append(c); i += 1 }
+    val files = json \ "files" match {
+      case JArray(fs) => fs.map(str("files"))
+      case _ => throw bad("files")
     }
-    sb.toString
+    Snapshot(num("id")(json \ "id").toInt, num("parent_id")(json \ "parent_id").toInt,
+      files, num("row_count")(json \ "row_count"), obj("partition_row_counts")(num),
+      str("key_col")(json \ "key_col"), obj("lineage")(str), obj("format")(str))
   }
 
   private def deleteRecursively(p: Path): Unit = {

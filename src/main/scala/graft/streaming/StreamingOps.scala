@@ -156,6 +156,9 @@ object StreamingOps {
       }
       .start()
 
+  /** Sink format of [[hammingNearDupDoor]]'s signature table. */
+  private val hammingSigFormat = Map("op" -> "hamming_signatures")
+
   /** Streaming door for INCREMENTAL 64-bit Hamming near-dup — the
     * image-ingest twin of [[nearDupDoor]] (phash/dhash/simhash instead of
     * MinHash): the stream carries precomputed signatures (one long per
@@ -178,7 +181,7 @@ object StreamingOps {
         val D = graft.operators.Dedup
         val sigs = batch.toDF().select(col(idCol), col(bitsCol))
         val oldSigs = graft.sink.SnapshotSink.lastSnapshot(sigTable) match {
-          case Some(_) => graft.sink.SnapshotSink.read(spark, sigTable)
+          case Some(_) => graft.sink.SnapshotSink.read(spark, sigTable, hammingSigFormat)
           case None => sigs.limit(0)
         }
         val pairs = D.hammingPairs64Incremental(sigs, oldSigs, idCol, bitsCol,
@@ -187,8 +190,7 @@ object StreamingOps {
         graft.sink.SnapshotSink.appendMissing(pairs, pairsTable, "pair_key",
           Seq.empty, lineage = Map("stream_batch_id" -> batchId.toString))
         graft.sink.SnapshotSink.appendMissing(sigs, sigTable, idCol, Seq.empty,
-          lineage = Map("stream_batch_id" -> batchId.toString,
-            "op" -> "hamming_signatures"))
+          lineage = Map("stream_batch_id" -> batchId.toString), format = hammingSigFormat)
         ()
       }
       .start()
@@ -202,9 +204,10 @@ object StreamingOps {
     * keyed `id_a:id_b`, then the batch's nearest-centroid assignments
     * append to `assignTable` — old vectors are never re-assigned (the
     * k_c·d dominant cost is paid once per vector), batch replays are
-    * idempotent in either order, and the centroid-model fingerprint rides
-    * the snapshot lineage so a model swap fails loudly instead of silently
-    * mis-bucketing ([[graft.operators.Similarity.readSemanticAssignments]]). */
+    * idempotent in either order, and the centroid-model fingerprint is the
+    * assignment table's sink format, so a model swap fails loudly instead of
+    * silently mis-bucketing
+    * ([[graft.operators.Similarity.readSemanticAssignments]]). */
   def semanticNearDupDoor(items: DataFrame, assignTable: String,
                           pairsTable: String, checkpointDir: String,
                           idCol: String, vecCol: String,

@@ -278,7 +278,7 @@ class CurationSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException] {
       Curation.readParagraphFingerprints(spark, table, delim = "\n\n")
     }
-    assert(ex.getMessage.contains("delimiter"))
+    assert(ex.getMessage.contains("delim_hex"))
   }
 
   test("drop_token_ranges: overlap merge, out-of-bounds clamp, empty ranges " +

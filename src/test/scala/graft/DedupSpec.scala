@@ -249,6 +249,29 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("a compacted signature table stays readable under its own LSH " +
+    "parameters and refuses other ones, on read and on append") {
+    val table = java.nio.file.Files.createTempDirectory("graft_sig_compact")
+      .resolve("sigs").toString
+    Dedup.persistMinhashSignatures(docs.where(col("doc_id") < 30), table,
+      "doc_id", "text", shingleN = 3, numHashes = 64)
+    Dedup.persistMinhashSignatures(docs, table, "doc_id", "text",
+      shingleN = 3, numHashes = 64)
+    graft.sink.SnapshotSink.compact(spark, table, "doc_id", Seq.empty)
+    assert(Dedup.readMinhashSignatures(spark, table, shingleN = 3, numHashes = 64)
+      .count() == docs.count())
+    val read = intercept[IllegalArgumentException] {
+      Dedup.readMinhashSignatures(spark, table, shingleN = 5, numHashes = 64)
+    }
+    assert(read.getMessage.contains("shingle_n"), read.getMessage)
+    val heads = graft.sink.SnapshotSink.allSnapshots(table).map(_.id)
+    intercept[IllegalArgumentException] {
+      Dedup.persistMinhashSignatures(Seq((9999L, "alpha beta gamma delta"))
+        .toDF("doc_id", "text"), table, "doc_id", "text", shingleN = 5, numHashes = 64)
+    }
+    assert(graft.sink.SnapshotSink.allSnapshots(table).map(_.id) == heads)
+  }
+
   test("incremental plan: old-signature scans are COLUMN-PRUNED (banding " +
     "reads (id, sig) without sh; the corpus-wide sh column is never cached)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sig_plan")

@@ -74,6 +74,34 @@ class LearningSpec extends AnyFunSuite {
     }
   }
 
+  test("minted models are bit-identical whichever order the partitions " +
+    "finish in (lloydKMeans, learnPca, learnPq over 4 partitions)") {
+    // magnitudes spread over 8 decades: a different summation order shows
+    // up in the low bits of every sum
+    val r = new scala.util.Random(11)
+    val rows = (0 until 64).map(_ =>
+      org.apache.spark.sql.Row(Seq.fill(4)(r.nextGaussian() * math.pow(10, r.nextInt(9) - 4))))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vec", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.DoubleType, containsNull = false))))
+    // each scan of partition i sleeps so the four tasks finish in index order,
+    // or in reverse index order
+    def input(reverse: Boolean) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 4).mapPartitionsWithIndex { (i, it) =>
+        Thread.sleep(150L * (if (reverse) 3 - i else i)); it
+      }, schema)
+    def bits(m: Array[Array[Double]]): Seq[Seq[Long]] =
+      m.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+    def models(reverse: Boolean) = {
+      val (means, eig, vT) = Learning.learnPca(input(reverse), 3)
+      (bits(Learning.lloydKMeansSingle(input(reverse), 4, iterations = 3)),
+        bits(Array(means, eig) ++ vT),
+        bits(Learning.learnPq(input(reverse), m = 2, kS = 4, iterations = 3)
+          .subQuantizers.flatten))
+    }
+    assert(models(reverse = false) == models(reverse = true))
+  }
+
   test("learnPq pads unfillable clusters with the 1000-sentinel " +
     "(ProductQuantizationLearning.java:285–303)") {
     val few = spark.createDataFrame(

@@ -167,6 +167,17 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("size-derived input spread reads the table size through its " +
+    "FileSystem: a file: URI plans the same spread as the plain path") {
+    // sf0.1's documents (~0.6 MB) spread 4 ways in the 4-core test session
+    val dir = "/root/testdata/sf0.1"
+    def spread(d: String): Option[String] =
+      "RoundRobinPartitioning\\(\\d+\\)".r
+        .findFirstIn(planOf(SparkEntry.queries("q_ngram_topk")(spark, d)))
+    assert(spread(dir).contains("RoundRobinPartitioning(4)"))
+    assert(spread("file://" + dir) == spread(dir))
+  }
+
   test("blocklist is a single-projection plan like the other row-local ops") {
     val plan = planOf(SparkEntry.queries("q_blocklist")(spark, sf))
     assert(plan.linesIterator.count(_.contains("Exchange")) <= 1, plan.take(800))

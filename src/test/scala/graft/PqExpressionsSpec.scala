@@ -94,8 +94,8 @@ class PqExpressionsSpec extends AnyFunSuite {
     val scan = spark.read.parquet(dir)
       .withColumn("d", PqExpressions.adc_distance(col("pq_code"), col("list_id"),
         spark.sparkContext.broadcast(luts)))
-    // local relations constant-fold through the interpreted path; a parquet
-    // scan goes through WholeStageCodegen → doGenCode
+    // local relations constant-fold on the driver; a parquet scan runs the
+    // expression inside a whole-stage-codegen stage (CodegenFallback)
     assert(scan.queryExecution.executedPlan.toString.contains("*("))
     val got = scan.select("id", "d").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -292,6 +292,23 @@ class SimilaritySpec extends AnyFunSuite {
     got.foreach { case (_, li, _) => assert(probed(li), "un-probed list in result") }
   }
 
+  test("a compacted assignment table still refuses another centroid model") {
+    val centroids = vecs.take(8).map(_._2.map(_.toDouble)).toArray
+    val table = java.nio.file.Files.createTempDirectory("graft_sem_compact")
+      .resolve("assign").toString
+    Similarity.persistSemanticAssignments(corpus.where(col("vec_id") < 100), table,
+      "vec_id", "embedding", centroids)
+    Similarity.persistSemanticAssignments(corpus, table, "vec_id", "embedding",
+      centroids)
+    graft.sink.SnapshotSink.compact(spark, table, "vec_id", Seq.empty)
+    assert(Similarity.readSemanticAssignments(spark, table, centroids).count() == nVec)
+    val other = centroids.map(_.map(_ + 1.0))
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.readSemanticAssignments(spark, table, other)
+    }
+    assert(ex.getMessage.contains("centroid_md5"), ex.getMessage)
+  }
+
   test("ivfPqEncode matches the scalar kernels row-for-row (coarse assign, " +
     "residual, PQ code — one fused expression)") {
     val (centroids, pq) = pqSetup

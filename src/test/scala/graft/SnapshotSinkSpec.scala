@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -240,6 +242,73 @@ class SnapshotSinkSpec extends AnyFunSuite {
     weird.foreach { case (k, v) =>
       assert(back(k) == v, s"lineage[$k] corrupted: '${back(k)}' != '$v'")
     }
+  }
+
+  test("manifest round-trips partition values and lineage holding braces, " +
+    "brackets, quotes, backslashes, newlines and control characters") {
+    val table = tmpTable()
+    val weird = Seq("a}b", "c]d", "e{f", "q\"t", "b\\s", "n\nl", "c\u0001x")
+    val df = weird.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "part")
+    val lineage = weird.map(w => s"k$w" -> s"v$w}]").toMap
+    val snap = SnapshotSink.append(df, table, "id", Seq("part"), lineage)
+    assert(snap.partitionRowCounts.size == weird.size)
+    val back = SnapshotSink.readSnapshot(table, snap.id)
+    assert(back.files == snap.files)
+    assert(back.partitionRowCounts == snap.partitionRowCounts)
+    assert(back.lineage == snap.lineage)
+  }
+
+  test("a manifest in the pre-format layout parses to the same Snapshot " +
+    "(no format field → empty format)") {
+    val table = tmpTable()
+    val text = "{\"id\":3,\"parent_id\":2,\"row_count\":5,\"key_col\":\"id\"," +
+      "\"files\":[\"_snapdir=snap3-u/part=a}b/p0.parquet\"," +
+      "\"_snapdir=snap3-u/part=c/p1.parquet\"]," +
+      "\"partition_row_counts\":{\"a}b\":2,\"c\":3}," +
+      "\"lineage\":{\"commit_millis\":\"12\"," +
+      "\"note\":\"x}y \\\"q\\\" C:\\\\d\\nz\\u0001\"}}"
+    val dir = java.nio.file.Paths.get(table, "_snapshots")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve("v3.json"), text.getBytes("UTF-8"))
+    assert(SnapshotSink.readSnapshot(table, 3) == SnapshotSink.Snapshot(3, 2,
+      Seq("_snapdir=snap3-u/part=a}b/p0.parquet", "_snapdir=snap3-u/part=c/p1.parquet"),
+      5L, Map("a}b" -> 2L, "c" -> 3L), "id",
+      Map("commit_millis" -> "12", "note" -> "x}y \"q\" C:\\d\nz\u0001"), Map.empty))
+  }
+
+  test("an append under another format is refused before it writes: the " +
+    "table's files, manifests and read are unchanged; compact keeps the format") {
+    val table = tmpTable()
+    val fmt = Map("op" -> "unit", "n" -> "3")
+    val other = Map("op" -> "unit", "n" -> "5")
+    SnapshotSink.append(data(0 until 10), table, "id", Seq("part"), format = fmt)
+    def state = {
+      val s = Files.walk(java.nio.file.Paths.get(table))
+      val paths = try s.iterator().asScala.map(_.toString).toSeq.sorted finally s.close()
+      (paths, SnapshotSink.read(spark, table, fmt).collect().map(_.toString).sorted.toSeq)
+    }
+    val before = state
+    intercept[IllegalArgumentException] {
+      SnapshotSink.append(data(10 until 20), table, "id", Seq("part"), format = other)
+    }
+    intercept[IllegalArgumentException] {
+      SnapshotSink.append(data(10 until 20), table, "id", Seq("part"))
+    }
+    intercept[IllegalArgumentException] {
+      SnapshotSink.appendMissing(data(0 until 20), table, "id", Seq("part"),
+        format = other)
+    }
+    intercept[IllegalArgumentException] {
+      SnapshotSink.appendMissingScoped(data(0 until 20), table, "id", Seq("part"),
+        col("part") === 1, format = other)
+    }
+    assert(state == before)
+    val ex = intercept[IllegalArgumentException](SnapshotSink.read(spark, table, other))
+    assert(ex.getMessage.contains(table) && ex.getMessage.contains("n=3"), ex.getMessage)
+    assert(!ex.getMessage.contains("op="), ex.getMessage)
+    assert(SnapshotSink.compact(spark, table, "id", Seq("part")).format == fmt)
+    SnapshotSink.append(data(10 until 20), table, "id", Seq("part"), format = fmt)
+    assert(SnapshotSink.read(spark, table, fmt).count() == 20)
   }
 
   test("index transformation: truncate+renorm to a new snapshot table " +

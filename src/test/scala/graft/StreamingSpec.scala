@@ -294,7 +294,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.operators.Similarity.readSemanticAssignments(spark, assignTable,
         other)
     }
-    assert(ex.getMessage.contains("centroid model"))
+    assert(ex.getMessage.contains("centroid_md5"))
   }
 
   test("paragraphDedupDoor: streamed cleaned ledger == one-shot batch " +
