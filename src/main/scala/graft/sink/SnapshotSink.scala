@@ -2,11 +2,32 @@ package graft.sink
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.PosixFilePermission
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter,
+  OutputWriterFactory, PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions,
+  ParquetUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.util.SerializableConfiguration
 import org.json4s.{JArray, JInt, JNothing, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
@@ -17,19 +38,28 @@ import org.json4s.jackson.JsonMethods
  * would be a thin adapter over this seam).
  *
  * Guarantees:
- *  - atomic RENAME-FREE commit: tasks write their final paths directly — each
- *    snapshot owns a unique `_snapdir=snap{N}-<uuid>/` subtree under the table
- *    root, and the manifest (the commit point) lists exactly the files that
- *    subtree produced. No driver-side file moves ever happen, so commit cost
- *    does not scale with file count (at a 10⁵-file commit a move loop — even
- *    16-wide — is the bottleneck; real table formats avoid renames entirely).
- *    A crash before the manifest leaves an unreferenced subtree that readers
- *    never see; [[vacuumOrphans]] sweeps it. (The reference's single-writer
- *    BDB sink, ds/AbstractSearchStructure.java:229–257, becomes concurrent
+ *  - atomic RENAME-FREE commit: write tasks write their final paths directly
+ *    — each snapshot owns a unique `_snapdir=snap{N}-<uuid>/` subtree under
+ *    the table root, laid out as `partitionBy(...).parquet` lays it out. There
+ *    is no Hadoop output committer: no temporary attempt dirs, no renames, no
+ *    `_SUCCESS` marker, the Hadoop configuration ships to the tasks once, as
+ *    a broadcast, and a local table is written through
+ *    [[LocalWriteFileSystem]], which forks no `chmod`. Each task returns,
+ *    per file it wrote, the file's path, its partition values and its row
+ *    count; the manifest (the commit point) lists the files that successful
+ *    task attempts returned, and its row counts are those tasks' counts, so
+ *    the driver neither lists the subtree nor reads a footer. File names carry the task's partition id and
+ *    attempt number; a commit that saw a retried or speculative attempt
+ *    deletes the subtree's files no successful attempt returned. A crash
+ *    before the manifest leaves an unreferenced subtree that readers never
+ *    see; [[vacuumOrphans]] sweeps it. (The reference's single-writer BDB
+ *    sink, ds/AbstractSearchStructure.java:229–257, becomes concurrent
  *    partitioned file commits with a manifest-last protocol.)
  *  - resume: `appendMissing` left-anti-joins the input against already-
  *    committed keys (the F2 already-indexed dedup,
- *    ds/AbstractSearchStructure.java:537–546);
+ *    ds/AbstractSearchStructure.java:537–546) and writes the rest in one
+ *    evaluation: when nothing is left, the empty subtree is deleted and no
+ *    manifest is committed;
  *  - lineage + metrics per snapshot (north rule): per-partition row counts,
  *    key column, model versions present, wall-clock, parent snapshot id;
  *  - one table format: every manifest records the writer's `format` tags
@@ -62,11 +92,6 @@ object SnapshotSink {
     * directory fd otherwise — it accumulates in a long-lived driver). */
   private def listDir(dir: Path): Seq[Path] = {
     val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
-  private def walkFiles(root: Path): Seq[Path] = {
-    val s = Files.walk(root)
     try s.iterator().asScala.toSeq finally s.close()
   }
 
@@ -125,16 +150,18 @@ object SnapshotSink {
              partitionCols: Seq[String],
              lineage: Map[String, String] = Map.empty,
              format: Map[String, String] = Map.empty): Snapshot =
-    commit(df, table, keyCol, partitionCols, lineage, format, headFor(table, format))
+    commit(df, table, keyCol, partitionCols, lineage, format, headFor(table, format),
+      commitEmpty = true).get
 
+  /** Write `df` as snapshot `parent + 1` and commit its manifest. A write of
+    * no rows commits only when `commitEmpty`; otherwise its subtree is
+    * deleted and the result is None. */
   private def commit(df: DataFrame, table: String, keyCol: String,
                      partitionCols: Seq[String], lineage: Map[String, String],
-                     format: Map[String, String], parent: Option[Snapshot]): Snapshot = {
-    val spark = df.sparkSession
+                     format: Map[String, String], parent: Option[Snapshot],
+                     commitEmpty: Boolean): Option[Snapshot] = {
     val t0 = System.currentTimeMillis()
     val snapId = parent.map(_.id + 1).getOrElse(1)
-    val tableRoot = Paths.get(table)
-    Files.createDirectories(tableRoot)
 
     // rename-free: tasks write FINAL paths directly into a snapshot-unique
     // subtree. The subtree is itself named as a partition dir
@@ -145,39 +172,25 @@ object SnapshotSink {
     // subtree from naive recursive discovery, and until the manifest below is
     // written nothing references these files — a crashed attempt is invisible
     // and [[vacuumOrphans]] reclaims it.
-    val dataDir = tableRoot.resolve(
-      s"$snapDirCol=snap$snapId-${java.util.UUID.randomUUID().toString}")
-    df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(dataDir.toString)
+    val subdir = s"$snapDirCol=snap$snapId-${java.util.UUID.randomUUID().toString}"
+    val dataDir = Paths.get(table).resolve(subdir)
+    Files.createDirectories(dataDir)
+    val written = writeFiles(df, table, subdir, partitionCols)
     val tWrite = System.currentTimeMillis()
+    val rowCount = written.map(_.rows).sum
+    if (rowCount == 0 && !commitEmpty) {
+      deleteRecursively(dataDir)
+      return None
+    }
 
-    val written: Seq[String] = walkFiles(dataDir)
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .map(p => tableRoot.relativize(p).toString)
-
-    // per-partition row counts from parquet footers — metadata-only, O(files)
-    // not O(rows). Small commits read footers on a bounded driver pool; above
-    // the threshold the footer pass runs as a distributed Spark job so no
-    // O(files) driver loop survives at a 10⁵-file commit.
-    val counts: Seq[(String, Long)] =
-      if (written.sizeIs <= driverFooterThreshold)
-        inParallel(written)(f => f -> parquetRowCount(tableRoot.resolve(f)))
-      else distributedRowCounts(spark, tableRoot, written)
-    val partCounts: Map[String, Long] = counts
-      .groupBy { case (f, _) =>
-        val dir = Option(Paths.get(f).getParent).map(_.toString).getOrElse("")
-        // "salt=3/salt2=…" → "3/…" (values only, matching groupBy output);
-        // the synthetic snapshot-dir level is not a data partition
-        dir.split("/")
-          .filter(s => s.contains("=") && !s.startsWith(snapDirCol + "="))
-          .map(_.split("=", 2)(1)).mkString("/")
-      }
-      .map { case (part, fs) => part -> fs.map(_._2).sum }
-    val rowCount = partCounts.values.sum
-
-    val snap = Snapshot(snapId, parent.map(_.id).getOrElse(0), written, rowCount,
-      partCounts, keyCol,
+    // per-partition row counts from the tasks' typed partition values:
+    // "3/…" (values only, joined by '/', matching a groupBy over the data,
+    // which reads a null or empty value back as null)
+    val partCounts: Map[String, Long] = written.groupMapReduce(
+      _.values.map(v => if (v == null || v.isEmpty) nullPartition else v).mkString("/"))(
+      _.rows)(_ + _)
+    val snap = Snapshot(snapId, parent.map(_.id).getOrElse(0), written.map(_.file),
+      rowCount, partCounts, keyCol,
       lineage ++ Map(
         "commit_millis" -> (System.currentTimeMillis() - t0).toString,
         "write_millis" -> (tWrite - t0).toString,
@@ -189,7 +202,163 @@ object SnapshotSink {
     val tmp = dir.resolve(s".v$snapId.json.tmp")
     Files.write(tmp, renderSnapshot(snap).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, dir.resolve(s"v$snapId.json"), StandardCopyOption.ATOMIC_MOVE)
-    snap
+    Some(snap)
+  }
+
+  /** The partition directory value Spark writes for a null or empty value. */
+  private val nullPartition = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+
+  /** One file a write task wrote: its path relative to the table root, its
+    * partition values cast to strings in the session time zone (null for a
+    * null value) and its row count. */
+  private final case class Written(file: String, values: Seq[String], rows: Long)
+
+  /**
+   * Write `df` as parquet under `table/subdir`, partitioned by
+   * `partitionCols`, in one Spark job that query listeners see as an
+   * execution. Each input partition is sorted by the partition columns and
+   * each task writes one file per partition directory it meets, through
+   * Spark's parquet writer factory, with the Hadoop conf broadcast once.
+   * Returns the files the successful task attempts wrote; when a task was
+   * retried, or speculation may have run a second copy, every other file in
+   * the subtree is deleted first.
+   */
+  private def writeFiles(df: DataFrame, table: String, subdir: String,
+                         partitionCols: Seq[String]): Seq[Written] = {
+    val spark = df.sparkSession
+    val sqlConf = spark.sessionState.conf
+    val sorted =
+      if (partitionCols.isEmpty) df else df.sortWithinPartitions(partitionCols.map(col): _*)
+    val qe = sorted.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("snapshot append")) {
+      // the checks `partitionBy(...).parquet` makes: partition columns exist,
+      // are atomic and leave a data column; parquet can store the rest
+      val output = qe.executedPlan.output
+      PartitioningUtils.validatePartitionColumn(DataTypeUtils.fromAttributes(output),
+        partitionCols, sqlConf.caseSensitiveAnalysis)
+      val partAttrs = partitionCols.map(c => output.find(a => sqlConf.resolver(a.name, c)).get)
+      val dataAttrs = output.filterNot(a => partAttrs.exists(_.exprId == a.exprId))
+      val dataSchema = DataTypeUtils.fromAttributes(dataAttrs)
+      DataSourceUtils.verifySchema(new ParquetFileFormat, dataSchema)
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      // `file:` paths go through LocalWriteFileSystem, not the JVM-wide
+      // cached LocalFileSystem (see its doc)
+      job.getConfiguration.set("fs.file.impl", classOf[LocalWriteFileSystem].getName)
+      job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
+      val factory = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
+        new ParquetOptions(Map.empty[String, String], sqlConf))
+      val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+      try {
+        val task = new WriteTask(table, subdir, output, partAttrs, dataAttrs, factory,
+          conf, java.util.UUID.randomUUID().toString.take(8), sqlConf.sessionLocalTimeZone)
+        val rdd = qe.toRdd
+        // an input with no partitions still runs one (empty) task, as Spark's
+        // writer does, so an unpartitioned table keeps a schema-bearing file
+        val input =
+          if (rdd.getNumPartitions > 0) rdd
+          else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+        val results = spark.sparkContext.runJob(input, task.run _)
+        val written = results.toSeq.flatMap(_._1)
+        val sawRetry = results.exists(_._2 > 0) ||
+          spark.sparkContext.getConf.getBoolean("spark.speculation", defaultValue = false)
+        if (sawRetry) dropUnreturned(job.getConfiguration, table, subdir, written.map(_.file))
+        written
+      } finally conf.destroy()
+    }
+  }
+
+  /** Delete every file under `table/subdir` that is not in `keep` (paths
+    * relative to the table root), through the Hadoop FileSystem the tasks
+    * wrote with, and return the deleted paths: the files of failed or
+    * losing task attempts. */
+  private[graft] def dropUnreturned(conf: Configuration, table: String, subdir: String,
+                                    keep: Seq[String]): Seq[String] = {
+    val root = new HPath(table)
+    val fs = root.getFileSystem(conf)
+    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    val kept = keep.toSet
+    val stale = ArrayBuffer.empty[String]
+    val it = fs.listFiles(new HPath(root, subdir), true)
+    while (it.hasNext) {
+      val rel = it.next().getPath.toUri.getPath.stripPrefix(prefix)
+      if (!kept(rel)) stale += rel
+    }
+    stale.foreach(f => fs.delete(new HPath(root, f), false))
+    stale.toSeq
+  }
+
+  /** The write task: the rows of one input partition, sorted by the
+    * partition columns, become one parquet file per partition directory. */
+  private final class WriteTask(
+      table: String, subdir: String, output: Seq[Attribute], partAttrs: Seq[Attribute],
+      dataAttrs: Seq[Attribute], factory: OutputWriterFactory,
+      conf: Broadcast[SerializableConfiguration], jobTag: String, timeZone: String)
+      extends Serializable {
+
+    /** The files this attempt wrote, and its attempt number. */
+    def run(ctx: TaskContext, rows: Iterator[InternalRow]): (Seq[Written], Int) = {
+      val partition = ctx.partitionId()
+      val attempt = ctx.attemptNumber()
+      val hadoopAttempt = new TaskAttemptContextImpl(new JobConf(conf.value.value),
+        new TaskAttemptID(jobTag, ctx.stageId(), TaskType.MAP, partition, attempt))
+      val ext = factory.getFileExtension(hadoopAttempt)
+      val partKey = UnsafeProjection.create(partAttrs, output)
+      // the directory text Spark renders: the value's string cast in the
+      // session time zone, path-escaped, __HIVE_DEFAULT_PARTITION__ for null
+      val partStrings = UnsafeProjection.create(
+        partAttrs.map(a => Cast(a, StringType, Some(timeZone))), partAttrs)
+      val dataRow = UnsafeProjection.create(dataAttrs, output)
+      val dataSchema = DataTypeUtils.fromAttributes(dataAttrs)
+      val out = ArrayBuffer.empty[Written]
+      var writer: OutputWriter = null
+      var file = ""
+      var values: Seq[String] = Nil
+      var n = 0L
+
+      def open(vs: Seq[String]): Unit = {
+        val dir = partAttrs.zip(vs)
+          .map { case (a, v) => ExternalCatalogUtils.getPartitionPathString(a.name, v) + "/" }
+          .mkString
+        file = f"$subdir/${dir}part-$partition%05d-$attempt-c${out.size}%03d$ext"
+        values = vs
+        n = 0L
+        writer = factory.newInstance(s"$table/$file", dataSchema, hadoopAttempt)
+      }
+      def close(): Unit = if (writer != null) {
+        val w = writer
+        writer = null
+        w.close()
+        out += Written(file, values, n)
+      }
+
+      try {
+        if (partAttrs.isEmpty) {
+          // as in Spark's writer, task 0 writes a file even when empty
+          if (rows.hasNext || partition == 0) open(Nil)
+          rows.foreach { r => writer.write(r); n += 1 }
+        } else {
+          var key: UnsafeRow = null
+          rows.foreach { r =>
+            val k = partKey(r)
+            if (key == null || k != key) {
+              close()
+              key = k.copy()
+              val vs = partStrings(key)
+              open(partAttrs.indices.map(i =>
+                if (vs.isNullAt(i)) null else vs.getUTF8String(i).toString))
+            }
+            writer.write(dataRow(r))
+            n += 1
+          }
+        }
+        close()
+      } catch {
+        case e: Throwable =>
+          if (writer != null) try writer.close() catch { case s: Throwable => e.addSuppressed(s) }
+          throw e
+      }
+      (out.toSeq, attempt)
+    }
   }
 
   /** Read the current committed state. */
@@ -277,7 +446,8 @@ object SnapshotSink {
         partitionCols.map(col) :+
           pmod(xxhash64(col(keyCol)), lit(filesPerPartition)): _*)
     commit(compacted, table, keyCol, partitionCols,
-      Map("compacts_through" -> head.id.toString), head.format, Some(head))
+      Map("compacts_through" -> head.id.toString), head.format, Some(head),
+      commitEmpty = true).get
   }
 
   /**
@@ -376,60 +546,7 @@ object SnapshotSink {
         val existing = scope.fold(committed)(committed.where(_)).select(col(keyCol))
         df.join(existing, Seq(keyCol), "left_anti")
     }
-    if (fresh.isEmpty) None
-    else Some(commit(fresh, table, keyCol, partitionCols, lineage, format, head))
-  }
-
-  /** Commits with at most this many files read footers on the driver pool;
-    * larger commits run the footer pass as a distributed Spark job. Test
-    * override via -Dgraft.snapshot.driverCountThreshold. */
-  private def driverFooterThreshold: Int =
-    sys.props.get("graft.snapshot.driverCountThreshold").map(_.toInt).getOrElse(256)
-
-  /** Per-file row counts as a Spark job: the file list is itself distributed
-    * and each executor reads its footers — no O(files) driver loop, which is
-    * what a 10⁵-file commit needs. */
-  private def distributedRowCounts(spark: SparkSession, root: Path,
-                                   files: Seq[String]): Seq[(String, Long)] = {
-    val rootStr = root.toString
-    import spark.implicits._
-    spark.createDataset(files)
-      .repartition(math.min(files.size,
-        spark.sparkContext.defaultParallelism * 2))
-      .map(f => (f, parquetRowCount(Paths.get(rootStr, f))))
-      .collect().toSeq
-  }
-
-  /** Order-preserving parallel map on a bounded driver pool (commit metadata
-    * I/O: small-commit footer reads). */
-  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    if (items.sizeIs <= 1) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, items.size))
-    try {
-      val futures = items.map(a => pool.submit(
-        new java.util.concurrent.Callable[B] { override def call(): B = f(a) }))
-      try futures.map(_.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          // first failure wins: cancel everything still queued/running so no
-          // further moves mutate the table dir after the commit has failed,
-          // and surface the real cause (not the ExecutionException wrapper)
-          futures.foreach(_.cancel(true))
-          pool.shutdownNow()
-          throw Option(e.getCause).getOrElse(e)
-      }
-    } finally { pool.shutdown(); () }
-  }
-
-  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
-
-  /** Row count from a parquet file footer (driver-side, no Spark job). */
-  private def parquetRowCount(file: Path): Long = {
-    val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toString), hadoopConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(input)
-    try reader.getRecordCount finally reader.close()
+    commit(fresh, table, keyCol, partitionCols, lineage, format, head, commitEmpty = false)
   }
 
   // ------------------------------------------------------------- manifest
@@ -481,5 +598,29 @@ object SnapshotSink {
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
+  }
+}
+
+/**
+ * The local file system [[SnapshotSink]]'s write tasks use for `file:`
+ * tables. Hadoop's `LocalFileSystem` writes a `.crc` side file next to every
+ * file, and without Hadoop's native library its `setPermission` forks a
+ * `chmod` process for every file and directory it creates: two forks per
+ * parquet file (the file and its `.crc`) and one per new partition directory,
+ * which made opening a writer cost ~20 ms on a 4-CPU VM (JFR: 16 `chmod`
+ * process starts per perfbench ingest op). This raw local file system writes
+ * no side files and sets the same permissions through java.nio. Spark reads
+ * the files through the ordinary `LocalFileSystem`, which skips the checksum
+ * of a file that has none.
+ */
+final class LocalWriteFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: HPath, permission: FsPermission): Unit = {
+    val bits = permission.toShort
+    // PosixFilePermission lists owner, group, others × read, write, execute:
+    // the nine permission bits from the highest down
+    val perms = PosixFilePermission.values.toSeq.zipWithIndex
+      .collect { case (x, i) if (bits & (1 << (8 - i))) != 0 => x }
+    Files.setPosixFilePermissions(pathToFile(p).toPath, perms.toSet.asJava)
+    ()
   }
 }

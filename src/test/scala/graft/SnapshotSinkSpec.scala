@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -206,16 +208,166 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(SnapshotSink.read(spark, table).count() == 15)
   }
 
-  test("large commits take the distributed footer-count path (no O(files) " +
-    "driver loop) with identical lineage counts") {
+  test("an append runs one Spark job and its partition counts equal a " +
+    "groupBy over the data") {
     val table = tmpTable()
-    sys.props("graft.snapshot.driverCountThreshold") = "0"
-    try {
-      val snap = SnapshotSink.append(data(0 until 100), table, "id", Seq("part"))
-      assert(snap.rowCount == 100)
-      assert(snap.partitionRowCounts == Map(
-        "0" -> 25L, "1" -> 25L, "2" -> 25L, "3" -> 25L))
-    } finally sys.props.remove("graft.snapshot.driverCountThreshold")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val snap = try {
+      ListenerBusBridge.drain(sc)
+      jobs.set(0)
+      val s = SnapshotSink.append(data(0 until 100), table, "id", Seq("part"))
+      ListenerBusBridge.drain(sc)
+      s
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"an append ran ${jobs.get} jobs")
+    assert(snap.rowCount == 100)
+    assert(snap.partitionRowCounts == countsByPart(SnapshotSink.read(spark, table)))
+    assert(snap.partitionRowCounts == Map("0" -> 25L, "1" -> 25L, "2" -> 25L, "3" -> 25L))
+  }
+
+  /** Row counts per `part` value, as the manifest keys them. */
+  private def countsByPart(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    df.groupBy("part").count().collect()
+      .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+
+  test("appendMissing evaluates its input once: a partly committed input " +
+    "evaluates each row once; a fully committed one writes no subtree and " +
+    "returns None") {
+    val table = tmpTable()
+    SnapshotSink.append(data(0 until 60), table, "id", Seq("part"))
+    // a non-deterministic probe cannot be collapsed or duplicated by Catalyst,
+    // so each physical evaluation of a row ticks once
+    val counted = udf { s: String =>
+      SnapshotSinkSpec.evals.incrementAndGet(); s
+    }.asNondeterministic()
+    def input = data(0 until 100).withColumn("payload", counted(col("payload")))
+    SnapshotSinkSpec.evals.set(0L)
+    val snap = SnapshotSink.appendMissing(input, table, "id", Seq("part"))
+    assert(snap.map(_.rowCount).contains(40L))
+    assert(SnapshotSinkSpec.evals.get == 100L,
+      s"a partly committed input evaluated ${SnapshotSinkSpec.evals.get} rows for 100")
+    def snapDirs = listNames(java.nio.file.Paths.get(table)).filter(_.startsWith("_snapdir="))
+    val before = snapDirs
+    SnapshotSinkSpec.evals.set(0L)
+    assert(SnapshotSink.appendMissing(input, table, "id", Seq("part")).isEmpty)
+    assert(SnapshotSinkSpec.evals.get == 100L)
+    assert(snapDirs == before, "a no-op resume must leave no _snapdir= subtree")
+    assert(SnapshotSink.allSnapshots(table).map(_.id) == Seq(1, 2))
+    assert(SnapshotSink.read(spark, table).count() == 100)
+  }
+
+  private def listNames(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+  }
+
+  /** Each parquet file's directory relative to `root`, without the snapshot
+    * subtree level. */
+  private def partitionDirs(root: java.nio.file.Path): Set[String] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .map(p => root.relativize(p.getParent).toString.split("/")
+        .filterNot(d => d.isEmpty || d.startsWith("_snapdir=")).mkString("/"))
+      .toSet
+    finally s.close()
+  }
+
+  /** The permission strings of the parquet files and directories under
+    * `root`, below the snapshot subtree level. */
+  private def permissions(root: java.nio.file.Path): Set[String] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.toSeq
+      .filter(p => p != root && !p.getFileName.toString.startsWith("_") &&
+        !p.getFileName.toString.startsWith("."))
+      .map(p => (if (Files.isDirectory(p)) "d" else "f") +
+        java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p)))
+      .toSet
+    finally s.close()
+  }
+
+  test("the layout equals partitionBy(...).parquet: escaped and null string " +
+    "values, a date and an int; and an unpartitioned table") {
+    val rows = Seq[(Long, String, java.sql.Date, Int, String)](
+      (0L, "a/b", java.sql.Date.valueOf("2024-01-02"), 1, "p0"),
+      (1L, "k=v", java.sql.Date.valueOf("2024-01-02"), 2, "p1"),
+      (2L, "50%", java.sql.Date.valueOf("2023-12-31"), 1, "p2"),
+      (3L, "x y", java.sql.Date.valueOf("2023-12-31"), 3, "p3"),
+      (4L, null, java.sql.Date.valueOf("2024-01-02"), 1, "p4"),
+      (5L, "a/b", java.sql.Date.valueOf("2024-01-02"), 1, "p5"))
+    val df = rows.toDF("id", "s", "d", "i", "payload").repartition(3)
+    for (parts <- Seq(Seq("s", "d", "i"), Seq.empty[String])) {
+      val table = tmpTable()
+      val ref = Files.createTempDirectory("graft_ref").resolve("r")
+      df.write.partitionBy(parts: _*).parquet(ref.toString)
+      val snap = SnapshotSink.append(df, table, "id", parts)
+      val got = SnapshotSink.read(spark, table)
+      val want = spark.read.parquet(ref.toString)
+      assert(partitionDirs(java.nio.file.Paths.get(table)) == partitionDirs(ref), parts)
+      assert(permissions(java.nio.file.Paths.get(table)) == permissions(ref), parts)
+      assert(got.schema == want.schema, parts)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        want.collect().map(_.toString).sorted.toSeq, parts)
+      assert(snap.rowCount == rows.size)
+      if (parts.nonEmpty)
+        assert(snap.partitionRowCounts == want.groupBy(parts.map(col): _*).count().collect()
+          .map(r => parts.indices.map(i => Option(r.get(i)).fold(
+            "__HIVE_DEFAULT_PARTITION__")(_.toString)).mkString("/") -> r.getLong(parts.size))
+          .toMap)
+    }
+  }
+
+  test("a write whose task throws raises the error and commits nothing; " +
+    "vacuumOrphans reclaims its subtree") {
+    val table = tmpTable()
+    SnapshotSink.append(data(0 until 10), table, "id", Seq("part"))
+    val root = java.nio.file.Paths.get(table)
+    val before = SnapshotSink.read(spark, table).collect().map(_.toString).sorted.toSeq
+    val dirsBefore = listNames(root)
+    val boom = udf { i: Long =>
+      if (i == 17L) throw new IllegalStateException("boom in one task"); i
+    }
+    // the shuffle keeps the UDF out of driver-side constant folding, so it
+    // throws inside a write task
+    val ex = intercept[Exception] {
+      SnapshotSink.append(data(10 until 20).repartition(4).withColumn("id", boom(col("id"))),
+        table, "id", Seq("part"))
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("boom in one task")), ex)
+    assert(SnapshotSink.allSnapshots(table).map(_.id) == Seq(1))
+    assert(SnapshotSink.read(spark, table).collect().map(_.toString).sorted.toSeq == before)
+    val failed = listNames(root).filterNot(dirsBefore.contains)
+    assert(failed.size == 1 && failed.head.startsWith("_snapdir=snap2-"), failed)
+    // id 2 may still be in flight until a v2 commits; then it is an orphan
+    assert(SnapshotSink.vacuumOrphans(table).isEmpty)
+    SnapshotSink.append(data(10 until 20), table, "id", Seq("part"))
+    assert(SnapshotSink.vacuumOrphans(table) == failed)
+    assert(SnapshotSink.read(spark, table).count() == 20)
+  }
+
+  test("the commit's cleanup deletes a stale task attempt's file and keeps " +
+    "every returned file") {
+    val table = tmpTable()
+    val snap = SnapshotSink.append(data(0 until 20), table, "id", Seq("part"))
+    val root = java.nio.file.Paths.get(table)
+    val kept = root.resolve(snap.files.head)
+    val stale = kept.resolveSibling("part-00000-1-c000.snappy.parquet")
+    assert(!snap.files.exists(f => root.resolve(f) == stale))
+    Files.copy(kept, stale)
+    val subdir = snap.files.head.split("/").head
+    val dropped = SnapshotSink.dropUnreturned(spark.sparkContext.hadoopConfiguration,
+      table, subdir, snap.files)
+    assert(dropped == Seq(root.relativize(stale).toString))
+    assert(!Files.exists(stale))
+    snap.files.foreach(f => assert(Files.exists(root.resolve(f)), f))
+    assert(SnapshotSink.read(spark, table).count() == 20)
   }
 
   test("partition pruning works on the snapshot table (list-pruned scan shape)") {
@@ -252,6 +404,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val lineage = weird.map(w => s"k$w" -> s"v$w}]").toMap
     val snap = SnapshotSink.append(df, table, "id", Seq("part"), lineage)
     assert(snap.partitionRowCounts.size == weird.size)
+    assert(snap.partitionRowCounts == countsByPart(SnapshotSink.read(spark, table)))
+    assert(snap.partitionRowCounts == weird.map(_ -> 1L).toMap)
     val back = SnapshotSink.readSnapshot(table, snap.id)
     assert(back.files == snap.files)
     assert(back.partitionRowCounts == snap.partitionRowCounts)
@@ -330,4 +484,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
       assert(got(id) == graft.kernels.Kernels.truncateRenorm(v, 3).toSeq, id)
     }
   }
+}
+
+object SnapshotSinkSpec {
+  val evals = new java.util.concurrent.atomic.AtomicLong
 }
