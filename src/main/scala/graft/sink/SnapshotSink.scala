@@ -1,14 +1,15 @@
 package graft.sink
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
@@ -82,39 +83,50 @@ object SnapshotSink {
       lineage: Map[String, String],
       format: Map[String, String])
 
-  private def snapshotsDir(table: String): Path = Paths.get(table, "_snapshots")
+  /**
+   * A table root and the Hadoop FileSystem one sink call reaches it through,
+   * resolved from the conf the write tasks get: the session's Hadoop conf
+   * with `file:` mapped to [[LocalWriteFileSystem]] (no `.crc` side files,
+   * no forked `chmod`).
+   */
+  private[graft] final class Table(spark: SparkSession, table: String) {
+    val conf: Configuration = spark.sessionState.newHadoopConf()
+    conf.set("fs.file.impl", classOf[LocalWriteFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val root = new HPath(table)
+    val fs: FileSystem = root.getFileSystem(conf)
+    def /(rel: String): HPath = new HPath(root, rel)
+    val snapshots: HPath = this / "_snapshots"
+    def manifest(id: Int): HPath = new HPath(snapshots, s"v$id.json")
+    /** The entries of `dir`; none when it does not exist. */
+    def list(dir: HPath): Seq[FileStatus] =
+      try fs.listStatus(dir).toSeq catch { case _: FileNotFoundException => Nil }
+    /** Committed snapshot ids, ascending — one directory listing, no parse. */
+    def ids: Seq[Int] =
+      list(snapshots).map(_.getPath.getName).collect { case ManifestName(id) => id.toInt }.sorted
+    def snapshot(id: Int): Snapshot = {
+      val in = fs.open(manifest(id))
+      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      manifestParses.incrementAndGet()
+      parseSnapshot(text)
+    }
+    def head: Option[Snapshot] = ids.lastOption.map(snapshot)
+    def all: Seq[Snapshot] = ids.map(snapshot)
+    override def toString: String = table
+  }
+
+  /** `table` through the active session's Hadoop conf. */
+  private def at(table: String): Table = new Table(SparkSession.active, table)
 
   /** Synthetic partition column carrying the snapshot-unique data-subtree
     * name; written into paths by [[append]], dropped by readers. */
   private val snapDirCol = "_snapdir"
 
-  /** Materialize a directory listing and CLOSE the stream (Files.list leaks a
-    * directory fd otherwise — it accumulates in a long-lived driver). */
-  private def listDir(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
   private val ManifestName = "v(\\d+)\\.json".r
 
-  /** Committed snapshot ids, ascending — one directory listing, no parse. */
-  private def snapshotIds(table: String): Seq[Int] = {
-    val dir = snapshotsDir(table)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else listDir(dir).map(_.getFileName.toString)
-      .collect { case ManifestName(id) => id.toInt }.sorted
-  }
+  def lastSnapshot(table: String): Option[Snapshot] = at(table).head
 
-  def lastSnapshot(table: String): Option[Snapshot] =
-    snapshotIds(table).lastOption.map(readSnapshot(table, _))
-
-  def readSnapshot(table: String, id: Int): Snapshot = {
-    val text = new String(
-      Files.readAllBytes(snapshotsDir(table).resolve(s"v$id.json")),
-      StandardCharsets.UTF_8)
-    manifestParses.incrementAndGet()
-    parseSnapshot(text)
-  }
+  def readSnapshot(table: String, id: Int): Snapshot = at(table).snapshot(id)
 
   /** Manifest-parse counter — the read-planning cost seam SnapshotSinkSpec
     * asserts against (reads must NOT parse history below a compaction). */
@@ -122,22 +134,22 @@ object SnapshotSink {
 
   /** Refuse `snap` unless its format equals `expected`, naming the table and
     * every key that differs. */
-  private def requireFormat(table: String, snap: Snapshot,
+  private def requireFormat(t: Table, snap: Snapshot,
                             expected: Map[String, String], role: String): Unit = {
     val keys = (snap.format.keySet ++ expected.keySet)
       .filter(k => snap.format.get(k) != expected.get(k)).toSeq.sorted
     def show(m: Map[String, String], k: String) = m.getOrElse(k, "<absent>")
     require(keys.isEmpty,
-      s"table $table (v${snap.id}) has another format than the $role expects: " +
+      s"table $t (v${snap.id}) has another format than the $role expects: " +
         keys.map(k => s"$k=${show(snap.format, k)} (table) vs ${show(expected, k)} ($role)")
           .mkString(", ") +
         " — rebuild the table with the expected format, or write to another table")
   }
 
   /** The head snapshot, after refusing an append whose format differs. */
-  private def headFor(table: String, format: Map[String, String]): Option[Snapshot] = {
-    val head = lastSnapshot(table)
-    head.foreach(requireFormat(table, _, format, "writer"))
+  private def headFor(t: Table, format: Map[String, String]): Option[Snapshot] = {
+    val head = t.head
+    head.foreach(requireFormat(t, _, format, "writer"))
     head
   }
 
@@ -149,14 +161,16 @@ object SnapshotSink {
   def append(df: DataFrame, table: String, keyCol: String,
              partitionCols: Seq[String],
              lineage: Map[String, String] = Map.empty,
-             format: Map[String, String] = Map.empty): Snapshot =
-    commit(df, table, keyCol, partitionCols, lineage, format, headFor(table, format),
+             format: Map[String, String] = Map.empty): Snapshot = {
+    val t = new Table(df.sparkSession, table)
+    commit(df, t, keyCol, partitionCols, lineage, format, headFor(t, format),
       commitEmpty = true).get
+  }
 
   /** Write `df` as snapshot `parent + 1` and commit its manifest. A write of
     * no rows commits only when `commitEmpty`; otherwise its subtree is
     * deleted and the result is None. */
-  private def commit(df: DataFrame, table: String, keyCol: String,
+  private def commit(df: DataFrame, t: Table, keyCol: String,
                      partitionCols: Seq[String], lineage: Map[String, String],
                      format: Map[String, String], parent: Option[Snapshot],
                      commitEmpty: Boolean): Option[Snapshot] = {
@@ -173,13 +187,11 @@ object SnapshotSink {
     // written nothing references these files — a crashed attempt is invisible
     // and [[vacuumOrphans]] reclaims it.
     val subdir = s"$snapDirCol=snap$snapId-${java.util.UUID.randomUUID().toString}"
-    val dataDir = Paths.get(table).resolve(subdir)
-    Files.createDirectories(dataDir)
-    val written = writeFiles(df, table, subdir, partitionCols)
+    val written = writeFiles(df, t, subdir, partitionCols)
     val tWrite = System.currentTimeMillis()
     val rowCount = written.map(_.rows).sum
     if (rowCount == 0 && !commitEmpty) {
-      deleteRecursively(dataDir)
+      t.fs.delete(t / subdir, true)
       return None
     }
 
@@ -196,12 +208,14 @@ object SnapshotSink {
         "write_millis" -> (tWrite - t0).toString,
         "fs_millis" -> (System.currentTimeMillis() - tWrite).toString),
       format)
-    // manifest write IS the commit point (write temp + atomic rename)
-    val dir = snapshotsDir(table)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".v$snapId.json.tmp")
-    Files.write(tmp, renderSnapshot(snap).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"v$snapId.json"), StandardCopyOption.ATOMIC_MOVE)
+    // manifest write IS the commit point: a temp file renamed to v{N}.json
+    val tmp = new HPath(t.snapshots, s".v$snapId.json.tmp")
+    val out = t.fs.create(tmp, true)
+    try out.write(renderSnapshot(snap).getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!t.fs.rename(tmp, t.manifest(snapId))) {
+      t.fs.delete(tmp, false)
+      throw new java.io.IOException(s"commit of $t v$snapId failed: rename of $tmp returned false")
+    }
     Some(snap)
   }
 
@@ -223,7 +237,7 @@ object SnapshotSink {
    * retried, or speculation may have run a second copy, every other file in
    * the subtree is deleted first.
    */
-  private def writeFiles(df: DataFrame, table: String, subdir: String,
+  private def writeFiles(df: DataFrame, t: Table, subdir: String,
                          partitionCols: Seq[String]): Seq[Written] = {
     val spark = df.sparkSession
     val sqlConf = spark.sessionState.conf
@@ -240,16 +254,12 @@ object SnapshotSink {
       val dataAttrs = output.filterNot(a => partAttrs.exists(_.exprId == a.exprId))
       val dataSchema = DataTypeUtils.fromAttributes(dataAttrs)
       DataSourceUtils.verifySchema(new ParquetFileFormat, dataSchema)
-      val job = Job.getInstance(spark.sessionState.newHadoopConf())
-      // `file:` paths go through LocalWriteFileSystem, not the JVM-wide
-      // cached LocalFileSystem (see its doc)
-      job.getConfiguration.set("fs.file.impl", classOf[LocalWriteFileSystem].getName)
-      job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
+      val job = Job.getInstance(t.conf)
       val factory = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
         new ParquetOptions(Map.empty[String, String], sqlConf))
       val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
       try {
-        val task = new WriteTask(table, subdir, output, partAttrs, dataAttrs, factory,
+        val task = new WriteTask(t.toString, subdir, output, partAttrs, dataAttrs, factory,
           conf, java.util.UUID.randomUUID().toString.take(8), sqlConf.sessionLocalTimeZone)
         val rdd = qe.toRdd
         // an input with no partitions still runs one (empty) task, as Spark's
@@ -261,29 +271,25 @@ object SnapshotSink {
         val written = results.toSeq.flatMap(_._1)
         val sawRetry = results.exists(_._2 > 0) ||
           spark.sparkContext.getConf.getBoolean("spark.speculation", defaultValue = false)
-        if (sawRetry) dropUnreturned(job.getConfiguration, table, subdir, written.map(_.file))
+        if (sawRetry) dropUnreturned(t, subdir, written.map(_.file))
         written
       } finally conf.destroy()
     }
   }
 
   /** Delete every file under `table/subdir` that is not in `keep` (paths
-    * relative to the table root), through the Hadoop FileSystem the tasks
-    * wrote with, and return the deleted paths: the files of failed or
-    * losing task attempts. */
-  private[graft] def dropUnreturned(conf: Configuration, table: String, subdir: String,
-                                    keep: Seq[String]): Seq[String] = {
-    val root = new HPath(table)
-    val fs = root.getFileSystem(conf)
-    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    * relative to the table root) and return the deleted paths: the files of
+    * failed or losing task attempts. */
+  private[graft] def dropUnreturned(t: Table, subdir: String, keep: Seq[String]): Seq[String] = {
+    val prefix = t.fs.makeQualified(t.root).toUri.getPath.stripSuffix("/") + "/"
     val kept = keep.toSet
     val stale = ArrayBuffer.empty[String]
-    val it = fs.listFiles(new HPath(root, subdir), true)
+    val it = t.fs.listFiles(t / subdir, true)
     while (it.hasNext) {
       val rel = it.next().getPath.toUri.getPath.stripPrefix(prefix)
       if (!kept(rel)) stale += rel
     }
-    stale.foreach(f => fs.delete(new HPath(root, f), false))
+    stale.foreach(f => t.fs.delete(t / f, false))
     stale.toSeq
   }
 
@@ -369,7 +375,7 @@ object SnapshotSink {
     * refuses the table if any manifest the read parses has another format
     * (a table written before its format was recorded has an empty one). */
   def read(spark: SparkSession, table: String, format: Map[String, String]): DataFrame =
-    load(spark, table, Int.MaxValue, Some(format))
+    load(spark, new Table(spark, table), Int.MaxValue, Some(format))
 
   /**
    * Time travel: the table state as of snapshot `asOf` (inclusive) — the
@@ -380,16 +386,15 @@ object SnapshotSink {
    * manifest chain).
    */
   def readAsOf(spark: SparkSession, table: String, asOf: Int): DataFrame =
-    load(spark, table, asOf, None)
+    load(spark, new Table(spark, table), asOf, None)
 
-  private def load(spark: SparkSession, table: String, asOf: Int,
+  private def load(spark: SparkSession, t: Table, asOf: Int,
                    format: Option[Map[String, String]]): DataFrame = {
-    val snaps = snapshotsForRead(table, asOf)
-    require(snaps.nonEmpty, s"no snapshots in $table at or before v$asOf")
-    format.foreach(f => snaps.foreach(requireFormat(table, _, f, "reader")))
-    val root = Paths.get(table)
-    val files = snaps.flatMap(_.files).map(f => root.resolve(f).toString)
-    spark.read.option("basePath", table).parquet(files: _*).drop(snapDirCol)
+    val snaps = snapshotsForRead(t, asOf)
+    require(snaps.nonEmpty, s"no snapshots in $t at or before v$asOf")
+    format.foreach(f => snaps.foreach(requireFormat(t, _, f, "reader")))
+    val files = snaps.flatMap(_.files).map(f => (t / f).toString)
+    spark.read.option("basePath", t.toString).parquet(files: _*).drop(snapDirCol)
   }
 
   /**
@@ -406,16 +411,16 @@ object SnapshotSink {
    * the newest compaction. [[vacuum]]/[[vacuumOrphans]] still read full
    * history (maintenance ops, by design).
    */
-  private def snapshotsForRead(table: String, asOf: Int): Seq[Snapshot] = {
+  private def snapshotsForRead(t: Table, asOf: Int): Seq[Snapshot] = {
     var cutoff = 0
     val out = Seq.newBuilder[Snapshot]
-    val it = snapshotIds(table).filter(_ <= asOf).reverseIterator
+    val it = t.ids.filter(_ <= asOf).reverseIterator
     var go = true
     while (go && it.hasNext) {
       val id = it.next()
       if (id <= cutoff) go = false
       else {
-        val s = readSnapshot(table, id)
+        val s = t.snapshot(id)
         out += s
         s.lineage.get("compacts_through")
           .foreach(t => cutoff = math.max(cutoff, t.toInt))
@@ -436,16 +441,17 @@ object SnapshotSink {
   def compact(spark: SparkSession, table: String, keyCol: String,
               partitionCols: Seq[String],
               filesPerPartition: Int = 1): Snapshot = {
-    val head = lastSnapshot(table).getOrElse(
+    val t = new Table(spark, table)
+    val head = t.head.getOrElse(
       throw new IllegalStateException(s"no snapshots to compact in $table"))
-    val current = read(spark, table)
+    val current = load(spark, t, Int.MaxValue, None)
     val compacted =
       if (partitionCols.isEmpty) current.repartition(filesPerPartition)
       else if (filesPerPartition <= 1) current.repartition(partitionCols.map(col): _*)
       else current.repartition( // up-to-k files per partition dir (hash split on the key)
         partitionCols.map(col) :+
           pmod(xxhash64(col(keyCol)), lit(filesPerPartition)): _*)
-    commit(compacted, table, keyCol, partitionCols,
+    commit(compacted, t, keyCol, partitionCols,
       Map("compacts_through" -> head.id.toString), head.format, Some(head),
       commitEmpty = true).get
   }
@@ -458,23 +464,22 @@ object SnapshotSink {
    * or after it are untouched. Returns the deleted data-file paths.
    */
   def vacuum(table: String, retainAsOf: Int): Seq[String] = {
-    val snaps = allSnapshots(table)
+    val t = at(table)
+    val snaps = t.all
     val horizon = snaps
       .filter(s => s.id <= retainAsOf && s.lineage.contains("compacts_through"))
       .map(_.lineage("compacts_through").toInt)
       .foldLeft(0)(math.max)
     val obsolete = snaps.filter(_.id <= horizon)
-    val root = Paths.get(table)
-    val deleted = obsolete.flatMap { s =>
+    obsolete.flatMap { s =>
       // manifest FIRST (the commit point of expiry): a crash mid-vacuum then
       // leaves data files with no manifest — invisible, reclaimed by a re-run
       // or [[vacuumOrphans]] — never a manifest referencing deleted files,
       // which would turn time travel at the horizon into a missing-parquet
       // error instead of a clean expiry signal.
-      Files.deleteIfExists(snapshotsDir(table).resolve(s"v${s.id}.json"))
-      s.files.filter(f => Files.deleteIfExists(root.resolve(f)))
+      t.fs.delete(t.manifest(s.id), false)
+      s.files.filter(f => t.fs.delete(t / f, false))
     }
-    deleted
   }
 
   /**
@@ -485,25 +490,23 @@ object SnapshotSink {
    * (single-writer protocol), so it is never touched. Returns deleted dirs.
    */
   def vacuumOrphans(table: String): Seq[String] = {
-    val root = Paths.get(table)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val snaps = allSnapshots(table)
+    val t = at(table)
+    val snaps = t.all
     val head = snaps.lastOption.map(_.id).getOrElse(0)
     val referenced = snaps.flatMap(_.files)
     val DataDir = (java.util.regex.Pattern.quote(snapDirCol) + "=snap(\\d+)-.*").r
-    listDir(root).flatMap { p =>
-      p.getFileName.toString match {
+    t.list(t.root).flatMap { st =>
+      st.getPath.getName match {
         case name @ DataDir(id) if id.toInt <= head &&
             !referenced.exists(_.startsWith(name + "/")) =>
-          deleteRecursively(p)
+          t.fs.delete(st.getPath, true)
           Some(name)
         case _ => None
       }
     }
   }
 
-  def allSnapshots(table: String): Seq[Snapshot] =
-    snapshotIds(table).map(readSnapshot(table, _))
+  def allSnapshots(table: String): Seq[Snapshot] = at(table).all
 
   /**
    * Resumable append: write only input rows whose `keyCol` is not yet in the
@@ -538,15 +541,16 @@ object SnapshotSink {
                                 lineage: Map[String, String],
                                 format: Map[String, String]): Option[Snapshot] = {
     val spark = df.sparkSession
-    val head = headFor(table, format)
+    val t = new Table(spark, table)
+    val head = headFor(t, format)
     val fresh = head match {
       case None => df
       case Some(_) =>
-        val committed = read(spark, table)
+        val committed = load(spark, t, Int.MaxValue, None)
         val existing = scope.fold(committed)(committed.where(_)).select(col(keyCol))
         df.join(existing, Seq(keyCol), "left_anti")
     }
-    commit(fresh, table, keyCol, partitionCols, lineage, format, head, commitEmpty = false)
+    commit(fresh, t, keyCol, partitionCols, lineage, format, head, commitEmpty = false)
   }
 
   // ------------------------------------------------------------- manifest
@@ -593,11 +597,6 @@ object SnapshotSink {
     Snapshot(num("id")(json \ "id").toInt, num("parent_id")(json \ "parent_id").toInt,
       files, num("row_count")(json \ "row_count"), obj("partition_row_counts")(num),
       str("key_col")(json \ "key_col"), obj("lineage")(str), obj("format")(str))
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 }
 

@@ -362,8 +362,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(!snap.files.exists(f => root.resolve(f) == stale))
     Files.copy(kept, stale)
     val subdir = snap.files.head.split("/").head
-    val dropped = SnapshotSink.dropUnreturned(spark.sparkContext.hadoopConfiguration,
-      table, subdir, snap.files)
+    val dropped = SnapshotSink.dropUnreturned(new SnapshotSink.Table(spark, table),
+      subdir, snap.files)
     assert(dropped == Seq(root.relativize(stale).toString))
     assert(!Files.exists(stale))
     snap.files.foreach(f => assert(Files.exists(root.resolve(f)), f))
