@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions,
   ParquetUtils}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.json4s.{JArray, JInt, JNothing, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
@@ -38,38 +38,62 @@ import org.json4s.jackson.JsonMethods
  * an append-only `_snapshots/v{N}.json` manifest chain; a real Iceberg writer
  * would be a thin adapter over this seam).
  *
+ * A table is a Hadoop `FileSystem` path: a plain path, a `file:` URI or any
+ * scheme the session's Hadoop conf can open (`hdfs:`, `s3a:`, …). Every sink
+ * call resolves ONE `FileSystem` from the conf its write tasks get (the
+ * session's Hadoop conf, with `file:` mapped to [[LocalWriteFileSystem]]) and
+ * reaches the data files, the manifests, the listings and the deletes of
+ * vacuum through it; calls without a `SparkSession` take the active
+ * session's conf.
+ *
  * Guarantees:
- *  - atomic RENAME-FREE commit: write tasks write their final paths directly
+ *  - manifest-last commit: write tasks write their final paths directly
  *    — each snapshot owns a unique `_snapdir=snap{N}-<uuid>/` subtree under
  *    the table root, laid out as `partitionBy(...).parquet` lays it out. There
  *    is no Hadoop output committer: no temporary attempt dirs, no renames, no
  *    `_SUCCESS` marker, the Hadoop configuration ships to the tasks once, as
- *    a broadcast, and a local table is written through
- *    [[LocalWriteFileSystem]], which forks no `chmod`. Each task returns,
- *    per file it wrote, the file's path, its partition values and its row
- *    count; the manifest (the commit point) lists the files that successful
- *    task attempts returned, and its row counts are those tasks' counts, so
- *    the driver neither lists the subtree nor reads a footer. File names carry the task's partition id and
- *    attempt number; a commit that saw a retried or speculative attempt
- *    deletes the subtree's files no successful attempt returned. A crash
- *    before the manifest leaves an unreferenced subtree that readers never
- *    see; [[vacuumOrphans]] sweeps it. (The reference's single-writer BDB
- *    sink, ds/AbstractSearchStructure.java:229–257, becomes concurrent
+ *    a broadcast, and a local table is written without `.crc` side files or
+ *    forked `chmod`s. Each task returns, per file it wrote, the file's path,
+ *    its partition values and its row count; the manifest lists the files
+ *    that successful task attempts returned, and its row counts are those
+ *    tasks' counts, so the driver neither lists the subtree nor reads a
+ *    footer. File names carry the task's partition id and attempt number; a
+ *    commit that saw a retried or speculative attempt deletes the subtree's
+ *    files no successful attempt returned. The commit point is the manifest:
+ *    written to `_snapshots/.v{N}.json.tmp`, then renamed to `v{N}.json`; a
+ *    rename that returns false deletes the temp file and fails the commit. A
+ *    crash before the manifest leaves an unreferenced subtree that readers
+ *    never see; [[vacuumOrphans]] sweeps it. (The reference's single-writer
+ *    BDB sink, ds/AbstractSearchStructure.java:229–257, becomes concurrent
  *    partitioned file commits with a manifest-last protocol.)
+ *  - single writer: one writer per table at a time. Two writers of the same
+ *    version both rename onto `v{N}.json`: on a local file system the second
+ *    rename overwrites the first; where `rename` refuses an existing target,
+ *    the second commit fails. Refusing the second writer everywhere needs a
+ *    put-if-absent commit per scheme (Delta Lake's LogStore), not built yet;
  *  - resume: `appendMissing` left-anti-joins the input against already-
  *    committed keys (the F2 already-indexed dedup,
  *    ds/AbstractSearchStructure.java:537–546) and writes the rest in one
  *    evaluation: when nothing is left, the empty subtree is deleted and no
  *    manifest is committed;
  *  - lineage + metrics per snapshot (north rule): per-partition row counts,
- *    key column, model versions present, wall-clock, parent snapshot id;
+ *    key column, model versions present, wall-clock (`commit_millis`,
+ *    `write_millis`, `fs_millis`, see [[CommitClock]]), parent snapshot id;
  *  - one table format: every manifest records the writer's `format` tags
  *    (e.g. an operator's name and parameters). An append whose format differs
  *    from the head's is refused before it writes anything, [[compact]] carries
  *    the head's format forward, and `read(spark, table, format)` refuses a
  *    table any of whose read manifests has another format (the Delta Lake
  *    log-owned table format). Operators declare their format; they never
- *    inspect manifests themselves.
+ *    inspect manifests themselves;
+ *  - one schema: every manifest records the table's read schema (the data
+ *    columns, then the typed partition columns, all nullable). An append
+ *    whose columns differ in name or type from the head's is refused before
+ *    it writes anything; column order and nullability may differ, and the
+ *    head's schema is carried forward. Reads pass the recorded schema to
+ *    Spark, so a partition column keeps its written type (a string `"01"`
+ *    stays `"01"`) and no schema-inference job runs; a manifest written
+ *    before the schema was recorded reads with Spark's inference.
  */
 object SnapshotSink {
 
@@ -81,7 +105,8 @@ object SnapshotSink {
       partitionRowCounts: Map[String, Long],
       keyCol: String,
       lineage: Map[String, String],
-      format: Map[String, String])
+      format: Map[String, String],
+      schema: Option[StructType] = None)
 
   /**
    * A table root and the Hadoop FileSystem one sink call reaches it through,
@@ -132,25 +157,61 @@ object SnapshotSink {
     * asserts against (reads must NOT parse history below a compaction). */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
 
-  /** Refuse `snap` unless its format equals `expected`, naming the table and
-    * every key that differs. */
-  private def requireFormat(t: Table, snap: Snapshot,
-                            expected: Map[String, String], role: String): Unit = {
-    val keys = (snap.format.keySet ++ expected.keySet)
-      .filter(k => snap.format.get(k) != expected.get(k)).toSeq.sorted
+  /** Refuse `snap` unless its `what` (`have`) equals `expected`, naming the
+    * table and every key that differs. */
+  private def requireSame(t: Table, snap: Snapshot, what: String, have: Map[String, String],
+                          expected: Map[String, String], role: String): Unit = {
+    val keys = (have.keySet ++ expected.keySet)
+      .filter(k => have.get(k) != expected.get(k)).toSeq.sorted
     def show(m: Map[String, String], k: String) = m.getOrElse(k, "<absent>")
     require(keys.isEmpty,
-      s"table $t (v${snap.id}) has another format than the $role expects: " +
-        keys.map(k => s"$k=${show(snap.format, k)} (table) vs ${show(expected, k)} ($role)")
+      s"table $t (v${snap.id}) has another $what than the $role expects: " +
+        keys.map(k => s"$k=${show(have, k)} (table) vs ${show(expected, k)} ($role)")
           .mkString(", ") +
-        " — rebuild the table with the expected format, or write to another table")
+        s" — rebuild the table with the expected $what, or write to another table")
   }
+
+  private def requireFormat(t: Table, snap: Snapshot,
+                            expected: Map[String, String], role: String): Unit =
+    requireSame(t, snap, "format", snap.format, expected, role)
 
   /** The head snapshot, after refusing an append whose format differs. */
   private def headFor(t: Table, format: Map[String, String]): Option[Snapshot] = {
     val head = t.head
     head.foreach(requireFormat(t, _, format, "writer"))
     head
+  }
+
+  /** The schema a read of `df` written partitioned by `partitionCols` has:
+    * the data columns, then the partition columns, all nullable. */
+  private def readSchema(df: DataFrame, partitionCols: Seq[String]): StructType = {
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    val (parts, data) = df.schema.fields.partition(f => partitionCols.exists(resolver(f.name, _)))
+    StructType(data ++ partitionCols.flatMap(c => parts.find(f => resolver(f.name, c))))
+      .toNullable
+  }
+
+  /**
+   * The timing keys of one commit, in decimal milliseconds from `nanoTime`:
+   * `commit_millis` from before the head lookup to the manifest write,
+   * `write_millis` for the write job and `fs_millis` for the commit's
+   * driver-side file-system calls (head lookup, stale-attempt cleanup,
+   * empty-subtree delete).
+   */
+  private final class CommitClock {
+    private val start = System.nanoTime()
+    private var write, fs = 0L
+    private def timed[T](add: Long => Unit)(body: => T): T = {
+      val t0 = System.nanoTime()
+      try body finally add(System.nanoTime() - t0)
+    }
+    def writing[T](body: => T): T = timed(write += _)(body)
+    def fsCall[T](body: => T): T = timed(fs += _)(body)
+    def lineage: Map[String, String] = {
+      def ms(nanos: Long) = java.math.BigDecimal.valueOf(nanos, 6).toPlainString
+      Map("commit_millis" -> ms(System.nanoTime() - start), "write_millis" -> ms(write),
+        "fs_millis" -> ms(fs))
+    }
   }
 
   /**
@@ -162,20 +223,30 @@ object SnapshotSink {
              partitionCols: Seq[String],
              lineage: Map[String, String] = Map.empty,
              format: Map[String, String] = Map.empty): Snapshot = {
+    val clock = new CommitClock
     val t = new Table(df.sparkSession, table)
-    commit(df, t, keyCol, partitionCols, lineage, format, headFor(t, format),
-      commitEmpty = true).get
+    commit(df, t, keyCol, partitionCols, lineage, format, clock.fsCall(headFor(t, format)),
+      clock, commitEmpty = true).get
   }
 
   /** Write `df` as snapshot `parent + 1` and commit its manifest. A write of
     * no rows commits only when `commitEmpty`; otherwise its subtree is
-    * deleted and the result is None. */
+    * deleted and the result is None. An input whose columns differ in name
+    * or type from the parent's recorded schema is refused before any file is
+    * written. */
   private def commit(df: DataFrame, t: Table, keyCol: String,
                      partitionCols: Seq[String], lineage: Map[String, String],
                      format: Map[String, String], parent: Option[Snapshot],
-                     commitEmpty: Boolean): Option[Snapshot] = {
-    val t0 = System.currentTimeMillis()
+                     clock: CommitClock, commitEmpty: Boolean): Option[Snapshot] = {
     val snapId = parent.map(_.id + 1).getOrElse(1)
+    // column order is free (appendMissing's anti-join and compact reorder);
+    // the head's schema is carried forward so reads keep one column order
+    val incoming = readSchema(df, partitionCols)
+    val schema = parent.flatMap(p => p.schema.map { s =>
+      def cols(x: StructType) = x.fields.map(f => f.name -> f.dataType.catalogString).toMap
+      requireSame(t, p, "schema", cols(s), cols(incoming), "writer")
+      s
+    }).getOrElse(incoming)
 
     // rename-free: tasks write FINAL paths directly into a snapshot-unique
     // subtree. The subtree is itself named as a partition dir
@@ -187,27 +258,22 @@ object SnapshotSink {
     // written nothing references these files — a crashed attempt is invisible
     // and [[vacuumOrphans]] reclaims it.
     val subdir = s"$snapDirCol=snap$snapId-${java.util.UUID.randomUUID().toString}"
-    val written = writeFiles(df, t, subdir, partitionCols)
-    val tWrite = System.currentTimeMillis()
-    val rowCount = written.map(_.rows).sum
+    val (files, sawRetry) = clock.writing(writeFiles(df, t, subdir, partitionCols))
+    if (sawRetry) clock.fsCall(dropUnreturned(t, subdir, files.map(_.file)))
+    val rowCount = files.map(_.rows).sum
     if (rowCount == 0 && !commitEmpty) {
-      t.fs.delete(t / subdir, true)
+      clock.fsCall(t.fs.delete(t / subdir, true))
       return None
     }
 
     // per-partition row counts from the tasks' typed partition values:
     // "3/…" (values only, joined by '/', matching a groupBy over the data,
     // which reads a null or empty value back as null)
-    val partCounts: Map[String, Long] = written.groupMapReduce(
+    val partCounts: Map[String, Long] = files.groupMapReduce(
       _.values.map(v => if (v == null || v.isEmpty) nullPartition else v).mkString("/"))(
       _.rows)(_ + _)
-    val snap = Snapshot(snapId, parent.map(_.id).getOrElse(0), written.map(_.file),
-      rowCount, partCounts, keyCol,
-      lineage ++ Map(
-        "commit_millis" -> (System.currentTimeMillis() - t0).toString,
-        "write_millis" -> (tWrite - t0).toString,
-        "fs_millis" -> (System.currentTimeMillis() - tWrite).toString),
-      format)
+    val snap = Snapshot(snapId, parent.map(_.id).getOrElse(0), files.map(_.file),
+      rowCount, partCounts, keyCol, lineage ++ clock.lineage, format, Some(schema))
     // manifest write IS the commit point: a temp file renamed to v{N}.json
     val tmp = new HPath(t.snapshots, s".v$snapId.json.tmp")
     val out = t.fs.create(tmp, true)
@@ -233,12 +299,12 @@ object SnapshotSink {
    * execution. Each input partition is sorted by the partition columns and
    * each task writes one file per partition directory it meets, through
    * Spark's parquet writer factory, with the Hadoop conf broadcast once.
-   * Returns the files the successful task attempts wrote; when a task was
-   * retried, or speculation may have run a second copy, every other file in
-   * the subtree is deleted first.
+   * Returns the files the successful task attempts wrote, and whether a task
+   * was retried, or speculation may have run a second copy: then the subtree
+   * may hold other files.
    */
   private def writeFiles(df: DataFrame, t: Table, subdir: String,
-                         partitionCols: Seq[String]): Seq[Written] = {
+                         partitionCols: Seq[String]): (Seq[Written], Boolean) = {
     val spark = df.sparkSession
     val sqlConf = spark.sessionState.conf
     val sorted =
@@ -268,11 +334,8 @@ object SnapshotSink {
           if (rdd.getNumPartitions > 0) rdd
           else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
         val results = spark.sparkContext.runJob(input, task.run _)
-        val written = results.toSeq.flatMap(_._1)
-        val sawRetry = results.exists(_._2 > 0) ||
-          spark.sparkContext.getConf.getBoolean("spark.speculation", defaultValue = false)
-        if (sawRetry) dropUnreturned(t, subdir, written.map(_.file))
-        written
+        (results.toSeq.flatMap(_._1), results.exists(_._2 > 0) ||
+          spark.sparkContext.getConf.getBoolean("spark.speculation", defaultValue = false))
       } finally conf.destroy()
     }
   }
@@ -394,7 +457,10 @@ object SnapshotSink {
     require(snaps.nonEmpty, s"no snapshots in $t at or before v$asOf")
     format.foreach(f => snaps.foreach(requireFormat(t, _, f, "reader")))
     val files = snaps.flatMap(_.files).map(f => (t / f).toString)
-    spark.read.option("basePath", t.toString).parquet(files: _*).drop(snapDirCol)
+    // the recorded schema types the partition columns and spares the read
+    // Spark's schema-inference job; older manifests have none
+    snaps.head.schema.fold(spark.read)(spark.read.schema)
+      .option("basePath", t.toString).parquet(files: _*).drop(snapDirCol)
   }
 
   /**
@@ -441,8 +507,9 @@ object SnapshotSink {
   def compact(spark: SparkSession, table: String, keyCol: String,
               partitionCols: Seq[String],
               filesPerPartition: Int = 1): Snapshot = {
+    val clock = new CommitClock
     val t = new Table(spark, table)
-    val head = t.head.getOrElse(
+    val head = clock.fsCall(t.head).getOrElse(
       throw new IllegalStateException(s"no snapshots to compact in $table"))
     val current = load(spark, t, Int.MaxValue, None)
     val compacted =
@@ -452,7 +519,7 @@ object SnapshotSink {
         partitionCols.map(col) :+
           pmod(xxhash64(col(keyCol)), lit(filesPerPartition)): _*)
     commit(compacted, t, keyCol, partitionCols,
-      Map("compacts_through" -> head.id.toString), head.format, Some(head),
+      Map("compacts_through" -> head.id.toString), head.format, Some(head), clock,
       commitEmpty = true).get
   }
 
@@ -541,8 +608,9 @@ object SnapshotSink {
                                 lineage: Map[String, String],
                                 format: Map[String, String]): Option[Snapshot] = {
     val spark = df.sparkSession
+    val clock = new CommitClock
     val t = new Table(spark, table)
-    val head = headFor(t, format)
+    val head = clock.fsCall(headFor(t, format))
     val fresh = head match {
       case None => df
       case Some(_) =>
@@ -550,7 +618,7 @@ object SnapshotSink {
         val existing = scope.fold(committed)(committed.where(_)).select(col(keyCol))
         df.join(existing, Seq(keyCol), "left_anti")
     }
-    commit(fresh, t, keyCol, partitionCols, lineage, format, head, commitEmpty = false)
+    commit(fresh, t, keyCol, partitionCols, lineage, format, head, clock, commitEmpty = false)
   }
 
   // ------------------------------------------------------------- manifest
@@ -569,11 +637,13 @@ object SnapshotSink {
       "files" -> JArray(s.files.map(JString(_)).toList),
       "partition_row_counts" -> obj(s.partitionRowCounts)(JInt(_)),
       "lineage" -> obj(s.lineage)(JString(_)),
-      "format" -> obj(s.format)(JString(_))))
+      "format" -> obj(s.format)(JString(_)),
+      "schema" -> s.schema.fold[JValue](JNothing)(x => JsonMethods.parse(x.json))))
   }
 
   /** Inverse of [[renderSnapshot]]. An absent map reads as empty: a manifest
-    * written before the format contract has no `format` and an empty format. */
+    * written before the format contract has no `format` and an empty format;
+    * one written before the schema contract has no `schema`. */
   private def parseSnapshot(text: String): Snapshot = {
     val json = JsonMethods.parse(text)
     def bad(k: String) = new IllegalStateException(s"manifest field '$k' missing or mistyped")
@@ -594,9 +664,16 @@ object SnapshotSink {
       case JArray(fs) => fs.map(str("files"))
       case _ => throw bad("files")
     }
+    val schema = json \ "schema" match {
+      case JNothing => None
+      case v => DataType.fromJson(JsonMethods.compact(v)) match {
+        case st: StructType => Some(st)
+        case _ => throw bad("schema")
+      }
+    }
     Snapshot(num("id")(json \ "id").toInt, num("parent_id")(json \ "parent_id").toInt,
       files, num("row_count")(json \ "row_count"), obj("partition_row_counts")(num),
-      str("key_col")(json \ "key_col"), obj("lineage")(str), obj("format")(str))
+      str("key_col")(json \ "key_col"), obj("lineage")(str), obj("format")(str), schema)
   }
 }
 

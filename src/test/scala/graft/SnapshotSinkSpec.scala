@@ -1,12 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sink.SnapshotSink
@@ -33,7 +36,13 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(snap.partitionRowCounts.values.sum == 100)
     assert(snap.partitionRowCounts.keySet == Set("0", "1", "2", "3"))
     assert(snap.lineage("model_versions") == "1,2")
-    assert(snap.lineage.contains("commit_millis"))
+    // timing keys in decimal milliseconds: the write job and the driver-side
+    // file-system calls are disjoint parts of the commit
+    val Seq(commitMs, writeMs, fsMs) =
+      Seq("commit_millis", "write_millis", "fs_millis").map(k => snap.lineage(k).toDouble)
+    assert(Seq(commitMs, writeMs, fsMs).forall(_ >= 0), snap.lineage)
+    assert(fsMs > 0, snap.lineage)
+    assert(writeMs + fsMs <= commitMs, snap.lineage)
     // manifest round-trips
     val reread = SnapshotSink.readSnapshot(table, 1)
     assert(reread == snap)
@@ -208,23 +217,28 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(SnapshotSink.read(spark, table).count() == 15)
   }
 
-  test("an append runs one Spark job and its partition counts equal a " +
-    "groupBy over the data") {
-    val table = tmpTable()
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def withJobCount[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    val snap = try {
+    try {
       ListenerBusBridge.drain(sc)
       jobs.set(0)
-      val s = SnapshotSink.append(data(0 until 100), table, "id", Seq("part"))
+      val r = body
       ListenerBusBridge.drain(sc)
-      s
+      (r, jobs.get)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 1, s"an append ran ${jobs.get} jobs")
+  }
+
+  test("an append runs one Spark job and its partition counts equal a " +
+    "groupBy over the data") {
+    val table = tmpTable()
+    val (snap, jobs) = withJobCount(SnapshotSink.append(data(0 until 100), table, "id", Seq("part")))
+    assert(jobs == 1, s"an append ran $jobs jobs")
     assert(snap.rowCount == 100)
     assert(snap.partitionRowCounts == countsByPart(SnapshotSink.read(spark, table)))
     assert(snap.partitionRowCounts == Map("0" -> 25L, "1" -> 25L, "2" -> 25L, "3" -> 25L))
@@ -465,6 +479,85 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(SnapshotSink.read(spark, table, fmt).count() == 20)
   }
 
+  test("a string partition column of digits reads back as the strings written, " +
+    "and planning a read runs no Spark job; a manifest without a schema infers") {
+    val table = tmpTable()
+    SnapshotSink.append(Seq((0L, "00"), (1L, "01"), (2L, "02")).toDF("id", "p"),
+      table, "id", Seq("p"))
+    val (back, jobs) = withJobCount(SnapshotSink.read(spark, table))
+    assert(back.schema("p").dataType == StringType)
+    assert(back.orderBy("id").select("p").as[String].collect().toSeq == Seq("00", "01", "02"))
+    assert(jobs == 0, s"planning a read ran $jobs jobs")
+    // a manifest written before the schema was recorded: Spark infers, as before
+    val manifest = Paths.get(table, "_snapshots", "v1.json")
+    val json = JsonMethods.parse(new String(Files.readAllBytes(manifest), "UTF-8"))
+    Files.write(manifest, JsonMethods.compact(json.removeField(_._1 == "schema")).getBytes("UTF-8"))
+    assert(SnapshotSink.read(spark, table).schema("p").dataType == IntegerType)
+  }
+
+  test("an append whose columns differ in name or type from the head's is " +
+    "refused before it writes; one that only reorders them is accepted") {
+    val table = tmpTable()
+    SnapshotSink.append(Seq((0L, "a", 0), (1L, "b", 1)).toDF("id", "s", "part"),
+      table, "id", Seq("part"))
+    def state = {
+      val s = Files.walk(Paths.get(table))
+      val paths = try s.iterator().asScala.map(_.toString).toSeq.sorted finally s.close()
+      (paths, SnapshotSink.read(spark, table).collect().map(_.toString).sorted.toSeq)
+    }
+    val before = state
+    val ex = intercept[IllegalArgumentException] {
+      SnapshotSink.append(Seq((2L, 2.5, 0)).toDF("id", "s", "part"), table, "id", Seq("part"))
+    }
+    assert(ex.getMessage.contains("s=string (table) vs double (writer)"), ex.getMessage)
+    intercept[IllegalArgumentException] {
+      SnapshotSink.appendMissing(Seq((2L, "c", 0, 9)).toDF("id", "s", "part", "x"),
+        table, "id", Seq("part"))
+    }
+    assert(state == before)
+    SnapshotSink.append(Seq((0, "c", 2L)).toDF("part", "s", "id"), table, "id", Seq("part"))
+    val back = SnapshotSink.read(spark, table)
+    assert(back.columns.toSeq == Seq("id", "s", "part"))
+    assert(back.orderBy("id").select("s").as[String].collect().toSeq == Seq("a", "b", "c"))
+  }
+
+  test("the lifecycle on a file: URI and on another Hadoop scheme reads as on " +
+    "a plain path, with its manifests under the table root") {
+    /** append, appendMissing (one with rows, one with none), compact,
+      * readAsOf, vacuum and vacuumOrphans; returns the final rows. */
+    def lifecycle(table: String): Seq[String] = {
+      SnapshotSink.append(data(0 until 30), table, "id", Seq("part"))
+      assert(SnapshotSink.appendMissing(data(0 until 50), table, "id", Seq("part"))
+        .map(_.rowCount).contains(20L))
+      assert(SnapshotSink.appendMissing(data(0 until 50), table, "id", Seq("part")).isEmpty)
+      SnapshotSink.compact(spark, table, "id", Seq("part"))
+      SnapshotSink.append(data(50 until 60), table, "id", Seq("part"))
+      assert(SnapshotSink.readAsOf(spark, table, 2).count() == 50)
+      val old = Seq(1, 2).flatMap(SnapshotSink.readSnapshot(table, _).files)
+      assert(SnapshotSink.vacuum(table, retainAsOf = 3).toSet == old.toSet)
+      assert(SnapshotSink.allSnapshots(table).map(_.id) == Seq(3, 4))
+      val orphan = new HPath(table, "_snapdir=snap1-orphan/part=0")
+      orphan.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(orphan)
+      // the emptied subtrees of v1 and v2 go with the orphan
+      assert(SnapshotSink.vacuumOrphans(table).toSet ==
+        old.map(_.split("/").head).toSet + "_snapdir=snap1-orphan")
+      SnapshotSink.read(spark, table).select("id", "part", "payload")
+        .collect().map(_.toString).sorted.toSeq
+    }
+    val plain = lifecycle(tmpTable())
+    assert(plain.size == 60)
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${ElsewhereFileSystem.scheme}.impl", classOf[ElsewhereFileSystem].getName)
+    for (scheme <- Seq("file", ElsewhereFileSystem.scheme)) {
+      val local = tmpTable()
+      val table = s"$scheme://$local"
+      assert(lifecycle(table) == plain, table)
+      // the relative path a plain-path join makes of the URI stays absent
+      assert(!Files.exists(Paths.get(table)), Paths.get(table).toAbsolutePath)
+      assert(listNames(Paths.get(local, "_snapshots")) == Seq("v3.json", "v4.json"), table)
+    }
+  }
+
   test("index transformation: truncate+renorm to a new snapshot table " +
     "(exm/IndexTransformation.java:117–120)") {
     val src = tmpTable(); val dst = tmpTable()
@@ -488,4 +581,16 @@ class SnapshotSinkSpec extends AnyFunSuite {
 
 object SnapshotSinkSpec {
   val evals = new java.util.concurrent.atomic.AtomicLong
+}
+
+/** The local file system under a scheme of its own: a table reached through
+  * it has no plain local path, so only a Hadoop FileSystem call can find it. */
+final class ElsewhereFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = ElsewhereFileSystem.uri
+  override def getScheme: String = ElsewhereFileSystem.scheme
+}
+
+object ElsewhereFileSystem {
+  val scheme = "elsewhere"
+  val uri: java.net.URI = java.net.URI.create(s"$scheme:///")
 }

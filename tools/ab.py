@@ -10,7 +10,10 @@ first on odd ones). Then prints, for every end-to-end metric in the
 change's BENCHMARK.json: each side's median and quartiles, the parent's IQR,
 the change's win count (ties count for neither), and whether the pairs support
 a gain (wins >= 9/10 of pairs and median gap > parent IQR). Failed operations
-are summed per side. Reads only perfbench's result line; writes nothing.
+are summed per side. A run that exits non-zero, or prints no result, is
+reported with its seed, side and exit code; its pair is left out of the
+quartiles and win counts, and each side's crashed runs are counted next to its
+failed operations. Reads only perfbench's result line; writes nothing.
 """
 import argparse
 import json
@@ -27,8 +30,8 @@ def run(checkout, workload, seed, seconds):
                        stderr=subprocess.DEVNULL, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not lines:
-        sys.exit(f"{checkout}: seed {seed} exited with {p.returncode}")
-    return json.loads(lines[-1])
+        return None, p.returncode
+    return json.loads(lines[-1]), 0
 
 
 def quartiles(xs):
@@ -49,20 +52,35 @@ def main():
     first, last = (int(x) for x in a.seeds.split("-"))
     sides = {"parent": a.parent_dir, "change": a.change_dir}
     results = {"parent": [], "change": []}
+    crashed = {"parent": 0, "change": 0}
     for i, seed in enumerate(range(first, last + 1)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        pair = {}
         for side in order:
-            r = run(sides[side], a.workload, seed, seconds)
-            results[side].append(r)
+            r, code = run(sides[side], a.workload, seed, seconds)
+            if r is None:
+                crashed[side] += 1
+                print(f"seed {seed} {side}: CRASHED, exit code {code}",
+                      file=sys.stderr, flush=True)
+                continue
+            pair[side] = r
             vals = " ".join(f"{n}={m['value']:.4g}" for n, m in r["metrics"].items())
             print(f"seed {seed} {side}: failed={r['failed']}/{r['attempted']} {vals}",
                   file=sys.stderr, flush=True)
+        if len(pair) == 2:
+            for side in pair:
+                results[side].append(pair[side])
 
     pairs = len(results["parent"])
-    print(f"{a.workload}: {pairs} pairs, {seconds:g} s runs")
-    print(f"{'metric':<12} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
-          f"{'parent IQR':>10} {'gap':>8} {'wins':>6}  gain")
-    for m in spec["end_to_end"]:
+    dropped = last + 1 - first - pairs
+    print(f"{a.workload}: {pairs} pairs, {seconds:g} s runs"
+          + (f" ({dropped} pairs with a crashed run left out)" if dropped else ""))
+    if pairs < 2:
+        print("too few complete pairs for quartiles")
+    else:
+        print(f"{'metric':<12} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
+              f"{'parent IQR':>10} {'gap':>8} {'wins':>6}  gain")
+    for m in spec["end_to_end"] if pairs >= 2 else []:
         name, lower = m["name"], m["better"] == "lower"
         p = [r["metrics"][name]["value"] for r in results["parent"]]
         c = [r["metrics"][name]["value"] for r in results["change"]]
@@ -77,7 +95,8 @@ def main():
     for side in ("parent", "change"):
         failed = sum(r["failed"] for r in results[side])
         attempted = sum(r["attempted"] for r in results[side])
-        print(f"{side}: {failed} of {attempted} operations failed")
+        print(f"{side}: {failed} of {attempted} operations failed, "
+              f"{crashed[side]} runs crashed")
 
 
 if __name__ == "__main__":
