@@ -114,7 +114,7 @@ object SnapshotSink {
    * with `file:` mapped to [[LocalWriteFileSystem]] (no `.crc` side files,
    * no forked `chmod`).
    */
-  private[graft] final class Table(spark: SparkSession, table: String) {
+  private[graft] final class Table(val spark: SparkSession, table: String) {
     val conf: Configuration = spark.sessionState.newHadoopConf()
     conf.set("fs.file.impl", classOf[LocalWriteFileSystem].getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
@@ -438,7 +438,7 @@ object SnapshotSink {
     * refuses the table if any manifest the read parses has another format
     * (a table written before its format was recorded has an empty one). */
   def read(spark: SparkSession, table: String, format: Map[String, String]): DataFrame =
-    load(spark, new Table(spark, table), Int.MaxValue, Some(format))
+    load(new Table(spark, table), Int.MaxValue, Some(format))
 
   /**
    * Time travel: the table state as of snapshot `asOf` (inclusive) — the
@@ -449,17 +449,16 @@ object SnapshotSink {
    * manifest chain).
    */
   def readAsOf(spark: SparkSession, table: String, asOf: Int): DataFrame =
-    load(spark, new Table(spark, table), asOf, None)
+    load(new Table(spark, table), asOf, None)
 
-  private def load(spark: SparkSession, t: Table, asOf: Int,
-                   format: Option[Map[String, String]]): DataFrame = {
+  private def load(t: Table, asOf: Int, format: Option[Map[String, String]]): DataFrame = {
     val snaps = snapshotsForRead(t, asOf)
     require(snaps.nonEmpty, s"no snapshots in $t at or before v$asOf")
     format.foreach(f => snaps.foreach(requireFormat(t, _, f, "reader")))
     val files = snaps.flatMap(_.files).map(f => (t / f).toString)
     // the recorded schema types the partition columns and spares the read
     // Spark's schema-inference job; older manifests have none
-    snaps.head.schema.fold(spark.read)(spark.read.schema)
+    snaps.head.schema.fold(t.spark.read)(t.spark.read.schema)
       .option("basePath", t.toString).parquet(files: _*).drop(snapDirCol)
   }
 
@@ -511,7 +510,7 @@ object SnapshotSink {
     val t = new Table(spark, table)
     val head = clock.fsCall(t.head).getOrElse(
       throw new IllegalStateException(s"no snapshots to compact in $table"))
-    val current = load(spark, t, Int.MaxValue, None)
+    val current = load(t, Int.MaxValue, None)
     val compacted =
       if (partitionCols.isEmpty) current.repartition(filesPerPartition)
       else if (filesPerPartition <= 1) current.repartition(partitionCols.map(col): _*)
@@ -607,14 +606,13 @@ object SnapshotSink {
                                 scope: Option[org.apache.spark.sql.Column],
                                 lineage: Map[String, String],
                                 format: Map[String, String]): Option[Snapshot] = {
-    val spark = df.sparkSession
     val clock = new CommitClock
-    val t = new Table(spark, table)
+    val t = new Table(df.sparkSession, table)
     val head = clock.fsCall(headFor(t, format))
     val fresh = head match {
       case None => df
       case Some(_) =>
-        val committed = load(spark, t, Int.MaxValue, None)
+        val committed = load(t, Int.MaxValue, None)
         val existing = scope.fold(committed)(committed.where(_)).select(col(keyCol))
         df.join(existing, Seq(keyCol), "left_anti")
     }
