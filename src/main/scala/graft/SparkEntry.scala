@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.{Curation, Dedup, Dsir, Similarity, TextOps}
+import graft.sources.Sources
 import graft.temporal.Temporal
 
 /**
@@ -18,7 +19,7 @@ import graft.temporal.Temporal
 object SparkEntry {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.parquet(spark, s"$dir/$name.parquet")
 
   /** The documents table spread across cores: it is ONE small parquet file,
     * so without an explicit repartition every row-local compute chain over
@@ -549,11 +550,12 @@ object SparkEntry {
         .when(m === 2, lit(" 한국어 텍스트"))
         .when(m === 3, lit("\u00A0nbsp\u00A0run \uD840\uDC00\uD840\uDC01"))
         .otherwise(lit(""))
-      val txt = concat(col("text"), tail)
+      // projected once, not copied into both counts
       docsSpread(s, dir)
+        .select(col("doc_id"), concat(col("text"), tail).as("t"))
         .select(col("doc_id"),
-          TextOps.tokenCount(txt).cast("long").as("n_tokens_ws"),
-          TextOps.tokenCountUnicode(txt).cast("long").as("n_tokens"))
+          TextOps.tokenCount(col("t")).cast("long").as("n_tokens_ws"),
+          TextOps.tokenCountUnicode(col("t")).cast("long").as("n_tokens"))
         .orderBy("doc_id")
     }),
 
@@ -573,9 +575,12 @@ object SparkEntry {
         .when(m4 === 1, lit("\nthis line trails off...\nand another one…"))
         .when(m4 === 2, lit(" ### ## # 123 456 789 ..."))
         .otherwise(lit(" the data have to be of use with care"))
-      val g = TextOps.gopherQuality(concat(rep, tail))
+      // the synthesized text is projected first: gopherQuality references
+      // its input about ten times, and CollapseProject keeps a non-cheap
+      // producer referenced more than once in its own projection
       docsSpread(s, dir)
-        .select(col("doc_id"), g.as("g"))
+        .select(col("doc_id"), concat(rep, tail).as("t"))
+        .select(col("doc_id"), TextOps.gopherQuality(col("t")).as("g"))
         .select(col("doc_id"),
           col("g.n_words").as("n_words"),
           round(col("g.mean_word_len"), 6).as("mean_word_len"),
@@ -1356,7 +1361,7 @@ object SparkEntry {
       Dedup.minhashSignatures(docs, "doc_id", "text",
         shingleN = 3, numHashes = 64)
         .write.mode("overwrite").parquet(sigDir)
-      val oldSigs = s.read.parquet(sigDir)
+      val oldSigs = Sources.parquet(s, sigDir)
       Dedup.minhashLshPairsIncremental(newBatch, oldSigs, "doc_id", "text",
         shingleN = 3, bands = 16, rowsPerBand = 4, threshold = 0.6)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))

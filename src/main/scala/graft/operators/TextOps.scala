@@ -226,11 +226,13 @@ object TextOps {
    * whitespace tokenization, without a per-token interpreted lambda —
    * CLAUDE.md's HOF cost rule). Zero-word documents fail `pass` and report
    * zero ratios (no division by zero). Row-local, codegen'd, no shuffle —
-   * composes with any scan at 100 TB.
+   * composes with any scan at 100 TB. Pass a column reference, not an
+   * expression: `text` is referenced about ten times, and an expression
+   * passed in is copied (and evaluated) at each reference.
    */
   def gopherQuality(text: Column, cfg: GopherConfig = GopherConfig()): Column = {
-    // every count signal is a regexp_count scan — the former
-    // size(regexp_extract_all(...)) forms materialized a match array per
+    // every count signal is a regexp_count, which Spark replaces with
+    // size(regexp_extract_all(...)): each still builds a match array per
     // signal per document just to take its length
     val nWords = tokenCount(text).cast("long")
     val safeW = greatest(nWords, lit(1L)).cast("double")

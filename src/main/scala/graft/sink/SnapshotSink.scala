@@ -527,7 +527,9 @@ object SnapshotSink {
    * are invisible to every read at `retainAsOf` or later — i.e. snapshots
    * subsumed by a compaction with id ≤ retainAsOf. Time travel below the
    * horizon is forfeited (the Iceberg `expire_snapshots` contract); reads at
-   * or after it are untouched. Returns the deleted data-file paths.
+   * or after it are untouched. Each expired snapshot's `_snapdir=` subtree
+   * goes with its files unless a retained manifest references a file under
+   * it. Returns the deleted data-file paths.
    */
   def vacuum(table: String, retainAsOf: Int): Seq[String] = {
     val t = at(table)
@@ -536,7 +538,9 @@ object SnapshotSink {
       .filter(s => s.id <= retainAsOf && s.lineage.contains("compacts_through"))
       .map(_.lineage("compacts_through").toInt)
       .foldLeft(0)(math.max)
-    val obsolete = snaps.filter(_.id <= horizon)
+    val (obsolete, retained) = snaps.partition(_.id <= horizon)
+    def subtrees(s: Snapshot) = s.files.map(_.takeWhile(_ != '/')).distinct
+    val kept = retained.flatMap(subtrees).toSet
     obsolete.flatMap { s =>
       // manifest FIRST (the commit point of expiry): a crash mid-vacuum then
       // leaves data files with no manifest — invisible, reclaimed by a re-run
@@ -544,7 +548,9 @@ object SnapshotSink {
       // which would turn time travel at the horizon into a missing-parquet
       // error instead of a clean expiry signal.
       t.fs.delete(t.manifest(s.id), false)
-      s.files.filter(f => t.fs.delete(t / f, false))
+      val deleted = s.files.filter(f => t.fs.delete(t / f, false))
+      subtrees(s).filterNot(kept).foreach(d => t.fs.delete(t / d, true))
+      deleted
     }
   }
 

@@ -1,11 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
- * Sources / sinks from SURVEY.md §2.1–2.2 that aren't plain parquet:
+ * Sources / sinks from SURVEY.md §2.1–2.2:
  *
+ *  - a parquet file or directory, read without Spark's schema-inference job.
  *  - S1 folder image scan: `binaryFile` source + extension filter
  *    (exm/FeatureExtraction.java:70–79 listed a dir and filtered by suffix).
  *  - S2 URL-list scan: text lines `[id<TAB>]url[<TAB>video]`
@@ -17,6 +25,42 @@ import org.apache.spark.sql.functions._
  *    `spark.sql.shuffle.partitions`).
  */
 object Sources {
+
+  /** A parquet file or directory as `spark.read.parquet(path)` reads it —
+    * same schema, partition columns still discovered — planned without a
+    * Spark job: the schema is read on the driver ([[parquetSchema]]) and
+    * passed to the reader, where Spark's own inference starts a job per
+    * read. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The data schema Spark's parquet inference gives `path` with
+    * `mergeSchema` off, from one footer read on the driver. The file is the
+    * one `ParquetUtils.inferSchema` picks from the listing
+    * `InMemoryFileIndex` makes (hidden `_`/`.` names skipped, sorted by
+    * path): `_common_metadata`, else `_metadata`, else the first data file.
+    * The footer is converted by Spark's own `readSchemaFromFooter` (the
+    * Spark row-metadata key first) under the session's parquet settings
+    * (INT96, binary-as-string, timestamp-NTZ). */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leaves(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot(s => GraftBridge.hiddenFileName(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    val files = leaves(root).sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = (summaries.map(n => files.find(_.getPath.getName == n)) :+
+      files.find(f => !summaries.contains(f.getPath.getName))).flatten.headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet file under $path to read a schema from"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** S1: scan a directory of images as (path, modificationTime, length,
     * content), filtered to the reference's extension set. */

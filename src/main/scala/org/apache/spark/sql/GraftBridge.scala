@@ -28,4 +28,10 @@ object GraftBridge {
     * a returned DataFrame still reads lazily, so they cannot go sooner. */
   def createTempDir(namePrefix: String): java.io.File =
     org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
+
+  /** Whether Spark's file listing (`InMemoryFileIndex`) skips an entry of
+    * this name: `_` and `.` names other than the parquet summary files and
+    * `key=value` directories, and `._COPYING_` files. */
+  def hiddenFileName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession.withJobs
 
 /** Physical-plan audits: the declarative formulations must actually get the
   * Catalyst treatment they were designed for (predicate pushdown, column
@@ -167,6 +170,14 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("gopherQuality over q_gopher_quality's synthesized text evaluates " +
+    "the synthesized concat once") {
+    val plan = SparkEntry.queries("q_gopher_quality")(spark, sf).queryExecution.optimizedPlan
+    val concats = plan.collect { case n => n.expressions.map(_.collect {
+      case c: org.apache.spark.sql.catalyst.expressions.Concat => c }.size).sum }.sum
+    assert(concats == 1, s"$concats concat evaluations in\n${plan.toString.take(600)}")
+  }
+
   test("size-derived input spread reads the table size through its " +
     "FileSystem: a file: URI plans the same spread as the plain path") {
     // sf0.1's documents (~0.6 MB) spread 4 ways in the 4-core test session
@@ -278,5 +289,23 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Window"))
     assert(plan.contains("vec_squared_l2"), "exact re-rank must use the " +
       "native expression")
+  }
+
+  test("no driver query starts Spark's parquet schema-inference job while " +
+    "it is built") {
+    // the inference job is started inside `DataFrameReader.parquet`: its
+    // stage call site (`details`) starts at that frame. Spark's own frames
+    // below it (`SchemaMergeUtils.mergeSchemasInParallel`) are cut from the
+    // call site, so the reader frame is what marks the job.
+    def inference(jobs: Seq[SparkListenerJobStart]): Seq[String] =
+      jobs.flatMap(_.stageInfos).map(_.details)
+        .filter(_.linesIterator.nextOption().exists(_.contains(".DataFrameReader.")))
+    assert(inference(withJobs(spark.read.parquet(s"$sf/documents.parquet"))._2).nonEmpty,
+      "the probe must see the job spark.read.parquet starts")
+    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
+      val found = inference(withJobs(SparkEntry.queries(q)(spark, sf))._2)
+      assert(found.size == 0, s"$q started an inference job: " +
+        found.take(1).flatMap(_.linesIterator.take(2)).mkString(" | "))
+    }
   }
 }

@@ -5,13 +5,12 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
-import org.apache.spark.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.withJobCount
 import graft.sink.SnapshotSink
 
 /** Snapshot sink: atomic manifest-last commit, per-partition lineage/metrics,
@@ -155,6 +154,10 @@ class SnapshotSinkSpec extends AnyFunSuite {
     SnapshotSink.allSnapshots(table).flatMap(_.files).foreach { f =>
       assert(Files.exists(root.resolve(f)), s"manifest references deleted $f")
     }
+    // the expired snapshots' subtrees are gone with their files
+    subsumedFiles.map(_.split("/").head).foreach { d =>
+      assert(!Files.exists(root.resolve(d)), s"expired subtree $d left behind")
+    }
     // vacuum with no compaction at/below the horizon deletes nothing
     val table2 = tmpTable()
     SnapshotSink.append(data(0 until 10), table2, "id", Seq("part"))
@@ -215,23 +218,6 @@ class SnapshotSinkSpec extends AnyFunSuite {
     SnapshotSink.append(data(10 until 15), table, "id", Seq("part"))
     assert(SnapshotSink.vacuumOrphans(table) == Seq("_snapdir=snap2-inflight"))
     assert(SnapshotSink.read(spark, table).count() == 15)
-  }
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      ListenerBusBridge.drain(sc)
-      jobs.set(0)
-      val r = body
-      ListenerBusBridge.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("an append runs one Spark job and its partition counts equal a " +
@@ -538,9 +524,9 @@ class SnapshotSinkSpec extends AnyFunSuite {
       assert(SnapshotSink.allSnapshots(table).map(_.id) == Seq(3, 4))
       val orphan = new HPath(table, "_snapdir=snap1-orphan/part=0")
       orphan.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(orphan)
-      // the emptied subtrees of v1 and v2 go with the orphan
-      assert(SnapshotSink.vacuumOrphans(table).toSet ==
-        old.map(_.split("/").head).toSet + "_snapdir=snap1-orphan")
+      // vacuum took the subtrees of v1 and v2 with their files: only the
+      // planted orphan is left to sweep
+      assert(SnapshotSink.vacuumOrphans(table) == Seq("_snapdir=snap1-orphan"))
       SnapshotSink.read(spark, table).select("id", "part", "payload")
         .collect().map(_.toString).sorted.toSeq
     }

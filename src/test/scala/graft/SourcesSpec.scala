@@ -2,16 +2,90 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.withJobCount
 import graft.kernels.Imaging
 import graft.sources.Sources
 
-/** Non-parquet sources/sinks (SURVEY §2.1–2.2): folder scan with extension
-  * filter, URL-list parsing with id munging, CSV vector dump round-trip. */
+/** Sources/sinks (SURVEY §2.1–2.2): the parquet reader that plans without
+  * Spark's schema-inference job, folder scan with extension filter, URL-list
+  * parsing with id munging, CSV vector dump round-trip. */
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** `Sources.parquet` reads `path` as `spark.read.parquet` does: same
+    * schema, same rows. */
+  private def assertReadsAsSpark(path: String): DataFrame = {
+    val ours = Sources.parquet(spark, path)
+    val theirs = spark.read.parquet(path)
+    assert(ours.schema == theirs.schema, path)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(ours) == rows(theirs), path)
+    ours
+  }
+
+  private def tmpDir(prefix: String): String =
+    Files.createTempDirectory(prefix).resolve("t").toString
+
+  test("parquet: the schema equals Spark's inferred one on every testdata " +
+    "table at sf0.001, sf0.01 and sf0.1") {
+    val tables = for {
+      sf <- Seq("sf0.001", "sf0.01", "sf0.1")
+      f <- new java.io.File(s"/root/testdata/$sf").listFiles().toSeq
+      if f.getName.endsWith(".parquet")
+    } yield f.getPath
+    assert(tables.size == 30)
+    tables.foreach { p =>
+      assert(Sources.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+  }
+
+  test("parquet: a Spark-written directory of several part files and " +
+    "_SUCCESS reads as Spark reads it") {
+    val dir = tmpDir("graft_parts")
+    (0 until 40).map(i => (i.toLong, s"s$i", i * 0.5)).toDF("id", "s", "x")
+      .repartition(3).write.parquet(dir)
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.contains("_SUCCESS"))
+    assert(names.count(n => n.startsWith("part-") && n.endsWith(".parquet")) == 3)
+    assert(assertReadsAsSpark(dir).count() == 40)
+  }
+
+  test("parquet: a p=… partitioned directory still discovers its partition " +
+    "column") {
+    val dir = tmpDir("graft_partitioned")
+    (0 until 30).map(i => (i.toLong, i % 3, s"v$i")).toDF("id", "p", "payload")
+      .write.partitionBy("p").parquet(dir)
+    val back = assertReadsAsSpark(dir)
+    assert(back.columns.toSeq == Seq("id", "payload", "p"))
+    assert(back.schema("p").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(back.where($"p" === 1).count() == 10)
+  }
+
+  test("parquet: timestamp, decimal, array, struct and map columns read as " +
+    "Spark reads them") {
+    val dir = tmpDir("graft_types")
+    spark.range(5).selectExpr(
+      "id",
+      "timestamp_seconds(id * 86400) AS ts",
+      "CAST(id AS DECIMAL(12, 3)) / 7 AS dec",
+      "array(id, id + 1) AS arr",
+      "named_struct('a', id, 'b', CAST(id AS STRING)) AS st",
+      "map(CAST(id AS STRING), array(id)) AS m")
+      .write.parquet(dir)
+    val back = assertReadsAsSpark(dir)
+    assert(back.columns.toSeq == Seq("id", "ts", "dec", "arr", "st", "m"))
+  }
+
+  test("parquet: planning a read runs no Spark job, where Spark's inference " +
+    "runs one") {
+    val p = "/root/testdata/sf0.001/documents.parquet"
+    assert(withJobCount(Sources.parquet(spark, p))._2 == 0)
+    assert(withJobCount(spark.read.parquet(p))._2 >= 1)
+  }
 
   test("readImageFolder: binaryFile scan + extension filter (S1/F1)") {
     val dir = Files.createTempDirectory("graft_imgs")
