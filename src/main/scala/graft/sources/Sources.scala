@@ -42,7 +42,7 @@ object Sources {
     * The footer is converted by Spark's own `readSchemaFromFooter` (the
     * Spark row-metadata key first) under the session's parquet settings
     * (INT96, binary-as-string, timestamp-NTZ). */
-  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+  private def parquetSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)

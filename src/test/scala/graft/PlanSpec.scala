@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Concat
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -173,8 +174,7 @@ class PlanSpec extends AnyFunSuite {
   test("gopherQuality over q_gopher_quality's synthesized text evaluates " +
     "the synthesized concat once") {
     val plan = SparkEntry.queries("q_gopher_quality")(spark, sf).queryExecution.optimizedPlan
-    val concats = plan.collect { case n => n.expressions.map(_.collect {
-      case c: org.apache.spark.sql.catalyst.expressions.Concat => c }.size).sum }.sum
+    val concats = plan.flatMap(_.expressions.flatMap(_.collect { case c: Concat => c })).size
     assert(concats == 1, s"$concats concat evaluations in\n${plan.toString.take(600)}")
   }
 

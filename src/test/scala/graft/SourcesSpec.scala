@@ -44,7 +44,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("parquet: a Spark-written directory of several part files and " +
-    "_SUCCESS reads as Spark reads it") {
+    "_SUCCESS reads as Spark reads it; one of hidden files only is refused") {
     val dir = tmpDir("graft_parts")
     (0 until 40).map(i => (i.toLong, s"s$i", i * 0.5)).toDF("id", "s", "x")
       .repartition(3).write.parquet(dir)
@@ -52,6 +52,12 @@ class SourcesSpec extends AnyFunSuite {
     assert(names.contains("_SUCCESS"))
     assert(names.count(n => n.startsWith("part-") && n.endsWith(".parquet")) == 3)
     assert(assertReadsAsSpark(dir).count() == 40)
+    // a directory holding only hidden files has no footer to read
+    val empty = tmpDir("graft_empty")
+    spark.range(0).write.parquet(empty)
+    new java.io.File(empty).listFiles().filter(_.getName.startsWith("part-")).foreach(_.delete())
+    val ex = intercept[IllegalArgumentException](Sources.parquet(spark, empty))
+    assert(ex.getMessage.contains(empty), ex.getMessage)
   }
 
   test("parquet: a p=… partitioned directory still discovers its partition " +

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -33,7 +35,7 @@ object SparkTestSession {
       jobs.clear()
       val r = body
       ListenerBusBridge.drain(sc)
-      (r, jobs.toArray(Array.empty[SparkListenerJobStart]).toSeq)
+      (r, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
