@@ -151,9 +151,9 @@ object ImageQueries {
 
     // PQ ADC k-NN (T2): IVFADC search with every list probed — per-list LUTs
     // of the residual-transformed query (ds/IVFPQ.java:408–450) ride in ONE
-    // broadcast inside a native adc_probe expression; the scan reads only
-    // (pq_code, list_id), never vectors, and the plan holds no LUT literals
-    // (reference-scale LUTs are demonstrated to plan in PlanSpec).
+    // broadcast read by the search's scan tasks, which keep a bounded heap
+    // per query; the scan reads only (id, list_id, pq_code), never vectors,
+    // and no plan holds LUT literals.
     "q_image_adc_knn" -> ((s, dir) => {
       val (qv, bundle, rows) = imageQuery(pipeline(s, dir))
       Similarity.ivfPqSearchMany(rows, "image_id", Seq(0L -> qv),

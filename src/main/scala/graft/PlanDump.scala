@@ -1,8 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SimpleMode}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 
 /**
@@ -56,12 +58,30 @@ object PlanDump {
     sb.append("# PLANS — key physical plans (generated by graft.PlanDump)\n\n")
     sb.append("Evidence that the declarative formulations get the intended Catalyst\n")
     sb.append("treatment; assertions live in PlanSpec, this file is the human-readable dump.\n")
-    def dump(title: String, df: org.apache.spark.sql.DataFrame, note: String,
-             limit: Int = 3500): Unit = {
+    def dumpPlan(title: String, plan: String, note: String, limit: Int = 3500): Unit = {
       sb.append(s"\n## $title\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode).take(limit))
+      sb.append(plan.take(limit))
       sb.append("\n```\n")
+    }
+    def dump(title: String, df: org.apache.spark.sql.DataFrame, note: String,
+             limit: Int = 3500): Unit =
+      dumpPlan(title, df.queryExecution.explainString(SimpleMode), note, limit)
+    // An operator that runs its own Spark job returns a local result whose
+    // plan is a LocalTableScan; its evidence is the plan of the SQL execution
+    // it names, captured as query listeners see it.
+    def executionPlan(name: String)(body: => Unit): String = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(n: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (n == name) { plans.add(qe.explainString(SimpleMode)); () }
+        override def onFailure(n: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        body
+        GraftBridge.drainListenerBus(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      plans.asScala.mkString("\n")
     }
     // The candidate-generation dedup operators eagerly checkpoint their
     // (small) pair output, so their executed form explains as an opaque
@@ -190,7 +210,8 @@ object PlanDump {
         "graceful path for a query side too large to broadcast; per-group bounded-heap " +
         "top-k (partial `bounded_top_k` before the exchange) is unchanged.")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    dump("Batched IVFADC search (one scan stage, probe table in the LUT broadcast)", {
+    dumpPlan("Batched IVFADC search (one scan job, per-task heaps, no Exchange)",
+      executionPlan("ivfPqSearchMany") {
       val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       val head = emb.where(col("vec_id") < 16).orderBy("vec_id")
         .select("embedding").collect()
@@ -205,13 +226,14 @@ object PlanDump {
       graft.operators.Similarity.ivfPqSearchMany(enc, "vec_id",
         (0 until 3).map(qi => (qi.toLong, head(qi))), centroids, pq,
         k = 10, nprobe = 4)
-    }, "ONE scan of the encoded corpus (static IN filter on list_id → partition " +
-      "pruning on a list_id-partitioned snapshot) and no join: one broadcast maps " +
-      "each probed list to the ids of the queries probing it and their LUTs, " +
-      "Generate inline(adc_probe(pq_code, list_id)) emits (query_id, adc_dist) per " +
-      "probing query, and ObjectHashAggregate(bounded_top_k) ranks per query. No " +
-      "per-query Union, no BroadcastExchange — the plan is |Q|-invariant " +
-      "(SimilaritySpec asserts).")
+      ()
+    }, "The plan of the `ivfPqSearchMany` execution the call runs: ONE pruned scan " +
+      "stage of the encoded corpus (static IN filter on list_id → partition pruning " +
+      "on a list_id-partitioned snapshot) projecting (id, list_id, pq_code). Each task " +
+      "scores its rows against the queries probing their list, from one broadcast " +
+      "that maps each probed list to those query ids and their LUTs, and keeps one " +
+      "k-bounded heap per query; the driver merges the heaps. No Exchange, no join, " +
+      "no per-query Union — one job of one stage at any |Q| (SimilaritySpec asserts).")
     dump("Per-group mean embedding (native vec_mean aggregate)",
       SparkEntry.queries("q_embed_label_centroid")(spark, sf),
       "ObjectHashAggregate partial→final around one exchange: each task folds its " +

@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /**
- * Native Catalyst expressions for PQ code-table scans (T2/T3/T4/T6,
+ * Native Catalyst expressions for PQ code-table scans, and the task-side
+ * IVFADC batch scorer [[PqExpressions.probeTopK]] (T2/T3/T4/T6,
  * ds/PQ.java:303–317 ADC, :334–374 SDC; ds/IVFPQ.java:464–497 pair distance).
  *
  * The round-1 formulation embedded the LUT as nested array literals and
@@ -90,48 +91,46 @@ object PqExpressions {
   final case class ProbeList(queryIds: Array[Long], luts: Array[Array[Array[Double]]])
 
   /**
-   * IVFADC batch scan (ds/IVFPQ.java:408–450 for a query set): a stored row's
-   * (pq_code, list_id) → one (query_id, adc_dist) per query that probes the
-   * row's list. `probes` maps list_id → [[ProbeList]], so the probe table
-   * rides in the same broadcast as the LUTs and the scan needs no join; a
-   * row of an un-probed list fails loudly (the caller's IN filter keeps
-   * them out). `inline` expands the result into rows.
+   * IVFADC batch scan of one partition (ds/IVFPQ.java:408–450 for a query
+   * set): each (id, list_id, pq_code) row is scored against every query that
+   * probes the row's list, Σ_j lut[j][code_j] for j = 0…m−1 in order, and
+   * offered to that query's k-bounded [[BoundedTopK.Buffer]] under
+   * [[BoundedTopK.order]] (adc_dist asc, id asc). `probes` maps list_id →
+   * [[ProbeList]]. Rows with a null id, list_id or pq_code give no
+   * candidates; a row of a list with no entry in `probes`, or a code whose
+   * length is not the LUT's, fails loudly naming `what`. Returns, per query
+   * with a candidate, its id and its heap's entries (adc_dist, id, list_id).
    */
-  case class AdcProbe(
-      left: Expression, // pq_code: array<int>
-      right: Expression, // list_id: int
-      probes: Broadcast[Map[Int, ProbeList]])
-      extends BinaryExpression with CodegenFallback {
-
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("query_id", LongType, nullable = false),
-      StructField("adc_dist", DoubleType, nullable = false))), containsNull = false)
-    override def prettyName: String = "adc_probe"
-
-    @transient private lazy val table: Array[ProbeList] =
-      byListId(probes.value, "adc_probe")
-
-    override def nullSafeEval(codeAny: Any, listAny: Any): Any = {
-      val code = codeAny.asInstanceOf[ArrayData]
-      val p = entry(table, listAny.asInstanceOf[Int], "adc_probe")
-      val out = new Array[Any](p.queryIds.length)
-      var q = 0
-      while (q < out.length) {
-        out(q) = new GenericInternalRow(
-          Array[Any](p.queryIds(q), adcSum(code, p.luts(q), "adc_probe")))
-        q += 1
+  def probeTopK(rows: Iterator[InternalRow], probes: Map[Int, ProbeList],
+                idType: DataType, k: Int,
+                what: String): Array[(Long, Array[BoundedTopK.Entry])] = {
+    val table = byListId(probes, what)
+    val order = BoundedTopK.order(DoubleType, idType, ascending = true)
+    val heaps = scala.collection.mutable.HashMap.empty[Long, BoundedTopK.Buffer]
+    // per list, the heaps of its probing queries, index-aligned with its LUTs
+    val heapsOf = table.map(p =>
+      if (p == null) null
+      else p.queryIds.map(q => heaps.getOrElseUpdate(q, new BoundedTopK.Buffer(k))))
+    rows.foreach { row =>
+      if (!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(2)) {
+        val li = row.getInt(1)
+        val p = entry(table, li, what)
+        val hs = heapsOf(li)
+        val code = row.getArray(2)
+        val id = row.get(0, idType)
+        val list = Int.box(li)
+        var q = 0
+        while (q < hs.length) {
+          val e = BoundedTopK.Entry(adcSum(code, p.luts(q), what), id, list)
+          // the id may be backed by the scan's reused row: copy survivors only
+          if (hs(q).admits(e, order))
+            hs(q).insert(e.copy(id = BoundedTopK.copyValue(id)), order)
+          q += 1
+        }
       }
-      new GenericArrayData(out)
     }
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcProbe =
-      copy(left = l, right = r)
+    heaps.iterator.collect { case (q, h) if h.size > 0 => (q, h.toArray) }.toArray
   }
-
-  def adc_probe(code: Column, listId: Column,
-                probes: Broadcast[Map[Int, ProbeList]]): Column =
-    GraftBridge.column(AdcProbe(
-      GraftBridge.expression(code), GraftBridge.expression(listId), probes))
 
   /** Scalar kernel for [[IvfPqEncode]]: array data → [[graft.model.IvfPq]]
     * encode → struct. Called from interpreted eval AND generated code. */

@@ -54,17 +54,8 @@ case class BoundedTopK(
     StructField("payload", payload.dataType, nullable = true))),
     containsNull = false)
 
-  // (score asc|desc, id asc) total order; "worse" sorts later
-  @transient private lazy val scoreOrd: Ordering[Any] = {
-    val base = orderingFor(score.dataType)
-    if (ascending) base else base.reverse
-  }
-  @transient private lazy val idOrd: Ordering[Any] = orderingFor(id.dataType)
-
-  private def cmp(a: Entry, b: Entry): Int = {
-    val s = scoreOrd.compare(a.score, b.score)
-    if (s != 0) s else idOrd.compare(a.id, b.id)
-  }
+  @transient private lazy val cmp: (Entry, Entry) => Int =
+    order(score.dataType, id.dataType, ascending)
 
   override def createAggregationBuffer(): Buffer = new Buffer(k)
 
@@ -74,8 +65,7 @@ case class BoundedTopK(
     if (s != null && i != null) {
       // insert-or-reject against the current worst BEFORE copying (values from
       // the input row may be backed by reused buffers; copy only survivors)
-      val candidate = Entry(s, i, null)
-      if (buffer.size < k || cmp(candidate, buffer.worst) < 0) {
+      if (buffer.admits(Entry(s, i, null), cmp)) {
         val p = payload.eval(input)
         buffer.insert(
           Entry(copyValue(s), copyValue(i), if (p == null) null else copyValue(p)),
@@ -86,17 +76,13 @@ case class BoundedTopK(
   }
 
   override def merge(buffer: Buffer, other: Buffer): Buffer = {
-    other.foreach { e =>
-      if (buffer.size < k || cmp(e, buffer.worst) < 0) buffer.insert(e, cmp)
-    }
+    other.foreach(e => buffer.offer(e, cmp))
     buffer
   }
 
-  override def eval(buffer: Buffer): Any = {
-    val sorted = buffer.toArray.sortWith((a, b) => cmp(a, b) < 0)
-    new GenericArrayData(sorted.map(e =>
+  override def eval(buffer: Buffer): Any =
+    new GenericArrayData(buffer.sorted(cmp).map(e =>
       new GenericInternalRow(Array[Any](e.score, e.id, e.payload))))
-  }
 
   override def serialize(buffer: Buffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -147,11 +133,17 @@ object BoundedTopK {
     private val heap = new java.util.PriorityQueue[EntryBox](math.max(1, k))
     def size: Int = heap.size()
     def worst: Entry = heap.peek().e
+    /** Whether `e` would enter: the heap is not full, or `e` beats the worst. */
+    def admits(e: Entry, cmp: (Entry, Entry) => Int): Boolean =
+      heap.size() < k || cmp(e, worst) < 0
     def insert(e: Entry, cmp: (Entry, Entry) => Int): Unit = {
       heap.offer(new EntryBox(e, cmp))
       if (heap.size() > k) heap.poll()
       ()
     }
+    /** Insert `e` if it [[admits]] it. */
+    def offer(e: Entry, cmp: (Entry, Entry) => Int): Unit =
+      if (admits(e, cmp)) insert(e, cmp)
     def foreach(f: Entry => Unit): Unit = {
       val it = heap.iterator()
       while (it.hasNext) f(it.next().e)
@@ -162,6 +154,9 @@ object BoundedTopK {
       while (it.hasNext) { out(i) = it.next().e; i += 1 }
       out
     }
+    /** The entries best first. */
+    def sorted(cmp: (Entry, Entry) => Int): Array[Entry] =
+      toArray.sortWith((a, b) => cmp(a, b) < 0)
   }
 
   /** PriorityQueue element ordered worst-first (reverse of the best-first
@@ -169,6 +164,18 @@ object BoundedTopK {
   private final class EntryBox(val e: Entry, cmp: (Entry, Entry) => Int)
       extends Comparable[EntryBox] {
     override def compareTo(o: EntryBox): Int = -cmp(e, o.e)
+  }
+
+  /** The top-k order, best first: score ascending (or descending) under its
+    * type's total order, then id ascending. */
+  def order(scoreType: DataType, idType: DataType,
+            ascending: Boolean): (Entry, Entry) => Int = {
+    val scoreOrd = if (ascending) orderingFor(scoreType) else orderingFor(scoreType).reverse
+    val idOrd = orderingFor(idType)
+    (a, b) => {
+      val s = scoreOrd.compare(a.score, b.score)
+      if (s != 0) s else idOrd.compare(a.id, b.id)
+    }
   }
 
   private[functions] def orderingFor(dt: DataType): Ordering[Any] = (dt match {
@@ -185,7 +192,7 @@ object BoundedTopK {
   })
 
   /** Internal-format values may be backed by reused buffers — copy survivors. */
-  private def copyValue(v: Any): Any = v match {
+  private[functions] def copyValue(v: Any): Any = v match {
     case u: UTF8String => u.clone()
     case a: ArrayData => a.copy()
     case other => other // primitives are immutable

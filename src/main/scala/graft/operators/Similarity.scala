@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.BoundedTopK
-import graft.functions.PqExpressions.{ProbeList, adc_probe}
+import graft.functions.PqExpressions.{ProbeList, probeTopK}
 import graft.model.{IvfPq, NoTransform, VectorTransform}
 
 /**
@@ -162,25 +167,28 @@ object Similarity {
         col("__enc.pq_code").as("pq_code"))
   }
 
-  /** Multi-query IVFADC as ONE scan stage (ds/IVFPQ.java:408–450 at |Q|
-    * scale — the set-based twin of what [[ivfTopK]] does for raw cosine):
-    * probe selection and per-(query, list) ADC LUTs come from the
+  /** Multi-query IVFADC as ONE Spark job of one scan stage
+    * (ds/IVFPQ.java:408–450 at |Q| scale — the set-based twin of what
+    * [[ivfTopK]] does for raw cosine). The call runs the search: probe
+    * selection and per-(query, list) ADC LUTs come from the
     * [[graft.model.IvfPq]] codec driver-side over the BOUNDED query set and
     * are grouped per list into ONE broadcast: list l → the ids of the queries
     * probing l and their LUTs (|Q|·nprobe tables of m×k_s doubles);
     * `transform` is the pre-PQ transform the corpus was encoded under (a
     * [[graft.model.ModelBundle]]'s, or none for [[ivfPqEncode]] output). The
-    * encoded corpus is scanned under a static `list_id IN (…)` filter
-    * (partition-pruned when the corpus is list_id-partitioned on disk);
-    * `adc_probe` maps each row to its (query_id, adc_dist) pairs, `inline`
-    * expands them, and a per-query [[BoundedTopK]] (adc asc, id tie-break)
-    * replaces N sort+limits. No join, no per-query union: the corpus is
-    * scanned ONCE and the plan is the same for any |Q|. Rows with a null
-    * `list_id` or `pq_code` (featurize error rows) give no candidates. For
-    * corpus×corpus workloads use the LSH/near-dup operators instead — an
-    * unbounded query side must not drive driver-side LUT construction.
-    * Returns (query_id, neighbor_id, list_id, adc_dist), per query the k best
-    * by (adc_dist asc, id asc). */
+    * encoded corpus is scanned once under a static `list_id IN (…)` filter
+    * (partition-pruned when the corpus is list_id-partitioned on disk), as a
+    * SQL execution named "ivfPqSearchMany" that query listeners see; each
+    * task keeps one k-bounded heap per query
+    * ([[graft.functions.PqExpressions.probeTopK]], [[BoundedTopK]]'s order:
+    * adc asc, id tie-break) and the driver merges the ≤ tasks·|Q|·k heap
+    * entries. No join, no per-query union, no shuffle: the plan is the same
+    * for any |Q|. Rows with a null `list_id` or `pq_code` (featurize error
+    * rows) give no candidates. For corpus×corpus workloads use the
+    * LSH/near-dup operators instead — an unbounded query side must not drive
+    * driver-side LUT construction. Returns a local DataFrame of (query_id,
+    * neighbor_id, list_id, adc_dist), per query the k best, ordered by
+    * (query_id, adc_dist, neighbor_id). */
   def ivfPqSearchMany(encoded: DataFrame, idCol: String,
                       queries: Seq[(Long, Array[Double])],
                       centroids: Array[Array[Double]],
@@ -200,17 +208,34 @@ object Similarity {
       .map { case (li, ps) =>
         li -> ProbeList(ps.map(_._2).toArray, ps.map(p => codec.lut(p._3, li)).toArray)
       }
-    val bcProbes = encoded.sparkSession.sparkContext.broadcast(probes)
-    val scored = encoded
+    val spark = encoded.sparkSession
+    val scan = encoded
       .where(col("list_id").isin(probes.keys.toSeq.sorted.map(Integer.valueOf): _*))
-      .select(col(idCol), col("list_id"),
-        inline(adc_probe(col("pq_code"), col("list_id"), bcProbes)))
-    scored.groupBy(col("query_id"))
-      .agg(BoundedTopK.topK(col("adc_dist"), col(idCol), col("list_id"), k,
-        ascending = true).as("__tk"))
-      .select(col("query_id"), explode(col("__tk")).as("e"))
-      .select(col("query_id"), col("e.id").as("neighbor_id"),
-        col("e.payload").as("list_id"), col("e.score").as("adc_dist"))
+      .select(col(idCol), col("list_id"), col("pq_code"))
+    val idField = scan.schema.head
+    val qe = scan.queryExecution
+    val bcProbes = spark.sparkContext.broadcast(probes)
+    val heaps = try {
+      SQLExecution.withNewExecutionId(qe, Some("ivfPqSearchMany")) {
+        spark.sparkContext.runJob(qe.toRdd, (rows: Iterator[InternalRow]) =>
+          probeTopK(rows, bcProbes.value, idField.dataType, k, "ivfPqSearchMany"))
+      }
+    } finally bcProbes.destroy()
+    val order = BoundedTopK.order(DoubleType, idField.dataType, ascending = true)
+    val merged = scala.collection.mutable.HashMap.empty[Long, BoundedTopK.Buffer]
+    heaps.foreach(_.foreach { case (q, es) =>
+      val h = merged.getOrElseUpdate(q, new BoundedTopK.Buffer(k))
+      es.foreach(h.offer(_, order))
+    })
+    val toId = CatalystTypeConverters.createToScalaConverter(idField.dataType)
+    val rows = merged.toSeq.sortBy(_._1).flatMap { case (q, h) =>
+      h.sorted(order).map(e => Row(q, toId(e.id), e.payload, e.score))
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("neighbor_id", idField.dataType, nullable = false),
+      StructField("list_id", IntegerType, nullable = true),
+      StructField("adc_dist", DoubleType, nullable = false))))
   }
 
   /**

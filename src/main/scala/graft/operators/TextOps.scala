@@ -31,13 +31,15 @@ object TextOps {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
-  /** Token COUNT without materializing the token array: the number of \S+
-    * runs equals size([[tokens]]) on every input (blank → 0 matches, and
-    * split-with-trim yields exactly one token per non-space run), but
-    * `regexp_count` is a single counting scan — no per-token string or
-    * array allocation. Counting feeds every token-budget consumer
-    * (gopher, mix reports, rebalance, packing), so the allocation-free form
-    * matters on a 100 TB scan. */
+  /** Token COUNT as the number of \S+ runs, which equals size([[tokens]])
+    * on every input (blank → 0 matches, and split-with-trim yields exactly
+    * one token per non-space run) without the trim and split. It is not
+    * allocation-free: Spark 4.1 replaces `regexp_count` with
+    * `size(regexp_extract_all(…))`, which builds one string per token and
+    * the match array (the optimized plan shows it). Counting feeds every
+    * token-budget consumer (gopher, mix reports, rebalance, packing); the
+    * ROADMAP item "Regex signal counts" holds the native counting
+    * expression that would remove the allocation. */
   def tokenCount(text: Column): Column = regexp_count(text, lit("\\S+"))
 
   /** CJK single-codepoint ranges (Han incl. Ext-A/B + compatibility, Hiragana,

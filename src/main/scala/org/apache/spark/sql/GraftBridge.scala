@@ -34,4 +34,9 @@ object GraftBridge {
     * `key=value` directories, and `._COPYING_` files. */
   def hiddenFileName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Wait until every event posted so far on the `private[spark]` listener
+    * bus has reached its listeners, query-execution listeners included. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
 }

@@ -108,25 +108,19 @@ class PqExpressionsSpec extends AnyFunSuite {
     "sub-vector mismatch") {
     val lut = Kernels.adcLookupTable(randVec(), pq)
     val bcLut = spark.sparkContext.broadcast(Map(0 -> lut))
-    val bcProbe = spark.sparkContext.broadcast(
-      Map(0 -> PqExpressions.ProbeList(Array(1L), Array(lut))))
-    val exprs = Seq[(String, (Column, Column) => Column)](
-      "adc_distance" -> ((c, l) => PqExpressions.adc_distance(c, l, bcLut)),
-      "adc_probe" -> ((c, l) => PqExpressions.adc_probe(c, l, bcProbe)))
+    def adc(c: Column, l: Column): Column = PqExpressions.adc_distance(c, l, bcLut)
     // every message in the cause chain: the failure may surface wrapped in a
     // SparkException (task failure) or bare (constant-folded on the driver)
     def messages(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-    exprs.foreach { case (name, f) =>
-      val badList = Seq((Array(1, 2, 3, 4), 7)).toDF("pq_code", "list_id")
-        .withColumn("d", f(col("pq_code"), col("list_id")))
-      val e1 = messages(intercept[Exception](badList.collect()))
-      assert(e1.contains(s"$name: no LUT for list_id=7"), e1)
-      val badCode = Seq((Array(1, 2), 0)).toDF("pq_code", "list_id")
-        .withColumn("d", f(col("pq_code"), col("list_id")))
-      val e2 = messages(intercept[Exception](badCode.collect()))
-      assert(e2.contains(s"$name: code has 2 sub-codes, LUT has $m"), e2)
-    }
+    val badList = Seq((Array(1, 2, 3, 4), 7)).toDF("pq_code", "list_id")
+      .withColumn("d", adc(col("pq_code"), col("list_id")))
+    val e1 = messages(intercept[Exception](badList.collect()))
+    assert(e1.contains("adc_distance: no LUT for list_id=7"), e1)
+    val badCode = Seq((Array(1, 2), 0)).toDF("pq_code", "list_id")
+      .withColumn("d", adc(col("pq_code"), col("list_id")))
+    val e2 = messages(intercept[Exception](badCode.collect()))
+    assert(e2.contains(s"adc_distance: code has 2 sub-codes, LUT has $m"), e2)
   }
 
   test("truncate_renorm == Kernels.truncateRenorm (shorten+renorm, no-op, zero→ones)") {

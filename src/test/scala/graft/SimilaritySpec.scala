@@ -346,11 +346,12 @@ class SimilaritySpec extends AnyFunSuite {
       .localCheckpoint(true)
     val queries = (0 until 5).map(qi => (qi.toLong, vecs(qi * 7)._2.map(_.toDouble)))
     val k = 10; val nprobe = 3
-    val many = Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, k, nprobe)
+    val (many, execs) = SparkTestSession.withExecutions(
+      Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, k, nprobe))
     // set-based shape: ONE scan of the encoded corpus — not |Q| unioned scans
     // (the round-4 shape) and no join to a probe table: the per-list probe
     // table rides in the LUT broadcast
-    val plan = many.queryExecution.executedPlan.toString
+    val plan = SparkTestSession.executedPlanOf(execs, "ivfPqSearchMany")
     assert(!plan.contains("Union"), s"per-query union survived:\n${plan.take(1200)}")
     assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"),
       s"probe join survived:\n${plan.take(1200)}")
@@ -404,6 +405,52 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("ivfPqSearchMany: a batch search and its collect run one Spark job of " +
+    "one stage and write no shuffle bytes") {
+    val (centroids, pq) = pqSetup
+    val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
+      .localCheckpoint(true)
+    val queries = (0 until 8).map(qi => (qi.toLong, vecs(qi * 5)._2.map(_.toDouble)))
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) {
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (got, jobs) = try SparkTestSession.withJobs(
+        Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, 10, 3).collect())
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(got.map(_.getLong(0)).distinct.length == queries.size)
+    val stagesPerJob = jobs.map(_.stageInfos.size)
+    assert(stagesPerJob == Seq(1), s"stages per job: $stagesPerJob")
+    assert(shuffleBytes.get == 0L, s"${shuffleBytes.get} shuffle bytes written")
+  }
+
+  test("ivfPqSearchMany fails loudly on a code/LUT length mismatch (a 2-sub-code " +
+    "row) and its scorer on a row of a list with no LUT") {
+    val (centroids, pq) = pqSetup
+    val qv = vecs(0)._2.map(_.toDouble)
+    val list = Kernels.kNearestCentroids(qv, centroids, 2).head
+    val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
+      .unionByName(Seq((9100L, list, Seq(1, 2))).toDF("vec_id", "list_id", "pq_code"))
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val e1 = messages(intercept[Exception](
+      Similarity.ivfPqSearchMany(enc, "vec_id", Seq((0L, qv)), centroids, pq, 10, 2)))
+    assert(e1.contains(s"ivfPqSearchMany: code has 2 sub-codes, LUT has ${pq.numSubVectors}"), e1)
+    // the IN filter keeps un-probed lists out of the search's scan, so the
+    // scorer is fed such a row directly
+    val lut = Kernels.adcLookupTable(Kernels.residual(qv, centroids(list)), pq)
+    val e2 = intercept[IllegalArgumentException](graft.functions.PqExpressions.probeTopK(
+      Iterator(org.apache.spark.sql.catalyst.InternalRow(1L, 7,
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(1, 2, 3, 4)))),
+      Map(0 -> graft.functions.PqExpressions.ProbeList(Array(1L), Array(lut))),
+      org.apache.spark.sql.types.LongType, 10, "ivfPqSearchMany")).getMessage
+    assert(e2.contains("ivfPqSearchMany: no LUT for list_id=7"), e2)
+  }
+
   test("ivfPqSearchMany rejects duplicate query ids, k < 1 and nprobe < 1") {
     val (centroids, pq) = pqSetup
     val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
@@ -427,8 +474,9 @@ class SimilaritySpec extends AnyFunSuite {
     graft.sink.SnapshotSink.append(enc, table, "vec_id", Seq("list_id"))
     val back = graft.sink.SnapshotSink.read(spark, table)
     val queries = Seq((0L, vecs(3)._2.map(_.toDouble)))
-    val res = Similarity.ivfPqSearchMany(back, "vec_id", queries, centroids, pq, 10, 2)
-    val plan = res.queryExecution.executedPlan.toString
+    val (res, execs) = SparkTestSession.withExecutions(
+      Similarity.ivfPqSearchMany(back, "vec_id", queries, centroids, pq, 10, 2))
+    val plan = SparkTestSession.executedPlanOf(execs, "ivfPqSearchMany")
     assert(plan.contains("PartitionFilters: [") &&
       plan.replaceAll("\\s", "").contains("list_id"),
       s"expected list_id in PartitionFilters:\n${plan.take(800)}")

@@ -2,9 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for all suites (see spark guide: one per suite,
   * here one per JVM — Test / fork gives us a fresh JVM per `sbt test` run). */
@@ -31,10 +32,10 @@ object SparkTestSession {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      ListenerBusBridge.drain(sc)
+      GraftBridge.drainListenerBus(sc)
       jobs.clear()
       val r = body
-      ListenerBusBridge.drain(sc)
+      GraftBridge.drainListenerBus(sc)
       (r, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
@@ -43,5 +44,34 @@ object SparkTestSession {
   def withJobCount[T](body: => T): (T, Int) = {
     val (r, jobs) = withJobs(body)
     (r, jobs.size)
+  }
+
+  /** `body`'s result and the SQL executions that ended in it, in end order:
+    * each execution's name (`collect`, or the name a library gave
+    * `SQLExecution.withNewExecutionId`) and its executed query. */
+  def withExecutions[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, durationNs: Long): Unit = {
+        execs.add((name, qe)); ()
+      }
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(listener)
+    try {
+      GraftBridge.drainListenerBus(sc)
+      execs.clear()
+      val r = body
+      GraftBridge.drainListenerBus(sc)
+      (r, execs.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The executed plan of the one execution named `name` among `execs`. */
+  def executedPlanOf(execs: Seq[(String, QueryExecution)], name: String): String = {
+    val named = execs.collect { case (n, qe) if n == name => qe }
+    assert(named.size == 1, s"${named.size} executions named $name in ${execs.map(_._1)}")
+    named.head.executedPlan.toString
   }
 }
