@@ -212,28 +212,28 @@ object Similarity {
     val scan = encoded
       .where(col("list_id").isin(probes.keys.toSeq.sorted.map(Integer.valueOf): _*))
       .select(col(idCol), col("list_id"), col("pq_code"))
-    val idField = scan.schema.head
+    val idType = scan.schema.head.dataType
+    val order = BoundedTopK.order(DoubleType, idType, ascending = true)
     val qe = scan.queryExecution
     val bcProbes = spark.sparkContext.broadcast(probes)
     val heaps = try {
       SQLExecution.withNewExecutionId(qe, Some("ivfPqSearchMany")) {
         spark.sparkContext.runJob(qe.toRdd, (rows: Iterator[InternalRow]) =>
-          probeTopK(rows, bcProbes.value, idField.dataType, k, "ivfPqSearchMany"))
+          probeTopK(rows, bcProbes.value, idType, k, "ivfPqSearchMany"))
       }
     } finally bcProbes.destroy()
-    val order = BoundedTopK.order(DoubleType, idField.dataType, ascending = true)
     val merged = scala.collection.mutable.HashMap.empty[Long, BoundedTopK.Buffer]
     heaps.foreach(_.foreach { case (q, es) =>
       val h = merged.getOrElseUpdate(q, new BoundedTopK.Buffer(k))
       es.foreach(h.offer(_, order))
     })
-    val toId = CatalystTypeConverters.createToScalaConverter(idField.dataType)
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
     val rows = merged.toSeq.sortBy(_._1).flatMap { case (q, h) =>
       h.sorted(order).map(e => Row(q, toId(e.id), e.payload, e.score))
     }
     spark.createDataFrame(rows.asJava, StructType(Seq(
       StructField("query_id", LongType, nullable = false),
-      StructField("neighbor_id", idField.dataType, nullable = false),
+      StructField("neighbor_id", idType, nullable = false),
       StructField("list_id", IntegerType, nullable = true),
       StructField("adc_dist", DoubleType, nullable = false))))
   }
