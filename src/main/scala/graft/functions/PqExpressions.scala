@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
 object PqExpressions {
 
   /** Broadcast map keyed by list_id → direct-index array (null = un-probed).
-    * Built ONCE per expression instance on the executor — the per-row path
-    * is plain array indexing. */
+    * Built ONCE per expression instance or scan task on the executor — the
+    * per-row path is plain array indexing. */
   private def byListId[T <: AnyRef: scala.reflect.ClassTag](m: Map[Int, T],
                                                             what: String): Array[T] = {
     require(m.nonEmpty, s"$what: empty LUT map")
