@@ -227,9 +227,13 @@ object PlanDump {
         (0 until 3).map(qi => (qi.toLong, head(qi))), centroids, pq,
         k = 10, nprobe = 4)
       ()
-    }, "The plan of the `ivfPqSearchMany` execution the call runs: ONE pruned scan " +
-      "stage of the encoded corpus (static IN filter on list_id → partition pruning " +
-      "on a list_id-partitioned snapshot) projecting (id, list_id, pq_code). Each task " +
+    }, "The plan of the `ivfPqSearchMany` execution the call runs: ONE scan stage of " +
+      "the encoded corpus projecting (id, list_id, pq_code). Here the corpus is " +
+      "unmaterialized `ivfPqEncode` output, so list_id is computed: no IN filter is " +
+      "pushed (it would copy the encode below the projection), `ivf_pq_encode` runs " +
+      "once per row and the tasks drop the unprobed lists' rows; over a stored " +
+      "list_id the static IN filter reaches the scan (partition pruning on a " +
+      "list_id-partitioned snapshot). Each task " +
       "scores its rows against the queries probing their list, from one broadcast " +
       "that maps each probed list to those query ids and their LUTs, and keeps one " +
       "k-bounded heap per query; the driver merges the heaps. No Exchange, no join, " +
@@ -310,13 +314,18 @@ object PlanDump {
     dump("Gopher quality rules (row-local struct projection)",
       SparkEntry.queries("q_gopher_quality")(spark, sf),
       "every Table-A1 signal is regex/arithmetic inside one WholeStageCodegen " +
-        "projection directly over the scan — no UDF, no exchange before the " +
-        "presentation sort; the same shape composes as a pushed filter on a " +
-        "100 TB curation scan.")
+        "projection — no UDF — over the input spread, a range exchange on doc_id " +
+        "directly over the scan; the presentation sort reuses that " +
+        "RangePartitioning, so the plan holds ONE exchange and the signals run " +
+        "once per document (the range sampling job reads only doc_id). The same " +
+        "projection composes as a pushed filter on a 100 TB curation scan.",
+      limit = 4500)
     dump("HTML text extraction (regexp_replace pass chain)",
       SparkEntry.queries("q_strip_html")(spark, sf),
-      "the full strip/decode/normalize chain is one codegen'd projection " +
-        "over the scan (no UDF, no shuffle) — and each pass is in the " +
+      "the full strip/decode/normalize chain is one codegen'd projection (no " +
+        "UDF) over the input spread, a range exchange on doc_id directly over the " +
+        "scan that the presentation sort reuses: ONE exchange, and the chain runs " +
+        "once per document — and each pass is in the " +
         "RE2 ∩ Java regex subset, so the DuckDB oracle hash-checks the " +
         "extraction byte-for-byte.")
     dump("DSIR importance resampling (fit → broadcast-ratio score → Gumbel top-k)", {

@@ -21,16 +21,22 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Sources.parquet(spark, s"$dir/$name.parquet")
 
-  /** The documents table spread across cores: it is ONE small parquet file,
-    * so without an explicit repartition every row-local compute chain over
-    * it (regex signals, hashing, tokenize+aggregate) runs in a SINGLE scan
-    * task (the CLAUDE.md single-file trap — at production scale parallelism
-    * comes from file count, so the spread costs nothing there and is an
-    * artifact of the synthetic layout here). Round-robin repartition is
-    * deterministic (sort-before-repartition) and every consumer re-orders
-    * or aggregates, so results are unaffected. */
+  /** The documents table spread across cores by range of `doc_id`, for the
+    * row-local queries presented in `doc_id` order. documents is ONE small
+    * parquet file, so without an explicit spread every row-local chain over
+    * it runs in a SINGLE scan task (the CLAUDE.md single-file trap — at
+    * production scale parallelism comes from file count). Spreading by range
+    * on the presentation key lets the final `orderBy("doc_id")` take the
+    * spread's RangePartitioning as its own: the sort plans no exchange, the
+    * range sampling job reads only the scan's `doc_id`, and the scorer runs
+    * once, in `defaultParallelism` tasks that AQE does not coalesce
+    * (REPARTITION_BY_NUM). A round-robin spread leaves the sort its own range
+    * exchange, whose sampling job re-runs the whole scorer chain. Queries
+    * whose spread feeds a shuffle first keep a round-robin spread
+    * ([[docsSpreadSized]], `q_pack_sequences`). */
   private def docsSpread(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents").repartition(spark.sparkContext.defaultParallelism)
+    t(spark, dir, "documents")
+      .repartitionByRange(spark.sparkContext.defaultParallelism, col("doc_id"))
 
   /** Partition count derived from the table's on-disk size (guide §2:
     * scale-ADAPTIVE spread, never a constant tuned to the host): one
@@ -54,11 +60,22 @@ object SparkEntry {
       (bytes / (128L * 1024)).toInt))
   }
 
-  /** documents spread over a size-derived partition count (dedup, LM and
-    * tokenizer queries). */
+  /** documents spread round-robin over a size-derived partition count, for
+    * the queries whose spread feeds a shuffle first (dedup, LM, vocabulary and
+    * n-gram aggregates) or explodes rows before its sort (`q_chunk_tokens`,
+    * measured slower under a range spread at sf0.1). */
   private def docsSpreadSized(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .repartition(sizeSpreadParts(spark, dir, "documents"))
+
+  /** documents spread by range of `doc_id` over a size-derived partition
+    * count, for the learned tokenizers and the quality classifier: their
+    * model is learned by an aggregate over the size-derived spread, and their
+    * row-local encode then runs once, under the range spread the final
+    * `orderBy("doc_id")` reuses (see [[docsSpread]]). */
+  private def docsSpreadSizedByDocId(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "documents")
+      .repartitionByRange(sizeSpreadParts(spark, dir, "documents"), col("doc_id"))
 
   /** Deterministic IVFPQ model minted from the first 16 embeddings —
     * SHARED by q_embed_ivfpq and q_embed_rerank, whose DuckDB oracles both
@@ -709,10 +726,12 @@ object SparkEntry {
     // The Window partitions by shard (the parallelism unit) — never an
     // unpartitioned global Window; only (id, n_tokens) pairs shuffle.
     "q_pack_sequences" -> ((s, dir) => {
-      // full-width spread (measured: the size-derived count regressed this
-      // one — the shard Window re-partitions anyway and the tokenization
-      // benefits from the wider first stage)
-      TextOps.packSequences(docsSpread(s, dir),
+      // full-width round-robin spread (measured: the size-derived count
+      // regressed this one — the shard Window re-partitions anyway and the
+      // tokenization benefits from the wider first stage; a range spread on
+      // doc_id adds the spread's sampling job and ran slower)
+      TextOps.packSequences(
+        t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism),
         "doc_id", "text", seqLen = 256, numShards = 8)
         .orderBy("doc_id")
     }),
@@ -810,7 +829,7 @@ object SparkEntry {
     // twin, the q_bpe_tokenize blocker; UnigramSpec is the correctness gate).
     // Learn → persistence round-trip → native Viterbi encode, like BPE.
     "q_unigram_tokenize" -> ((s, dir) => {
-      val docs = docsSpreadSized(s, dir)
+      val docs = docsSpreadSizedByDocId(s, dir)
       val learned = graft.ml.Unigram.learn(docs, "text", vocabSize = 600,
         maxWords = 20000, minCount = 2L)
       val model = graft.ml.Unigram.parseUnigramFile(
@@ -830,7 +849,7 @@ object SparkEntry {
     }),
 
     "q_bpe_tokenize" -> ((s, dir) => {
-      val docs = docsSpreadSized(s, dir)
+      val docs = docsSpreadSizedByDocId(s, dir)
       val learned = graft.ml.Bpe.learn(docs, "text", numMerges = 200,
         maxWords = 20000, minCount = 2L)
       val model = graft.ml.Bpe.parseBpeFile(
@@ -856,7 +875,7 @@ object SparkEntry {
     // partition-order FP accumulations) — ClassifierSpec is the gate; the
     // per-row `separated` flag makes a broken model flip visible rows.
     "q_quality_classifier" -> ((s, dir) => {
-      val docs = docsSpreadSized(s, dir)
+      val docs = docsSpreadSizedByDocId(s, dir)
       val train = docs.where(col("doc_id") < 300)
         .select(col("text"), lit(1.0).as("label"))
         .unionByName(docs.where(col("doc_id") < 300)
@@ -880,7 +899,7 @@ object SparkEntry {
     // SQL twin — BpeSpec pins byte symbolization, learner parity and the
     // <unk>-free guarantee).
     "q_bpe_tokenize_bytes" -> ((s, dir) => {
-      val docs = docsSpreadSized(s, dir)
+      val docs = docsSpreadSizedByDocId(s, dir)
       val learned = graft.ml.Bpe.learn(docs, "text", numMerges = 200,
         maxWords = 20000, minCount = 2L, byteLevel = true)
       val model = graft.ml.Bpe.parseBpeFile(

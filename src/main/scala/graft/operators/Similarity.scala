@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
@@ -176,9 +177,12 @@ object Similarity {
     * probing l and their LUTs (|Q|·nprobe tables of m×k_s doubles);
     * `transform` is the pre-PQ transform the corpus was encoded under (a
     * [[graft.model.ModelBundle]]'s, or none for [[ivfPqEncode]] output). The
-    * encoded corpus is scanned once under a static `list_id IN (…)` filter
-    * (partition-pruned when the corpus is list_id-partitioned on disk), as a
-    * SQL execution named "ivfPqSearchMany" that query listeners see; each
+    * encoded corpus is scanned once, as a SQL execution named
+    * "ivfPqSearchMany" that query listeners see: under a static
+    * `list_id IN (…)` filter when `list_id` is a stored column
+    * (partition-pruned when the corpus is list_id-partitioned on disk), while
+    * over a computed `list_id` (unmaterialized [[ivfPqEncode]] output) the
+    * tasks drop the unprobed lists' rows, so the encode runs once per row; each
     * task keeps one k-bounded heap per query
     * ([[graft.functions.PqExpressions.probeTopK]], [[BoundedTopK]]'s order:
     * adc asc, id tie-break) and the driver merges the ≤ tasks·|Q|·k heap
@@ -209,17 +213,26 @@ object Similarity {
         li -> ProbeList(ps.map(_._2).toArray, ps.map(p => codec.lut(p._3, li)).toArray)
       }
     val spark = encoded.sparkSession
-    val scan = encoded
-      .where(col("list_id").isin(probes.keys.toSeq.sorted.map(Integer.valueOf): _*))
-      .select(col(idCol), col("list_id"), col("pq_code"))
+    // the static IN filter goes to the plan only over a stored list_id, where
+    // it reaches the scan as is (partition pruning on a list_id-partitioned
+    // snapshot); over a computed one (unmaterialized ivfPqEncode output)
+    // Catalyst would copy the encode into the pushed filter and run it twice
+    // per row, so the tasks keep to the probed lists themselves
+    val probed = if (storedColumn(encoded, "list_id")) {
+      encoded.where(col("list_id").isin(probes.keys.toSeq.sorted.map(Integer.valueOf): _*))
+    } else encoded
+    val scan = probed.select(col(idCol), col("list_id"), col("pq_code"))
     val idType = scan.schema.head.dataType
     val order = BoundedTopK.order(DoubleType, idType, ascending = true)
     val qe = scan.queryExecution
     val bcProbes = spark.sparkContext.broadcast(probes)
     val heaps = try {
       SQLExecution.withNewExecutionId(qe, Some("ivfPqSearchMany")) {
-        spark.sparkContext.runJob(qe.toRdd, (rows: Iterator[InternalRow]) =>
-          probeTopK(rows, bcProbes.value, idType, k, "ivfPqSearchMany"))
+        spark.sparkContext.runJob(qe.toRdd, (rows: Iterator[InternalRow]) => {
+          val ps = bcProbes.value
+          probeTopK(rows.filter(r => r.isNullAt(1) || ps.contains(r.getInt(1))), ps,
+            idType, k, "ivfPqSearchMany")
+        })
       }
     } finally bcProbes.destroy()
     val merged = scala.collection.mutable.HashMap.empty[Long, BoundedTopK.Buffer]
@@ -236,6 +249,22 @@ object Similarity {
       StructField("neighbor_id", idType, nullable = false),
       StructField("list_id", IntegerType, nullable = true),
       StructField("adc_dist", DoubleType, nullable = false))))
+  }
+
+  /** Whether `df`'s column `name` is stored (a scan, partition, cache or
+    * checkpoint column, renamed or not), not computed by `df`'s plan: a
+    * filter on a stored column reaches the scan as is, while Catalyst copies
+    * a computed column's expression into the filter it pushes down. */
+  private def storedColumn(df: DataFrame, name: String): Boolean = {
+    val plan = df.queryExecution.analyzed
+    val defs = plan.flatMap(_.expressions.flatMap(_.collect {
+      case a: Alias => a.exprId -> a.child
+    })).toMap
+    def stored(e: Expression): Boolean = e match {
+      case a: Attribute => defs.get(a.exprId).forall(stored)
+      case _ => false
+    }
+    plan.output.find(_.name.equalsIgnoreCase(name)).exists(stored)
   }
 
   /**

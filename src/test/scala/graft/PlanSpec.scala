@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Concat
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Concat, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession.withJobs
+import graft.SparkTestSession.{withJobs, withStages}
 
 /** Physical-plan audits: the declarative formulations must actually get the
   * Catalyst treatment they were designed for (predicate pushdown, column
@@ -154,21 +158,50 @@ class PlanSpec extends AnyFunSuite {
 
   test("gopherQuality and stripMarkup are single-projection plans: no " +
     "exchange, no UDF — pure codegen'd scans") {
-    Seq("q_gopher_quality", "q_strip_html").foreach { q =>
-      val plan = planOf(SparkEntry.queries(q)(spark, sf))
-      // only the presentation orderBy and the explicit input spread
-      // (round-robin over the single-file documents table — an artifact of
-      // the synthetic layout, not an op shuffle) may exchange; no join/agg
-      // shuffles from the operator itself
-      val exchanges = plan.linesIterator
-        .filter(_.contains("Exchange"))
-        .count(l => !l.contains("REPARTITION_BY_NUM") &&
-          !l.contains("RoundRobinPartitioning"))
-      assert(exchanges <= 1, s"$q: row-local op must not shuffle beyond the " +
-        s"final presentation sort ($exchanges non-spread exchanges)")
-      assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
-        s"$q must stay UDF-free")
-    }
+    // "no exchange" beyond the input spread, for every row-local query
+    // presented in doc_id order: ONE exchange, the range spread on doc_id
+    // directly over the scan, and none under the global sort
+    Seq("q_gopher_quality", "q_strip_html", "q_redact", "q_token_count_unicode")
+      .foreach { q =>
+        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        val text = plan.toString.take(1500)
+        // the input spread over the single-file documents table is a range
+        // exchange on the presentation key; the global sort reuses its
+        // partitioning, so the scorer projection runs in one stage and no
+        // sampling job re-runs it
+        val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.size == 1, s"$q: ${exchanges.size} exchanges in\n$text")
+        val spread = exchanges.head
+        val rangeOnDocId = spread.outputPartitioning match {
+          case RangePartitioning(Seq(SortOrder(a: Attribute, Ascending, _, _)), _) =>
+            a.name == "doc_id"
+          case _ => false
+        }
+        assert(rangeOnDocId && spread.shuffleOrigin == REPARTITION_BY_NUM,
+          s"$q: the spread must be rangepartitioning(doc_id), got\n$text")
+        assert(spread.child.isInstanceOf[FileSourceScanExec],
+          s"$q: the range spread must sit directly over the scan\n$text")
+        val sorts = plan.collect { case s: SortExec if s.global => s }
+        assert(sorts.size == 1 && !sorts.head.child.isInstanceOf[ShuffleExchangeExec],
+          s"$q: the global sort must reuse the spread, not plan its own exchange\n$text")
+        assert(!plan.toString.contains("BatchEvalPython") &&
+          !plan.toString.contains("ScalaUDF"), s"$q must stay UDF-free")
+      }
+  }
+
+  test("q_strip_html reads each document through a shuffle once: its stages' " +
+    "shuffle records read sum to the document count") {
+    val dir = "/root/testdata/sf0.01"
+    val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+    val (_, stages) = withStages(SparkEntry.queries("q_strip_html")(spark, dir)
+      .write.mode("overwrite").format("noop").save())
+    val read = stages.map(_._2)
+    // a round-robin spread reads every document three times: the sort's
+    // sampling stage, its map stage and the sort stage
+    assert(read.sum == nDocs, s"shuffle records read per stage $read for $nDocs docs")
   }
 
   test("gopherQuality over q_gopher_quality's synthesized text evaluates " +

@@ -440,8 +440,9 @@ class SimilaritySpec extends AnyFunSuite {
     val e1 = messages(intercept[Exception](
       Similarity.ivfPqSearchMany(enc, "vec_id", Seq((0L, qv)), centroids, pq, 10, 2)))
     assert(e1.contains(s"ivfPqSearchMany: code has 2 sub-codes, LUT has ${pq.numSubVectors}"), e1)
-    // the IN filter keeps un-probed lists out of the search's scan, so the
-    // scorer is fed such a row directly
+    // the search keeps un-probed lists' rows from its scorer (the IN filter,
+    // or the tasks over a computed list_id), so the scorer is fed such a row
+    // directly
     val lut = Kernels.adcLookupTable(Kernels.residual(qv, centroids(list)), pq)
     val e2 = intercept[IllegalArgumentException](graft.functions.PqExpressions.probeTopK(
       Iterator(org.apache.spark.sql.catalyst.InternalRow(1L, 7,
@@ -485,6 +486,21 @@ class SimilaritySpec extends AnyFunSuite {
     val disk = res.collect().map(r => (r.getLong(1), r.getDouble(3)))
       .sortBy(identity).toSeq
     assert(disk == mem)
+  }
+
+  test("ivfPqSearchMany over unmaterialized ivfPqEncode output encodes each " +
+    "row once, with the results of the materialized index") {
+    val (centroids, pq) = pqSetup
+    val enc = Similarity.ivfPqEncode(corpus, "vec_id", "embedding", centroids, pq)
+    val queries = (0 until 4).map(qi => (qi.toLong, vecs(qi * 9)._2.map(_.toDouble)))
+    val (lazyRes, execs) = SparkTestSession.withExecutions(
+      Similarity.ivfPqSearchMany(enc, "vec_id", queries, centroids, pq, 10, 2))
+    val plan = SparkTestSession.executedPlanOf(execs, "ivfPqSearchMany")
+    val encodes = "ivf_pq_encode\\(".r.findAllIn(plan).size
+    assert(encodes == 1, s"$encodes ivf_pq_encode evaluations in\n${plan.take(1500)}")
+    val stored = Similarity.ivfPqSearchMany(enc.localCheckpoint(true), "vec_id", queries,
+      centroids, pq, 10, 2)
+    assert(lazyRes.collect().toSeq == stored.collect().toSeq)
   }
 
   test("cosine column matches scalar kernel") {

@@ -2,7 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -22,23 +23,41 @@ object SparkTestSession {
     s
   }
 
-  /** `body`'s result and the Spark jobs it started, in start order (each
-    * with its stages' `StageInfo`s). */
-  def withJobs[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e); () }
-    }
+  /** `body`'s result and the events `listener` queued while it ran, in
+    * arrival order (the listener bus is drained before and after). */
+  private def listening[T, E](listener: java.util.Queue[E] => SparkListener)(
+      body: => T): (T, Seq[E]) = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[E]
+    val l = listener(events)
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    sc.addSparkListener(l)
     try {
       GraftBridge.drainListenerBus(sc)
-      jobs.clear()
+      events.clear()
       val r = body
       GraftBridge.drainListenerBus(sc)
-      (r, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+      (r, events.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
   }
+
+  /** `body`'s result and the Spark jobs it started, in start order (each
+    * with its stages' `StageInfo`s). */
+  def withJobs[T](body: => T): (T, Seq[SparkListenerJobStart]) =
+    listening[T, SparkListenerJobStart](jobs => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e); () }
+    })(body)
+
+  /** `body`'s result and the stages that completed in it, in completion
+    * order (skipped stages never complete): each stage's `StageInfo` and the
+    * shuffle records its tasks read. */
+  def withStages[T](body: => T): (T, Seq[(StageInfo, Long)]) =
+    listening[T, (StageInfo, Long)](stages => new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        stages.add((e.stageInfo, if (m == null) 0L else m.shuffleReadMetrics.recordsRead))
+        ()
+      }
+    })(body)
 
   /** `body`'s result and the number of Spark jobs it started. */
   def withJobCount[T](body: => T): (T, Int) = {
