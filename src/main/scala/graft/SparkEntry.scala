@@ -21,22 +21,24 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Sources.parquet(spark, s"$dir/$name.parquet")
 
-  /** The documents table spread across cores by range of `doc_id`, for the
-    * row-local queries presented in `doc_id` order. documents is ONE small
-    * parquet file, so without an explicit spread every row-local chain over
-    * it runs in a SINGLE scan task (the CLAUDE.md single-file trap — at
-    * production scale parallelism comes from file count). Spreading by range
-    * on the presentation key lets the final `orderBy("doc_id")` take the
-    * spread's RangePartitioning as its own: the sort plans no exchange, the
-    * range sampling job reads only the scan's `doc_id`, and the scorer runs
-    * once, in `defaultParallelism` tasks that AQE does not coalesce
-    * (REPARTITION_BY_NUM). A round-robin spread leaves the sort its own range
-    * exchange, whose sampling job re-runs the whole scorer chain. Queries
-    * whose spread feeds a shuffle first keep a round-robin spread
-    * ([[docsSpreadSized]], `q_pack_sequences`). */
+  /** The documents table spread by range of `doc_id` over a size-derived
+    * partition count ([[sizeSpreadParts]]), for the row-local queries
+    * presented in `doc_id` order. documents is ONE small parquet file, so
+    * without an explicit spread every row-local chain over it runs in a
+    * SINGLE scan task (the CLAUDE.md single-file trap — at production scale
+    * parallelism comes from file count). Spreading by range on the
+    * presentation key lets the final `orderBy("doc_id")` take the spread's
+    * RangePartitioning as its own: the sort plans no exchange, the range
+    * sampling job reads only the scan, and the scorer runs once, in tasks
+    * that AQE does not coalesce (REPARTITION_BY_NUM). A round-robin spread
+    * leaves the sort its own range exchange, whose sampling job re-runs the
+    * whole scorer chain. Each spread task also sorts, and every sort task
+    * takes a full Tungsten page, so the count follows the table's size, not
+    * the core count. Queries whose spread feeds a shuffle first keep a
+    * round-robin spread ([[docsSpreadSized]], `q_pack_sequences`). */
   private def docsSpread(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("doc_id"))
+      .repartitionByRange(sizeSpreadParts(spark, dir, "documents"), col("doc_id"))
 
   /** Partition count derived from the table's on-disk size (guide §2:
     * scale-ADAPTIVE spread, never a constant tuned to the host): one
@@ -67,15 +69,6 @@ object SparkEntry {
   private def docsSpreadSized(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .repartition(sizeSpreadParts(spark, dir, "documents"))
-
-  /** documents spread by range of `doc_id` over a size-derived partition
-    * count, for the learned tokenizers and the quality classifier: their
-    * model is learned by an aggregate over the size-derived spread, and their
-    * row-local encode then runs once, under the range spread the final
-    * `orderBy("doc_id")` reuses (see [[docsSpread]]). */
-  private def docsSpreadSizedByDocId(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .repartitionByRange(sizeSpreadParts(spark, dir, "documents"), col("doc_id"))
 
   /** Deterministic IVFPQ model minted from the first 16 embeddings —
     * SHARED by q_embed_ivfpq and q_embed_rerank, whose DuckDB oracles both
@@ -829,7 +822,7 @@ object SparkEntry {
     // twin, the q_bpe_tokenize blocker; UnigramSpec is the correctness gate).
     // Learn → persistence round-trip → native Viterbi encode, like BPE.
     "q_unigram_tokenize" -> ((s, dir) => {
-      val docs = docsSpreadSizedByDocId(s, dir)
+      val docs = docsSpread(s, dir)
       val learned = graft.ml.Unigram.learn(docs, "text", vocabSize = 600,
         maxWords = 20000, minCount = 2L)
       val model = graft.ml.Unigram.parseUnigramFile(
@@ -849,7 +842,7 @@ object SparkEntry {
     }),
 
     "q_bpe_tokenize" -> ((s, dir) => {
-      val docs = docsSpreadSizedByDocId(s, dir)
+      val docs = docsSpread(s, dir)
       val learned = graft.ml.Bpe.learn(docs, "text", numMerges = 200,
         maxWords = 20000, minCount = 2L)
       val model = graft.ml.Bpe.parseBpeFile(
@@ -875,7 +868,7 @@ object SparkEntry {
     // partition-order FP accumulations) — ClassifierSpec is the gate; the
     // per-row `separated` flag makes a broken model flip visible rows.
     "q_quality_classifier" -> ((s, dir) => {
-      val docs = docsSpreadSizedByDocId(s, dir)
+      val docs = docsSpread(s, dir)
       val train = docs.where(col("doc_id") < 300)
         .select(col("text"), lit(1.0).as("label"))
         .unionByName(docs.where(col("doc_id") < 300)
@@ -899,7 +892,7 @@ object SparkEntry {
     // SQL twin — BpeSpec pins byte symbolization, learner parity and the
     // <unk>-free guarantee).
     "q_bpe_tokenize_bytes" -> ((s, dir) => {
-      val docs = docsSpreadSizedByDocId(s, dir)
+      val docs = docsSpread(s, dir)
       val learned = graft.ml.Bpe.learn(docs, "text", numMerges = 200,
         maxWords = 20000, minCount = 2L, byteLevel = true)
       val model = graft.ml.Bpe.parseBpeFile(
