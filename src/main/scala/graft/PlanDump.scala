@@ -317,7 +317,7 @@ object PlanDump {
         "projection — no UDF — over the input spread, a range exchange on doc_id " +
         "directly over the scan; the presentation sort reuses that " +
         "RangePartitioning, so the plan holds ONE exchange and the signals run " +
-        "once per document (the range sampling job reads only doc_id). The same " +
+        "once per document (the range sampling job reads only the scan). The same " +
         "projection composes as a pushed filter on a 100 TB curation scan.",
       limit = 4500)
     dump("HTML text extraction (regexp_replace pass chain)",
