@@ -193,23 +193,6 @@ object PlanDump {
       "BroadcastNestedLoopJoin of the (tiny) query side against the corpus scan with the " +
         "codegen'd vec_cosine threshold applied map-side — no Exchange anywhere before the " +
         "final ordering of the (small) result.")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    dump("IVF top-k, broadcastQueries=false (large-query-side fallback)", {
-      val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      val centroids = emb.where(col("vec_id") < 4).orderBy("vec_id")
-        .select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val corpus = emb.withColumn("list_id",
-        graft.operators.Similarity.withListId(emb, "embedding", centroids))
-      graft.operators.Similarity.ivfTopK(emb.where(col("vec_id") < 3), corpus,
-        "vec_id", "embedding", centroids, k = 5, nprobe = 2,
-        broadcastQueries = false)
-    },
-      "With the broadcast hint dropped (and autoBroadcastJoinThreshold forced to -1 " +
-        "here) the probe join plans as a shuffle join on `probe = list_id` — the " +
-        "graceful path for a query side too large to broadcast; per-group bounded-heap " +
-        "top-k (partial `bounded_top_k` before the exchange) is unchanged.")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     dumpPlan("Batched IVFADC search (one scan job, per-task heaps, no Exchange)",
       executionPlan("ivfPqSearchMany") {
       val emb = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -313,7 +296,10 @@ object PlanDump {
         "as broadcasts; only (group, id, n_tokens) rows enter any exchange.")
     dump("Gopher quality rules (row-local struct projection)",
       SparkEntry.queries("q_gopher_quality")(spark, sf),
-      "every Table-A1 signal is regex/arithmetic inside one WholeStageCodegen " +
+      "the seven Table-A1 counts are fields of ONE native `text_signals` scan " +
+        "(one pass over the UTF-8 bytes, evaluated once per document by codegen's " +
+        "subexpression elimination) and the stopword set is the plan's only " +
+        "regexp_extract_all, inside one WholeStageCodegen " +
         "projection — no UDF — over the input spread, a range exchange on doc_id " +
         "directly over the scan; the presentation sort reuses that " +
         "RangePartitioning, so the plan holds ONE exchange and the signals run " +

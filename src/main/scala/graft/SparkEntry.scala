@@ -586,7 +586,7 @@ object SparkEntry {
         .when(m4 === 2, lit(" ### ## # 123 456 789 ..."))
         .otherwise(lit(" the data have to be of use with care"))
       // the synthesized text is projected first: gopherQuality references
-      // its input about ten times, and CollapseProject keeps a non-cheap
+      // its input three times, and CollapseProject keeps a non-cheap
       // producer referenced more than once in its own projection
       docsSpread(s, dir)
         .select(col("doc_id"), concat(rep, tail).as("t"))

@@ -225,7 +225,118 @@ object TextExpressions {
     UTF8String.fromString(sb.toString)
   }
 
+  /** Field names of [[textSignalsEval]]'s struct, in order. */
+  val textSignalFields: Seq[String] = Seq("n_tokens", "n_ws_chars",
+    "n_symbols", "n_newlines", "n_bullet_lines", "n_ellipsis_lines",
+    "n_alpha_words")
+
+  /** Whitespace-token and Gopher signal counts in ONE pass over the UTF-8
+    * bytes (no decode, no match arrays). Each field equals the number of
+    * `java.util.regex` `find()` matches of a pattern on the decoded text:
+    *
+    *  - `n_tokens`: `\S+` — runs outside `[ \t\n\x0B\f\r]` (Java's `\s`);
+    *  - `n_ws_chars`: `[ \t\n\r]` (NOT `\x0B`/`\f`);
+    *  - `n_symbols`: `\.\.\.|…|#` — a dot run of length L holds ⌊L/3⌋;
+    *  - `n_newlines`: `\n`;
+    *  - `n_bullet_lines`: `(?m)^[ \t]*[-*•‣▪]`;
+    *  - `n_ellipsis_lines`: `(?m)(?:\.\.\.|…)[ \t]*$`;
+    *  - `n_alpha_words`: `(?:^|[ \t\n\r])[^ \t\n\r]*[A-Za-z]` — runs outside
+    *    `[ \t\n\r]` holding an ASCII letter.
+    *
+    * The multiline anchors follow Java's line terminators: `\n`, `\r`
+    * (`\r\n` is one), U+0085, U+2028 and U+2029. `^` holds at the text
+    * start and after a terminator; `$` holds before a terminator and at the
+    * text end. Every byte ≥ 0x80 outside those code points and `…•‣▪`
+    * belongs to a character none of the patterns names, so it only extends
+    * a token or word run. TextSignalsSpec checks each field against its
+    * pattern on generated text. */
+  def textSignalsEval(text: UTF8String): InternalRow = {
+    val n = text.numBytes()
+    var tokens, ws, symbols, newlines, bullets, ellipses, alphaWords = 0
+    var inToken = false      // inside a \S+ run
+    var inWord = false       // inside a [^ \t\n\r]+ run
+    var wordHasAlpha = false // that run already holds an ASCII letter
+    var dots = 0             // length of the current dot run
+    var lineStart = true     // only [ \t] since the last ^ position
+    var ellipsisEnd = false  // only [ \t] since the last `...` or `…`
+    var i = 0
+    while (i < n) {
+      val b = text.getByte(i) & 0xFF
+      var terminator = false
+      var bullet = false
+      var ellipsis = false
+      var len = 1
+      if (b >= 0x80) {
+        val b1 = if (i + 1 < n) text.getByte(i + 1) & 0xFF else -1
+        val b2 = if (i + 2 < n) text.getByte(i + 2) & 0xFF else -1
+        if (b == 0xC2 && b1 == 0x85) { terminator = true; len = 2 }
+        else if (b == 0xE2 && b1 == 0x80) {
+          if (b2 == 0xA6) { ellipsis = true; len = 3 }
+          else if (b2 == 0xA2 || b2 == 0xA3) { bullet = true; len = 3 }
+          else if (b2 == 0xA8 || b2 == 0xA9) { terminator = true; len = 3 }
+        } else if (b == 0xE2 && b1 == 0x96 && b2 == 0xAA) { bullet = true; len = 3 }
+      } else if (b == '\n' || b == '\r') terminator = true
+      else if (b == '-' || b == '*') bullet = true
+      val javaSpace = b == ' ' || b == '\t' || b == '\n' || b == '\r' ||
+        b == 0x0B || b == 0x0C
+      val blank = b == ' ' || b == '\t'
+      val wordDelim = blank || b == '\n' || b == '\r'
+      if (javaSpace) inToken = false
+      else if (!inToken) { inToken = true; tokens += 1 }
+      if (wordDelim) {
+        ws += 1
+        inWord = false
+      } else {
+        if (!inWord) { inWord = true; wordHasAlpha = false }
+        if (!wordHasAlpha && ((b | 0x20) >= 'a' && (b | 0x20) <= 'z')) {
+          wordHasAlpha = true
+          alphaWords += 1
+        }
+      }
+      if (b == '\n') newlines += 1
+      if (b == '.') {
+        dots += 1
+        if (dots % 3 == 0) symbols += 1
+        ellipsisEnd = dots >= 3
+      } else {
+        dots = 0
+        if (b == '#' || ellipsis) symbols += 1
+        // `$` before this terminator. `\r\n` needs no special case: the
+        // `\r` clears ellipsisEnd, and the `^` it opens meets `\n`, which is
+        // neither a blank nor a bullet
+        if (terminator && ellipsisEnd) ellipses += 1
+        if (ellipsis) ellipsisEnd = true
+        else if (!blank) ellipsisEnd = false
+      }
+      if (lineStart && bullet) bullets += 1
+      if (terminator) lineStart = true
+      else if (!blank) lineStart = false
+      i += len
+    }
+    if (ellipsisEnd) ellipses += 1
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](tokens, ws, symbols, newlines, bullets, ellipses, alphaWords))
+  }
+
   // --- expressions ------------------------------------------------------------
+
+  /** See [[textSignalsEval]]: the per-document counts behind
+    * [[graft.operators.TextOps.tokenCount]] and
+    * [[graft.operators.TextOps.gopherQuality]]. */
+  case class TextSignals(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = StructType(textSignalFields.map(
+      StructField(_, IntegerType, nullable = false)))
+    override def prettyName: String = "text_signals"
+    override def nullSafeEval(text: Any): Any =
+      TextExpressions.textSignalsEval(text.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cls = TextExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
+      nullSafeCodeGen(ctx, ev, c =>
+        s"${ev.value} = $cls.textSignalsEval($c);")
+    }
+    override protected def withNewChildInternal(c: Expression): TextSignals =
+      copy(child = c)
+  }
 
   /** See [[decodeNumericEntitiesEval]] — the numeric-entity pass of
     * [[graft.operators.Curation.stripMarkup]] (ordered before the final
@@ -447,4 +558,6 @@ object TextExpressions {
       GraftBridge.expression(text), GraftBridge.expression(ranges)))
   def decode_numeric_entities(text: Column): Column =
     GraftBridge.column(DecodeNumericEntities(GraftBridge.expression(text)))
+  def text_signals(text: Column): Column =
+    GraftBridge.column(TextSignals(GraftBridge.expression(text)))
 }

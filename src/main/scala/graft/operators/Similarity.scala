@@ -114,28 +114,21 @@ object Similarity {
    * `nprobe` nearest coarse lists and ranks within them. Same output schema
    * as [[bruteForceTopK]]. With nprobe = numLists this is exact.
    *
-   * `broadcastQueries = true` (default) pins the reference's per-query-batch
-   * semantics (ds/IVFPQ.java:408 searches one bounded query set): the query
-   * side MUST fit in a broadcast — a million-row query table would fail the
-   * broadcast, not degrade. Pass `broadcastQueries = false` for large query
-   * tables: the hint is dropped and the probe join plans as an ordinary
-   * shuffle join on `probe === list_id` (Catalyst may still choose to
-   * broadcast if the size estimate clears `autoBroadcastJoinThreshold`);
-   * identical results, corpus-side partition pruning retained.
+   * The query side is broadcast, pinning the reference's per-query-batch
+   * semantics (ds/IVFPQ.java:408 searches one bounded query set): it MUST
+   * fit in a broadcast.
    */
   def ivfTopK(queries: DataFrame, corpusWithList: DataFrame,
               idCol: String, vecCol: String,
-              centroids: Array[Array[Double]], k: Int, nprobe: Int,
-              broadcastQueries: Boolean = true): DataFrame = {
+              centroids: Array[Array[Double]], k: Int, nprobe: Int): DataFrame = {
     // nprobe nearest centroids per query — the probe-list selection
     // (ds/IVFPQ.java:408–420) as a native broadcast-centroid expression
     // ordered (distance asc, index asc), same result as sorting per-centroid
     // distance structs but with O(1) plan nodes at any k_c.
     val probeLists = graft.functions.CentroidExpressions.k_nearest_centroids(
       col("qv"), nprobe, queries.sparkSession.sparkContext.broadcast(centroids))
-    val qBare = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("probe", explode(probeLists))
-    val q = if (broadcastQueries) broadcast(qBare) else qBare
+    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .withColumn("probe", explode(probeLists)))
     val c = corpusWithList.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       col("list_id"))
     val scored = q.join(c, col("probe") === col("list_id") &&

@@ -31,16 +31,17 @@ object TextOps {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
-  /** Token COUNT as the number of \S+ runs, which equals size([[tokens]])
-    * on every input (blank → 0 matches, and split-with-trim yields exactly
-    * one token per non-space run) without the trim and split. It is not
-    * allocation-free: Spark 4.1 replaces `regexp_count` with
-    * `size(regexp_extract_all(…))`, which builds one string per token and
-    * the match array (the optimized plan shows it). Counting feeds every
-    * token-budget consumer (gopher, mix reports, rebalance, packing); the
-    * ROADMAP item "Regex signal counts" holds the native counting
-    * expression that would remove the allocation. */
-  def tokenCount(text: Column): Column = regexp_count(text, lit("\\S+"))
+  /** Token COUNT: the number of `\S+` runs, which equals size([[tokens]])
+    * on every input (blank → 0, and split-with-trim yields exactly one
+    * token per non-space run). It is the `n_tokens` field of the native
+    * `text_signals` scan ([[graft.functions.TextExpressions.textSignalsEval]]):
+    * one pass over the UTF-8 bytes, no decode, no per-token string and no
+    * match array — Spark 4.1 would plan `regexp_count` as
+    * `size(regexp_extract_all(…))`. Counting feeds every token-budget
+    * consumer (gopher, quality score, mix reports, rebalance, packing);
+    * the DuckDB oracles replay it as `regexp_count(text, '\S+')`. */
+  def tokenCount(text: Column): Column =
+    graft.functions.TextExpressions.text_signals(text).getField("n_tokens")
 
   /** CJK single-codepoint ranges (Han incl. Ext-A/B + compatibility, Hiragana,
     * Katakana incl. phonetic extensions, Hangul syllables) as explicit
@@ -179,8 +180,9 @@ object TextOps {
   // ------------------------------------------------ Gopher quality rules
   // Rae et al. 2021 (arXiv:2112.11446, Table A1) — the standard web-corpus
   // document filter set, adopted by RefinedWeb/Dolma. Every signal is
-  // row-local and built from regex/arithmetic in the RE2 ∩ Java subset so
-  // the DuckDB oracle replays the rules byte-for-byte (q_gopher_quality).
+  // row-local and defined by a pattern in the RE2 ∩ Java subset, so the
+  // DuckDB oracle replays the rules byte-for-byte (q_gopher_quality); the
+  // engine counts all but the stopwords in one native scan (text_signals).
 
   /** Symbols Gopher counts against the word count: `#`, the three-dot and
     * the single-glyph ellipsis (non-overlapping matches; `...` first so a
@@ -228,27 +230,28 @@ object TextOps {
    * whitespace tokenization, without a per-token interpreted lambda —
    * CLAUDE.md's HOF cost rule). Zero-word documents fail `pass` and report
    * zero ratios (no division by zero). Row-local, codegen'd, no shuffle —
-   * composes with any scan at 100 TB. Pass a column reference, not an
-   * expression: `text` is referenced about ten times, and an expression
-   * passed in is copied (and evaluated) at each reference.
+   * composes with any scan at 100 TB. Two passes over each text: the
+   * `text_signals` scan (its struct is referenced once per field and
+   * evaluated once, by codegen's subexpression elimination) and the
+   * stopword extract. Pass a column reference, not an expression: `text`
+   * is referenced three times, and an expression passed in is copied (and
+   * evaluated) at each reference.
    */
   def gopherQuality(text: Column, cfg: GopherConfig = GopherConfig()): Column = {
-    // every count signal is a regexp_count, which Spark replaces with
-    // size(regexp_extract_all(...)): each still builds a match array per
-    // signal per document just to take its length
-    val nWords = tokenCount(text).cast("long")
+    // the stopwords stay a regex pass: the scan has no proven twin of
+    // Java's `\b` and Spark's `lower` on non-ASCII text
+    val sig = graft.functions.TextExpressions.text_signals(text)
+    val nWords = sig.getField("n_tokens").cast("long")
     val safeW = greatest(nWords, lit(1L)).cast("double")
-    val meanLen = (length(text) - regexp_count(text, lit("[ \\t\\n\\r]")))
+    val meanLen = (length(text) - sig.getField("n_ws_chars"))
       .cast("double") / safeW
-    val symbolRatio = regexp_count(text,
-      lit(gopherSymbolPattern)).cast("double") / safeW
-    val nLines = (regexp_count(text, lit("\n")) + 1).cast("double")
-    val bulletFrac = regexp_count(text,
-      lit(gopherBulletLinePattern)).cast("double") / greatest(nLines, lit(1.0))
-    val ellipsisFrac = regexp_count(text,
-      lit(gopherEllipsisLinePattern)).cast("double") / greatest(nLines, lit(1.0))
-    val alphaFrac = regexp_count(text,
-      lit(gopherAlphaWordPattern)).cast("double") / safeW
+    val symbolRatio = sig.getField("n_symbols").cast("double") / safeW
+    val nLines = (sig.getField("n_newlines") + 1).cast("double")
+    val bulletFrac = sig.getField("n_bullet_lines").cast("double") /
+      greatest(nLines, lit(1.0))
+    val ellipsisFrac = sig.getField("n_ellipsis_lines").cast("double") /
+      greatest(nLines, lit(1.0))
+    val alphaFrac = sig.getField("n_alpha_words").cast("double") / safeW
     val nStop = size(array_distinct(
       regexp_extract_all(lower(text), lit(gopherStopwordPattern), lit(0))))
       .cast("int")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Concat, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Concat, Expression,
+  RegExpExtractAll, ScalaUDF, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -11,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession.{withJobs, withStages}
+import graft.functions.TextExpressions
 
 /** Physical-plan audits: the declarative formulations must actually get the
   * Catalyst treatment they were designed for (predicate pushdown, column
@@ -209,6 +211,28 @@ class PlanSpec extends AnyFunSuite {
     val plan = SparkEntry.queries("q_gopher_quality")(spark, sf).queryExecution.optimizedPlan
     val concats = plan.flatMap(_.expressions.flatMap(_.collect { case c: Concat => c })).size
     assert(concats == 1, s"$concats concat evaluations in\n${plan.toString.take(600)}")
+  }
+
+  test("gopherQuality counts its signals in one native scan: one " +
+    "regexp_extract_all (the stopwords), no ScalaUDF, one scan call per row") {
+    val df = SparkEntry.queries("q_gopher_quality")(spark, sf)
+    val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+    // distinct expressions: a signal read by several output fields is one
+    // evaluation (codegen's subexpression elimination)
+    def distinct(p: PartialFunction[Expression, Expression]): Int =
+      exprs.flatMap(_.collect(p)).map(_.canonicalized).distinct.size
+    val extractAlls = distinct { case e: RegExpExtractAll => e }
+    assert(extractAlls <= 1, s"$extractAlls regexp_extract_all in the optimized plan")
+    assert(distinct { case e: ScalaUDF => e } == 0, "the signals must not be a UDF")
+    assert(distinct { case e: TextExpressions.TextSignals => e } == 1)
+    // the struct is read once per field, but codegen's subexpression
+    // elimination evaluates the scan once per document (AQE plans the
+    // codegen stages when it runs)
+    df.collect()
+    val calls = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan)
+      .map(_._2.split("textSignalsEval\\(", -1).length - 1).sum
+    assert(calls == 1, s"$calls textSignalsEval calls in the generated code")
   }
 
   test("size-derived input spread reads the table size through its " +

@@ -71,31 +71,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ivf == bf)
   }
 
-  test("ivfTopK with broadcastQueries=false plans a shuffle join and matches " +
-    "the broadcast path exactly (graceful large-query-side fallback)") {
-    val centroids = vecs.take(8).map(_._2.map(_.toDouble)).toArray
-    val withList = corpus.withColumn("list_id",
-      Similarity.withListId(corpus, "embedding", centroids))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val shuffled = Similarity.ivfTopK(corpus.where(col("vec_id") < 3), withList,
-        "vec_id", "embedding", centroids, k = 10, nprobe = 4,
-        broadcastQueries = false)
-      val plan = shuffled.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"expected no broadcast join in fallback plan:\n${plan.take(600)}")
-      val viaShuffle = shuffled
-        .select("query_id", "rank", "neighbor_id", "cosine")
-        .as[(Long, Int, Long, Double)].collect().toSet
-      val viaBroadcast = Similarity.ivfTopK(corpus.where(col("vec_id") < 3),
-        withList, "vec_id", "embedding", centroids, k = 10, nprobe = 4)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-        .as[(Long, Int, Long, Double)].collect().toSet
-      assert(viaShuffle == viaBroadcast)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("ivfTopK list assignment matches scalar nearest-centroid") {
     val centroids = vecs.take(8).map(_._2.map(_.toDouble)).toArray
     val withList = corpus.withColumn("list_id",
