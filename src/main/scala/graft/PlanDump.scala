@@ -228,8 +228,9 @@ object PlanDump {
         "posexplode-by-dimension alternative would multiply rows by d first.")
     dump("Context-window chunking (doc-local, no shuffle before the explode)",
       SparkEntry.queries("q_chunk_tokens")(spark, sf),
-      "tokenize → per-chunk slice/array_join → posexplode, all row-local; the only " +
-        "exchanges are the explicit input repartition and the final presentation sort.")
+      "tokenize → per-chunk slice/array_join → posexplode, all row-local; the " +
+        "one-partition input here plans no exchange, and a larger table's only " +
+        "exchanges are the round-robin input spread and the final presentation sort.")
     dumpInterior("Semantic (SemDeDup-shaped) embedding dedup (interior plan)",
       SparkEntry.queries("q_embed_semantic_neardup")(spark, sf),
       "nearest_centroid rides ONE broadcast reference (O(1) plan nodes at any " +
@@ -300,18 +301,21 @@ object PlanDump {
         "(one pass over the UTF-8 bytes, evaluated once per document by codegen's " +
         "subexpression elimination) and the stopword set is the plan's only " +
         "regexp_extract_all, inside one WholeStageCodegen " +
-        "projection — no UDF — over the input spread, a range exchange on doc_id " +
-        "directly over the scan; the presentation sort reuses that " +
-        "RangePartitioning, so the plan holds ONE exchange and the signals run " +
-        "once per document (the range sampling job reads only the scan). The same " +
-        "projection composes as a pushed filter on a 100 TB curation scan.",
+        "projection — no UDF. documents fits one partition here, so the scan is " +
+        "coalesced to one and the projection and the presentation sort run in " +
+        "one stage with NO exchange; a larger table is spread by a range " +
+        "exchange on doc_id directly over the scan, whose RangePartitioning the " +
+        "sort reuses (the range sampling job reads only the scan). Either way " +
+        "the signals run once per document. The same projection composes as a " +
+        "pushed filter on a 100 TB curation scan.",
       limit = 4500)
     dump("HTML text extraction (regexp_replace pass chain)",
       SparkEntry.queries("q_strip_html")(spark, sf),
       "the full strip/decode/normalize chain is one codegen'd projection (no " +
-        "UDF) over the input spread, a range exchange on doc_id directly over the " +
-        "scan that the presentation sort reuses: ONE exchange, and the chain runs " +
-        "once per document — and each pass is in the " +
+        "UDF) over the input spread: here a coalesce to one partition, so the " +
+        "chain and the presentation sort run in one stage with no exchange (a " +
+        "larger table gets a range exchange on doc_id that the sort reuses), " +
+        "and the chain runs once per document — and each pass is in the " +
         "RE2 ∩ Java regex subset, so the DuckDB oracle hash-checks the " +
         "extraction byte-for-byte.")
     dump("DSIR importance resampling (fit → broadcast-ratio score → Gumbel top-k)", {
@@ -414,7 +418,8 @@ object PlanDump {
         "min(struct(id, pos)) aggregate (a viral paragraph map-side " +
         "combines, no hot shuffle key); removal sets return as one int " +
         "array per affected doc and reconstruction is a row-local indexed " +
-        "filter over the same split.")
+        "filter over the same split. The one-partition input here plans no " +
+        "exchange at all; PlanSpec checks the exchange keys at sf0.1.")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
   }

@@ -21,8 +21,33 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Sources.parquet(spark, s"$dir/$name.parquet")
 
+  /** The one input-spread rule: the partition count of table `name` is
+    * [[sizeSpreadParts]]. At one partition the input is coalesced to a
+    * single partition, whose `SinglePartition` output satisfies every
+    * required distribution, so a scorer, Window or aggregate and the final
+    * sort over it run as one stage with no exchange and no range-sampling
+    * job. Above one partition `spread` applies the count. */
+  private def spreadInput(spark: SparkSession, dir: String, name: String,
+                          input: DataFrame)(
+      spread: (DataFrame, Int) => DataFrame): DataFrame = {
+    val parts = sizeSpreadParts(spark, dir, name)
+    if (parts == 1) input.coalesce(1) else spread(input, parts)
+  }
+
+  /** A round-robin spread to `parts` partitions, or `input` itself when
+    * its scan already has that many (a many-file table needs no shuffle
+    * to spread). Reading a plain scan's partition count starts no job. */
+  private def roundRobin(input: DataFrame, parts: Int): DataFrame =
+    if (input.rdd.getNumPartitions >= parts) input else input.repartition(parts)
+
+  /** Table `name`'s scan, coalesced to one partition when it fits one
+    * ([[spreadInput]]) and left as it is above that — for the Window and
+    * as-of queries, whose own exchanges cluster the scan. */
+  private def scanSized(spark: SparkSession, dir: String, name: String): DataFrame =
+    spreadInput(spark, dir, name, t(spark, dir, name))((scan, _) => scan)
+
   /** The documents table spread by range of `doc_id` over a size-derived
-    * partition count ([[sizeSpreadParts]]), for the row-local queries
+    * partition count ([[spreadInput]]), for the row-local queries
     * presented in `doc_id` order. documents is ONE small parquet file, so
     * without an explicit spread every row-local chain over it runs in a
     * SINGLE scan task (the CLAUDE.md single-file trap — at production scale
@@ -34,15 +59,17 @@ object SparkEntry {
     * leaves the sort its own range exchange, whose sampling job re-runs the
     * whole scorer chain. Each spread task also sorts, and every sort task
     * takes a full Tungsten page, so the count follows the table's size, not
-    * the core count. Queries whose spread feeds a shuffle first keep a
-    * round-robin spread ([[docsSpreadSized]], `q_pack_sequences`). */
+    * the core count. A table that fits one partition is coalesced to one
+    * instead: the scorer and the sort run as one stage with no exchange.
+    * Queries whose spread feeds a shuffle first keep a round-robin spread
+    * ([[docsSpreadSized]], `q_pack_sequences`). */
   private def docsSpread(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .repartitionByRange(sizeSpreadParts(spark, dir, "documents"), col("doc_id"))
+    spreadInput(spark, dir, "documents", t(spark, dir, "documents"))(
+      (scan, parts) => scan.repartitionByRange(parts, col("doc_id")))
 
   /** Partition count derived from the table's on-disk size (guide §2:
     * scale-ADAPTIVE spread, never a constant tuned to the host): one
-    * partition per ~128 KB of parquet, clamped to [2, defaultParallelism].
+    * partition per ~128 KB of parquet, clamped to [1, defaultParallelism].
     * Rationale, measured this round: the per-document work of the dedup
     * family (shingle+hash ≈ 20 µs, minhash bundle ≈ 30 µs) is microscopic
     * next to Spark's per-task/per-stage fixed costs at full width — 32-way
@@ -52,23 +79,25 @@ object SparkEntry {
     * count keeps the spread proportional to the data (it GROWS to the full
     * width on a bigger corpus) instead of inheriting the core count. The
     * size comes from the path's Hadoop FileSystem, so `file:`, `hdfs:` and
-    * `s3a:` tables are sized like plain local paths. */
+    * `s3a:` tables are sized like plain local paths. A table under 256 KB
+    * gets one partition, and [[spreadInput]] plans no exchange over it. */
   private def sizeSpreadParts(spark: SparkSession, dir: String,
                               name: String): Int = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val bytes = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getContentSummary(path).getLength
-    math.max(2, math.min(spark.sparkContext.defaultParallelism,
+    math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (bytes / (128L * 1024)).toInt))
   }
 
-  /** documents spread round-robin over a size-derived partition count, for
-    * the queries whose spread feeds a shuffle first (dedup, LM, vocabulary and
-    * n-gram aggregates) or explodes rows before its sort (`q_chunk_tokens`,
-    * measured slower under a range spread at sf0.1). */
+  /** documents spread round-robin ([[spreadInput]], [[roundRobin]]) over
+    * the size-derived count, for the queries whose spread feeds a shuffle
+    * first (dedup, LM, vocabulary and n-gram aggregates) or explodes rows
+    * before its sort (`q_chunk_tokens`, measured slower under a range
+    * spread at sf0.1). A table that fits one partition is coalesced to
+    * one; a scan that already has the count is not spread again. */
   private def docsSpreadSized(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .repartition(sizeSpreadParts(spark, dir, "documents"))
+    spreadInput(spark, dir, "documents", t(spark, dir, "documents"))(roundRobin)
 
   /** Deterministic IVFPQ model minted from the first 16 embeddings —
     * SHARED by q_embed_ivfpq and q_embed_rerank, whose DuckDB oracles both
@@ -151,8 +180,8 @@ object SparkEntry {
     val dupes = docs.where(col("doc_id") < n)
       .select((col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" extra")).as("text"))
-    docs.select("doc_id", "text").unionByName(dupes)
-      .repartition(sizeSpreadParts(spark, dir, "documents"))
+    spreadInput(spark, dir, "documents",
+      docs.select("doc_id", "text").unionByName(dupes))(roundRobin)
   }
 
   /** Documents with deterministic INTERNAL repeats (every 7th doc's text is
@@ -161,8 +190,8 @@ object SparkEntry {
     * repeats of their own, so cross-doc and within-doc cut ranges overlap and
     * the range merge is exercised end-to-end. */
   private def docsWithSelfRepeats(spark: SparkSession, dir: String): DataFrame = {
-    val base = t(spark, dir, "documents").where(col("doc_id") < 200)
-      .repartition(sizeSpreadParts(spark, dir, "documents"))
+    val base = spreadInput(spark, dir, "documents",
+      t(spark, dir, "documents").where(col("doc_id") < 200))(roundRobin)
       .select(col("doc_id"),
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(" "), col("text")))
           .otherwise(col("text")).as("text"))
@@ -302,7 +331,7 @@ object SparkEntry {
     // with ts >= o_orderdate (the "next observation after this point"
     // direction — mirror of the backward model binding).
     "q_asof_forward" -> ((s, dir) => {
-      val evs = t(s, dir, "events")
+      val evs = scanSized(s, dir, "events")
         .groupBy(col("user_id"), col("ts"))
         .agg(min(col("event_id")).as("event_id"))
       Temporal.asOfJoinForward(
@@ -315,12 +344,12 @@ object SparkEntry {
     }),
 
     "q_asof_tolerance" -> ((s, dir) => {
-      val purchases = t(s, dir, "events")
+      val purchases = scanSized(s, dir, "events")
         .where(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts").as("purchase_ts"))
         .agg(max(col("event_id")).as("purchase_event"))
       Temporal.asOfJoin(
-        t(s, dir, "events").select("event_id", "user_id", "ts"),
+        scanSized(s, dir, "events").select("event_id", "user_id", "ts"),
         purchases, leftTs = "ts", rightTs = "purchase_ts", keys = Seq("user_id"),
         lookback = Some(expr("INTERVAL 1 HOUR")))
         .select(col("event_id"), col("purchase_event"),
@@ -331,7 +360,7 @@ object SparkEntry {
     // ------------------------------------------------------------- windows
     // Forward-fill (backfill) of a sparsely-observed value per entity.
     "q_backfill" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("purchase_value",
+      val ev = scanSized(s, dir, "events").withColumn("purchase_value",
         when(col("event_type") === "purchase", col("value")))
       Temporal.backfill(ev, Seq("user_id"), Seq("ts", "event_id"), Seq("purchase_value"))
         .select(col("event_id"),
@@ -340,7 +369,7 @@ object SparkEntry {
     }),
 
     "q_lag_lead" -> ((s, dir) => {
-      Temporal.lagLead(t(s, dir, "events"), Seq("user_id"), Seq("ts", "event_id"),
+      Temporal.lagLead(scanSized(s, dir, "events"), Seq("user_id"), Seq("ts", "event_id"),
         "value", Seq(1))
         .select(col("event_id"), round(col("value_lag1"), 6).as("value_lag1"),
           round(col("value_lead1"), 6).as("value_lead1"))
@@ -349,7 +378,7 @@ object SparkEntry {
 
     // Sessionize: 30-minute inactivity gap starts a new session.
     "q_sessionize" -> ((s, dir) => {
-      Temporal.sessionize(t(s, dir, "events"), Seq("user_id"), "ts", 1800,
+      Temporal.sessionize(scanSized(s, dir, "events"), Seq("user_id"), "ts", 1800,
         tieBreakCols = Seq("event_id"))
         .select(col("event_id"), col("session_id_seq").cast("long").as("session_seq"))
         .orderBy("event_id")
@@ -359,7 +388,7 @@ object SparkEntry {
     "q_window_agg" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         .rowsBetween(-6, 0)
-      t(s, dir, "events")
+      scanSized(s, dir, "events")
         .withColumn("rolling_sum", round(sum(col("value")).over(w), 6))
         .withColumn("rolling_n", count(lit(1)).over(w))
         .select("event_id", "rolling_sum", "rolling_n")
@@ -411,7 +440,7 @@ object SparkEntry {
       val byVal = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id"))
       val byTs = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
+      scanSized(s, dir, "events")
         .select(col("event_id"),
           rank().over(byVal).as("rk"),
           dense_rank().over(byVal).as("drk"),
@@ -424,7 +453,7 @@ object SparkEntry {
     "q_cumsum" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
+      scanSized(s, dir, "events")
         .select(col("event_id"),
           round(sum(col("value")).over(w), 6).as("run_sum"),
           count(lit(1)).over(w).as("run_n"))
@@ -520,7 +549,7 @@ object SparkEntry {
     "q_topk_per_group" -> ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
+      scanSized(s, dir, "orders")
         .withColumn("rk", row_number().over(w))
         .where(col("rk") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rk"),
@@ -1229,8 +1258,8 @@ object SparkEntry {
     // benchmark doc's trigrams (benchmark = first 15 docs re-badged, so
     // containment 1.0 — plus any organically near-identical corpus docs).
     "q_decontaminate" -> ((s, dir) => {
-      val train = t(s, dir, "documents").select("doc_id", "text")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val train = spreadInput(s, dir, "documents",
+        t(s, dir, "documents").select("doc_id", "text"))(roundRobin)
       val bench = t(s, dir, "documents").where(col("doc_id") < 15)
         .select((col("doc_id") + 5000000).as("bench_id"),
           col("text").as("bench_text"))
@@ -1249,8 +1278,8 @@ object SparkEntry {
     // drops a contaminated doc hash-fails. Distinct bench slice/threshold
     // from q_decontaminate so the two queries can't mask each other.
     "q_decontaminate_bloom" -> ((s, dir) => {
-      val train = t(s, dir, "documents").select("doc_id", "text")
-        .repartition(sizeSpreadParts(s, dir, "documents"))
+      val train = spreadInput(s, dir, "documents",
+        t(s, dir, "documents").select("doc_id", "text"))(roundRobin)
       val bench = t(s, dir, "documents")
         .where(col("doc_id") >= 10 && col("doc_id") < 25)
         .select((col("doc_id") + 6000000).as("bench_id"),

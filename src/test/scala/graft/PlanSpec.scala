@@ -4,8 +4,8 @@ import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Concat, Expression,
   RegExpExtractAll, ScalaUDF, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
@@ -21,6 +21,8 @@ import graft.functions.TextExpressions
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+  private val sf01 = sf.stripSuffix("0.001") + "0.01"
+  private val sf1 = sf.stripSuffix("0.001") + "0.1"
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -158,22 +160,42 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"), plan.take(1200))
   }
 
+  /** The AQE initial physical plan of query `q` over `dir`. */
+  private def initialPlan(q: String, dir: String): SparkPlan =
+    SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
   test("gopherQuality and stripMarkup are single-projection plans: no " +
     "exchange, no UDF — pure codegen'd scans") {
-    // "no exchange" beyond the input spread, for every row-local query
-    // presented in doc_id order: ONE exchange, the range spread on doc_id
-    // directly over the scan, and none under the global sort
     Seq("q_gopher_quality", "q_strip_html", "q_redact", "q_token_count_unicode")
       .foreach { q =>
-        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
+        // a documents table that fits one partition (sf0.001, sf0.01) is
+        // coalesced to one: the scorer and the global sort run in one stage
+        // with no exchange at all
+        Seq(sf, sf01).foreach { dir =>
+          val plan = initialPlan(q, dir)
+          val text = plan.toString.take(1500)
+          assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+            s"$q at $dir: an exchange over a one-partition input\n$text")
+          val coalesces = plan.collect { case c: CoalesceExec => c }
+          assert(coalesces.size == 1 && coalesces.head.numPartitions == 1 &&
+            coalesces.head.child.isInstanceOf[FileSourceScanExec],
+            s"$q at $dir: coalesce(1) must sit directly over the scan\n$text")
+          val sorts = plan.collect { case s: SortExec if s.global => s }
+          assert(sorts.size == 1 &&
+            sorts.head.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+            s"$q at $dir: one global sort with no exchange under it\n$text")
+          assert(!plan.toString.contains("BatchEvalPython") &&
+            !plan.toString.contains("ScalaUDF"), s"$q must stay UDF-free")
         }
+        // sf0.1's documents spread 4 ways: ONE exchange, the range spread on
+        // doc_id directly over the scan, and none under the global sort,
+        // which reuses its partitioning, so the scorer projection runs in
+        // one stage and no sampling job re-runs it
+        val plan = initialPlan(q, sf1)
         val text = plan.toString.take(1500)
-        // the input spread over the single-file documents table is a range
-        // exchange on the presentation key; the global sort reuses its
-        // partitioning, so the scorer projection runs in one stage and no
-        // sampling job re-runs it
         val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
         assert(exchanges.size == 1, s"$q: ${exchanges.size} exchanges in\n$text")
         val spread = exchanges.head
@@ -194,16 +216,39 @@ class PlanSpec extends AnyFunSuite {
       }
   }
 
-  test("q_strip_html reads each document through a shuffle once: its stages' " +
-    "shuffle records read sum to the document count") {
-    val dir = "/root/testdata/sf0.01"
+  test("q_strip_html reads each document through a shuffle at most once: " +
+    "no shuffle when documents fits one partition, one read per document " +
+    "when it is spread") {
+    def shuffleReads(dir: String): Seq[Long] =
+      withStages(SparkEntry.queries("q_strip_html")(spark, dir)
+        .write.mode("overwrite").format("noop").save())._2.map(_._2)
+    // sf0.01's documents (65 KB) is coalesced to one partition: no exchange
+    val small = shuffleReads(sf01)
+    assert(small.sum == 0, s"shuffle records read per stage $small at sf0.01")
+    // sf0.1's is range-spread: a round-robin spread would read every
+    // document three times (the sort's sampling stage, its map stage and
+    // the sort stage)
+    val dir = sf1
     val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
-    val (_, stages) = withStages(SparkEntry.queries("q_strip_html")(spark, dir)
-      .write.mode("overwrite").format("noop").save())
-    val read = stages.map(_._2)
-    // a round-robin spread reads every document three times: the sort's
-    // sampling stage, its map stage and the sort stage
+    val read = shuffleReads(dir)
     assert(read.sum == nDocs, s"shuffle records read per stage $read for $nDocs docs")
+  }
+
+  test("queries over an input that fits one partition run as one Spark job " +
+    "with no shuffle") {
+    val dir = sf01
+    Seq("q_gopher_quality", "q_strip_html", "q_redact", "q_token_count_unicode",
+      "q_unigram_tokenize", "q_bpe_tokenize", "q_bpe_tokenize_bytes",
+      "q_quality_classifier", "q_window_agg").foreach { q =>
+      // built outside the listeners: the learned-model queries train while
+      // they are built; the guard counts the jobs of the run itself
+      val df = SparkEntry.queries(q)(spark, dir)
+      val ((_, stages), jobs) = withJobs(withStages(
+        df.write.mode("overwrite").format("noop").save()))
+      assert(jobs.size == 1, s"$q ran ${jobs.size} Spark jobs at $dir")
+      val read = stages.map(_._2).sum
+      assert(read == 0, s"$q read $read shuffle records at $dir")
+    }
   }
 
   test("gopherQuality over q_gopher_quality's synthesized text evaluates " +
@@ -244,6 +289,45 @@ class PlanSpec extends AnyFunSuite {
         .findFirstIn(planOf(SparkEntry.queries("q_ngram_topk")(spark, d)))
     assert(spread(dir).contains("RoundRobinPartitioning(4)"))
     assert(spread("file://" + dir) == spread(dir))
+  }
+
+  test("a round-robin input spread plans no exchange over a scan that " +
+    "already has the target partition count") {
+    // one caller of each round-robin spread whose final plan shows it (many
+    // dedup queries checkpoint their stages while they are built)
+    val roundRobin = Seq("q_ngram_topk", "q_chunk_tokens", "q_cut_spans",
+      "q_cut_spans_within", "q_decontaminate", "q_decontaminate_bloom")
+    def spreads(q: String, dir: String): Seq[ShuffleExchangeExec] =
+      initialPlan(q, dir).collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      }
+    // the single-file sf0.1 table scans as one partition and is spread 4 ways
+    roundRobin.foreach { q =>
+      val single = spreads(q, sf1).map(_.outputPartitioning)
+      assert(single.nonEmpty && single.forall(_ == RoundRobinPartitioning(4)),
+        s"$q at sf0.1: $single")
+    }
+    // the same rows stored as 8 files: each file is its own split, so the
+    // scan already has 8 ≥ 4 partitions and no spread is planned
+    val copy = java.nio.file.Files.createTempDirectory("graft-multifile").toString
+    try {
+      spark.read.parquet(s"$sf1/documents.parquet").repartition(8)
+        .write.parquet(s"$copy/documents.parquet")
+      val key = "spark.sql.files.maxPartitionBytes"
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, 128L * 1024)
+      try {
+        // the spread reads the scan's partition count from its RDD: no job
+        val (scanParts, jobs) = withJobs(graft.sources.Sources.parquet(spark,
+          s"$copy/documents.parquet").rdd.getNumPartitions)
+        assert(scanParts >= 4, s"the multi-file copy scans as $scanParts partitions")
+        assert(jobs.isEmpty, s"reading the partition count started ${jobs.size} jobs")
+        roundRobin.foreach { q =>
+          val multi = spreads(q, copy)
+          assert(multi.isEmpty, s"$q over $scanParts scan partitions: $multi")
+        }
+      } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy))
   }
 
   test("blocklist is a single-projection plan like the other row-local ops") {
@@ -313,7 +397,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("paragraph dedup: keeper is a map-side-combined min aggregate; " +
     "exchanges key on fingerprints/ids, never the unit text") {
-    val plan = planOf(SparkEntry.queries("q_dedup_paragraphs")(spark, sf))
+    // sf0.1: documents is spread 4 ways, so the keeper aggregate shuffles
+    // (at sf0.001 the whole plan runs in one partition, with no exchange)
+    val plan = planOf(SparkEntry.queries("q_dedup_paragraphs")(spark, sf1))
     assert(plan.contains("partial_min"),
       "keeper selection must partial-aggregate before the shuffle: " + plan.take(800))
     assert(!plan.contains("ScalaUDF") && !plan.contains("BatchEvalPython"))

@@ -2,11 +2,13 @@
 """Alternating parent/change comparison over perfbench.
 
     python3 tools/ab.py <parent_dir> <change_dir> --workload knn --seeds 11-20
+    python3 tools/ab.py <parent_dir> <change_dir> --workload ingest,knn,query_mix
 
 For each seed in the inclusive range, runs `python3 perfbench/run.py
 --workload W --seed S --seconds N --trace 0` once in each checkout, N being
 BENCHMARK.json's run_seconds (the parent first on even pairs, the change
-first on odd ones). Then prints, for every end-to-end metric in the
+first on odd ones). A comma-separated --workload runs the workloads one
+after the other. Then prints, per workload, for every end-to-end metric in the
 change's BENCHMARK.json: each side's median and quartiles, the parent's IQR,
 the change's win count (ties count for neither), and whether the pairs support
 a gain (wins >= 9/10 of pairs and median gap > parent IQR). Failed operations
@@ -39,25 +41,16 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("parent_dir")
-    ap.add_argument("change_dir")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", default="11-20", help="first-last, inclusive")
-    a = ap.parse_args()
-    with open(os.path.join(a.change_dir, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)
+def compare(sides, workload, spec, first, last):
+    """Runs the alternating pairs of one workload and prints its table."""
     seconds = spec["run_seconds"]
-    first, last = (int(x) for x in a.seeds.split("-"))
-    sides = {"parent": a.parent_dir, "change": a.change_dir}
     results = {"parent": [], "change": []}
     crashed = {"parent": 0, "change": 0}
     for i, seed in enumerate(range(first, last + 1)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {}
         for side in order:
-            r, code = run(sides[side], a.workload, seed, seconds)
+            r, code = run(sides[side], workload, seed, seconds)
             if r is None:
                 crashed[side] += 1
                 print(f"seed {seed} {side}: CRASHED, exit code {code}",
@@ -73,7 +66,7 @@ def main():
 
     pairs = len(results["parent"])
     dropped = last + 1 - first - pairs
-    print(f"{a.workload}: {pairs} pairs, {seconds:g} s runs"
+    print(f"{workload}: {pairs} pairs, {seconds:g} s runs"
           + (f" ({dropped} pairs with a crashed run left out)" if dropped else ""))
     if pairs < 2:
         print("too few complete pairs for quartiles")
@@ -97,6 +90,24 @@ def main():
         attempted = sum(r["attempted"] for r in results[side])
         print(f"{side}: {failed} of {attempted} operations failed, "
               f"{crashed[side]} runs crashed")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent_dir")
+    ap.add_argument("change_dir")
+    ap.add_argument("--workload", required=True,
+                    help="a workload, or a comma-separated list of them")
+    ap.add_argument("--seeds", default="11-20", help="first-last, inclusive")
+    a = ap.parse_args()
+    with open(os.path.join(a.change_dir, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    first, last = (int(x) for x in a.seeds.split("-"))
+    sides = {"parent": a.parent_dir, "change": a.change_dir}
+    for i, workload in enumerate(w for w in a.workload.split(",") if w):
+        if i:
+            print(flush=True)
+        compare(sides, workload, spec, first, last)
 
 
 if __name__ == "__main__":
