@@ -35,10 +35,14 @@ object SparkEntry {
   }
 
   /** A round-robin spread to `parts` partitions, or `input` itself when
-    * its scan already has that many (a many-file table needs no shuffle
-    * to spread). Reading a plain scan's partition count starts no job. */
+    * its scan already reads that many files in that many splits (a
+    * many-file table needs no shuffle to spread). Both counts are needed: a
+    * single file split below its row-group size has more splits than
+    * non-empty ones, and tiny files pack into one split. Neither count
+    * starts a job. */
   private def roundRobin(input: DataFrame, parts: Int): DataFrame =
-    if (input.rdd.getNumPartitions >= parts) input else input.repartition(parts)
+    if (math.min(input.inputFiles.length, input.rdd.getNumPartitions) >= parts) input
+    else input.repartition(parts)
 
   /** Table `name`'s scan, coalesced to one partition when it fits one
     * ([[spreadInput]]) and left as it is above that — for the Window and

@@ -1,63 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /**
- * SparkSessionExtensions hook: registers the custom Catalyst image
- * expressions for SQL use at session build time —
+ * SparkSessionExtensions hook: registers graft's SQL functions at session
+ * build time —
  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
- * `spark.sql.extensions=graft.functions.GraftExtensions`.
+ * `spark.sql.extensions=graft.functions.GraftExtensions`. The functions are
+ * the ones `ImageExpressions.registerAll` and `VectorExpressions.registerAll`
+ * register in a running session, read from the same (name, builder) lists.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((FunctionIdentifier("decode_image"),
-      new ExpressionInfo(classOf[ImageExpressions.DecodeImage].getName, "decode_image"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageExpressions.DecodeImage(e.head)))
-    ext.injectFunction((FunctionIdentifier("scale_max_pixels"),
-      new ExpressionInfo(classOf[ImageExpressions.ScaleMaxPixels].getName, "scale_max_pixels"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageExpressions.ScaleMaxPixels(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("phash64"),
-      new ExpressionInfo(classOf[ImageExpressions.PHash64].getName, "phash64"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageExpressions.PHash64(e.head)))
-    ext.injectFunction((FunctionIdentifier("dhash64"),
-      new ExpressionInfo(classOf[ImageExpressions.DHash64].getName, "dhash64"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageExpressions.DHash64(e.head)))
-    ext.injectFunction((FunctionIdentifier("img_psnr"),
-      new ExpressionInfo(classOf[ImageExpressions.ImgPsnr].getName, "img_psnr"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageExpressions.ImgPsnr(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(classOf[VectorExpressions.VecCosine].getName, "vec_cosine"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorExpressions.VecCosine(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("vec_squared_l2"),
-      new ExpressionInfo(classOf[VectorExpressions.VecSquaredL2].getName, "vec_squared_l2"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorExpressions.VecSquaredL2(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("truncate_renorm"),
-      new ExpressionInfo(classOf[VectorExpressions.TruncateRenorm].getName, "truncate_renorm"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorExpressions.TruncateRenorm(e.head,
-          e(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("bounded_top_k"),
-      new ExpressionInfo(classOf[BoundedTopK].getName, "bounded_top_k"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BoundedTopK(e.head, e(1), e(2),
-          e(3).eval().asInstanceOf[Number].intValue(),
-          e(4).eval().asInstanceOf[Boolean])))
-    ext.injectFunction((FunctionIdentifier("vec_sum"),
-      new ExpressionInfo(classOf[VecSumAgg].getName, "vec_sum"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecSumAgg(e.head, mean = false)))
-    ext.injectFunction((FunctionIdentifier("vec_mean"),
-      new ExpressionInfo(classOf[VecSumAgg].getName, "vec_mean"),
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecSumAgg(e.head, mean = true)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    (ImageExpressions.sqlFunctions ++ VectorExpressions.sqlFunctions).foreach {
+      case (name, builder) =>
+        ext.injectFunction((FunctionIdentifier(name),
+          new ExpressionInfo(builder.getClass.getName, name), builder))
+    }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -236,19 +237,23 @@ object ImageExpressions {
       GraftBridge.expression(w), GraftBridge.expression(h),
       GraftBridge.expression(seed)))
 
-  /** Register the expressions for SQL use. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("decode_image", e => DecodeImage(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("scale_max_pixels", e => ScaleMaxPixels(e.head, e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("phash64", e => PHash64(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("dhash64", e => DHash64(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("img_psnr", e => ImgPsnr(e.head, e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("img_flip_h", e => ImgFlipH(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("img_rotate90", e => ImgRotate90(e.head, e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("img_center_crop",
-      e => ImgCenterCrop(e.head, e(1), e(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("img_seeded_crop",
-      e => ImgSeededCrop(e.head, e(1), e(2), e(3)), "scala_udf")
-  }
+  /** The image expressions as SQL functions, (name, builder) pairs read by
+    * [[registerAll]] and [[GraftExtensions]]. */
+  private[functions] val sqlFunctions: Seq[(String, FunctionBuilder)] = Seq(
+    ("decode_image", e => DecodeImage(e.head)),
+    ("scale_max_pixels", e => ScaleMaxPixels(e.head, e(1))),
+    ("phash64", e => PHash64(e.head)),
+    ("dhash64", e => DHash64(e.head)),
+    ("img_psnr", e => ImgPsnr(e.head, e(1))),
+    ("img_flip_h", e => ImgFlipH(e.head)),
+    ("img_rotate90", e => ImgRotate90(e.head, e(1))),
+    ("img_center_crop", e => ImgCenterCrop(e.head, e(1), e(2))),
+    ("img_seeded_crop", e => ImgSeededCrop(e.head, e(1), e(2), e(3))))
+
+  /** Register [[sqlFunctions]] for SQL use in `spark`. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 }

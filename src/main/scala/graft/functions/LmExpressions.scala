@@ -90,6 +90,10 @@ object LmExpressions {
       copy(child = c)
   }
 
+  /** Row-local cross-entropy under a broadcast `TextOps.collectLm` model —
+    * the stream-safe twin of `TextOps.lmScore` (same arithmetic
+    * term-by-term; summation order may differ by ~1e-12). NULL for documents
+    * with < 2 tokens (the join path omits them). */
   def lm_score(text: Column, lm: Broadcast[LocalLm]): Column =
     GraftBridge.column(LmScore(GraftBridge.expression(text), lm))
 
@@ -170,6 +174,10 @@ object LmExpressions {
       copy(child = c)
   }
 
+  /** Row-local Stupid Backoff score under a broadcast `TextOps.collectSb`
+    * model — the stream-safe twin of `TextOps.sbScore` (same cascade
+    * term-by-term; summation order may differ by ~1e-12). NULL for
+    * token-less documents. */
   def sb_score(text: Column, lm: Broadcast[LocalSb]): Column =
     GraftBridge.column(SbScore(GraftBridge.expression(text), lm))
 }

@@ -82,6 +82,9 @@ object NbExpressions {
       copy(child = c)
   }
 
+  /** Row-local NB language prediction under a broadcast `TextOps.collectNb`
+    * model — term-identical to `TextOps.nbLangId`'s argmax up to summation
+    * order; NULL for documents shorter than n characters. */
   def nb_lang(text: Column, model: Broadcast[LocalNb]): Column =
     GraftBridge.column(NbLangPredict(GraftBridge.expression(text), model))
 }

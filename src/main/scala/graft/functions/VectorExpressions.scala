@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -174,39 +175,38 @@ object VectorExpressions {
     e.eval().asInstanceOf[Number].intValue()
   }
 
-  /** Register the vector expressions + bounded_top_k for SQL use (mirrors
-    * ImageExpressions.registerAll; same builders as GraftExtensions). An
+  /** The vector expressions + bounded_top_k as SQL functions, (name,
+    * builder) pairs read by [[registerAll]] and [[GraftExtensions]]. An
     * AggregateFunction returned from a builder is wrapped into an
     * AggregateExpression by the analyzer. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_cosine",
-      e => VecCosine(e.head, e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_squared_l2",
-      e => VecSquaredL2(e.head, e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("truncate_renorm",
-      e => TruncateRenorm(e.head, intArg(e(1), "truncate_renorm(len)")), "scala_udf")
+  private[functions] val sqlFunctions: Seq[(String, FunctionBuilder)] = Seq(
+    ("vec_cosine", e => VecCosine(e.head, e(1))),
+    ("vec_squared_l2", e => VecSquaredL2(e.head, e(1))),
+    ("truncate_renorm", e => TruncateRenorm(e.head, intArg(e(1), "truncate_renorm(len)"))),
     // hyperplane_hash(vec, dim, bits, seed): seeded-deterministic planes
     // minted at resolution time — same construction as Similarity.hyperplaneHash
-    reg.createOrReplaceTempFunction("hyperplane_hash", { e =>
+    ("hyperplane_hash", { e =>
       val dim = intArg(e(1), "hyperplane_hash(dim)")
       val bits = intArg(e(2), "hyperplane_hash(bits)")
-      val seed = e(3).eval().asInstanceOf[Number].longValue()
-      val rnd = new java.util.Random(seed)
+      require(e(3).foldable, "hyperplane_hash(seed): argument must be a literal")
+      val rnd = new java.util.Random(e(3).eval().asInstanceOf[Number].longValue())
       HyperplaneHash(e.head, Array.fill(bits, dim)(rnd.nextGaussian()))
-    }, "scala_udf")
+    }),
     // bounded_top_k(score, id, payload, k, ascending) → array<struct> of the
     // k best (score, id) per group
-    reg.createOrReplaceTempFunction("bounded_top_k", { e =>
+    ("bounded_top_k", { e =>
       require(e(4).foldable, "bounded_top_k(ascending): argument must be a literal")
       BoundedTopK(e.head, e(1), e(2), intArg(e(3), "bounded_top_k(k)"),
         e(4).eval().asInstanceOf[Boolean])
-    }, "scala_udf")
-    // element-wise vector aggregates (the analyzer wraps the returned
-    // AggregateFunction in an AggregateExpression)
-    reg.createOrReplaceTempFunction("vec_sum",
-      e => VecSumAgg(e.head, mean = false), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_mean",
-      e => VecSumAgg(e.head, mean = true), "scala_udf")
-  }
+    }),
+    // element-wise vector aggregates
+    ("vec_sum", e => VecSumAgg(e.head, mean = false)),
+    ("vec_mean", e => VecSumAgg(e.head, mean = true)))
+
+  /** Register [[sqlFunctions]] for SQL use in `spark`. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 }

@@ -330,7 +330,7 @@ object Dedup {
     * FIRST-WRITE-WINS: a re-appearing id with changed text keeps its
     * originally committed signature (appendMissing never rewrites a
     * committed key) — use content-derived ids if changed re-ingests must
-    * supersede (see the StreamingOps.nearDupDoor note). */
+    * supersede (see the [[graft.streaming.StreamingOps.nearDupDoor]] note). */
   def persistMinhashSignatures(df: DataFrame, table: String, idCol: String,
                                textCol: String, shingleN: Int = 3,
                                numHashes: Int = 64): Unit = {
@@ -757,7 +757,7 @@ object Dedup {
     * PROVABLY below the containment threshold against every benchmark doc
     * (no false negatives), row-locally, with no join. Drives both the batch
     * prefilter ([[decontaminateBloom]]) and the streaming at-the-door filter
-    * ([[graft.streaming.StreamingOps.decontaminateAtDoor]]). */
+    * (`stream.where(!bloomSuspect(text, door))`, [[bloomSuspect]]). */
   final case class BloomDoor(
       bloom: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter],

@@ -601,15 +601,6 @@ object TextOps {
     try use(staged.df) finally staged.release()
   }
 
-  /** Row-local cross-entropy under a broadcast [[collectLm]] model — the
-    * streaming-safe twin of [[lmScore]] (same arithmetic term-by-term;
-    * summation order may differ by ~1e-12). NULL for documents with < 2
-    * tokens (the join path simply omits them). */
-  def lmScoreBroadcast(text: Column,
-                       lm: org.apache.spark.broadcast.Broadcast[
-                         graft.functions.LmExpressions.LocalLm]): Column =
-    graft.functions.LmExpressions.lm_score(text, lm)
-
   /**
    * Stupid Backoff trigram model (Brants et al. 2007, "Large Language
    * Models in Machine Translation" — the smoothing DESIGNED for distributed
@@ -885,14 +876,6 @@ object TextOps {
       model.k, model.n)
   }
 
-  /** Row-local NB language prediction under a broadcast [[collectNb]]
-    * model — term-identical to [[nbLangId]]'s argmax up to summation
-    * order; NULL for documents shorter than n characters. */
-  def nbLangIdBroadcast(text: Column,
-                        model: org.apache.spark.broadcast.Broadcast[
-                          graft.functions.NbExpressions.LocalNb]): Column =
-    graft.functions.NbExpressions.nb_lang(text, model)
-
   /** Collect an [[SbLm]] into the broadcastable driver-state form the
     * native `sb_score` expression reads — the low-latency / streaming twin
     * (the [[collectLm]] contract: `maxEntries` guards against collecting a
@@ -916,15 +899,6 @@ object TextOps {
     graft.functions.LmExpressions.LocalSb(toMap(model.trigrams),
       toMap(model.bigrams), toMap(model.unigrams), model.total, model.alpha)
   }
-
-  /** Row-local Stupid Backoff scoring under a broadcast [[collectSb]]
-    * model — the streaming-safe twin of [[sbScore]] (same cascade
-    * term-by-term; summation order may differ by ~1e-12). NULL for
-    * token-less documents. */
-  def sbScoreBroadcast(text: Column,
-                       lm: org.apache.spark.broadcast.Broadcast[
-                         graft.functions.LmExpressions.LocalSb]): Column =
-    graft.functions.LmExpressions.sb_score(text, lm)
 
   /**
    * Context-window chunking: split each document into consecutive

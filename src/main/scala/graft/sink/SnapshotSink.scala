@@ -583,35 +583,22 @@ object SnapshotSink {
   /**
    * Resumable append: write only input rows whose `keyCol` is not yet in the
    * table (left-anti join — the F2 pattern). Returns None when nothing new.
+   *
+   * With a `scope` (a predicate on the partition columns) the anti-join
+   * probes only committed rows matching it, so the probe scan
+   * partition-prunes. This bounds the per-batch probe of a long-lived
+   * stream, which otherwise grows O(table) over the stream's lifetime.
+   * CONTRACT: the caller guarantees incoming keys can only collide with rows
+   * INSIDE `scope` (e.g. keys arrive within a bounded time-bucket window); a
+   * key whose duplicate lives outside the scope is appended again — scoping
+   * trades the cross-run global guarantee for a bounded probe, it does not
+   * preserve it.
    */
   def appendMissing(df: DataFrame, table: String, keyCol: String,
                     partitionCols: Seq[String],
                     lineage: Map[String, String] = Map.empty,
-                    format: Map[String, String] = Map.empty): Option[Snapshot] =
-    appendMissingImpl(df, table, keyCol, partitionCols, None, lineage, format)
-
-  /**
-   * Partition-scoped resume: like [[appendMissing]] but the anti-join probes
-   * only committed rows matching `scope` (a predicate on the partition
-   * columns → the probe scan partition-prunes). This bounds the per-batch
-   * probe of a long-lived stream, which otherwise grows O(table) over the
-   * stream's lifetime. CONTRACT: the caller guarantees incoming keys can
-   * only collide with rows INSIDE `scope` (e.g. keys arrive within a bounded
-   * time-bucket window); a key whose duplicate lives outside the scope is
-   * appended again — scoping trades the cross-run global guarantee for a
-   * bounded probe, it does not preserve it.
-   */
-  def appendMissingScoped(df: DataFrame, table: String, keyCol: String,
-                          partitionCols: Seq[String], scope: org.apache.spark.sql.Column,
-                          lineage: Map[String, String] = Map.empty,
-                          format: Map[String, String] = Map.empty): Option[Snapshot] =
-    appendMissingImpl(df, table, keyCol, partitionCols, Some(scope), lineage, format)
-
-  private def appendMissingImpl(df: DataFrame, table: String, keyCol: String,
-                                partitionCols: Seq[String],
-                                scope: Option[org.apache.spark.sql.Column],
-                                lineage: Map[String, String],
-                                format: Map[String, String]): Option[Snapshot] = {
+                    format: Map[String, String] = Map.empty,
+                    scope: Option[org.apache.spark.sql.Column] = None): Option[Snapshot] = {
     val clock = new CommitClock
     val t = new Table(df.sparkSession, table)
     val head = clock.fsCall(headFor(t, format))

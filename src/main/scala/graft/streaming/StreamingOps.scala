@@ -1,17 +1,36 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
+
+import graft.operators.{Curation, Dedup, Similarity}
+import graft.sink.SnapshotSink
 
 /**
- * Structured Streaming counterparts of the temporal operators. The reference
- * is strictly batch (SURVEY.md §2.10) — its "pipeline" is a bounded
- * producer/consumer loop (exm/UrlIndexingMT.java:121–203) — so these exist as
- * the streaming-ingest path of OUR engine: the same event-time semantics as
- * graft.temporal.Temporal, expressed with watermarks + state stores so a
- * 100 TB backfill job and a live ingest job share one definition of
- * "session" / "window".
+ * The streaming-ingest path of the engine. The reference is strictly batch
+ * (SURVEY.md §2.10) — its "pipeline" is a bounded producer/consumer loop
+ * (exm/UrlIndexingMT.java:121–203). A stream calls the batch operators
+ * directly, so a live ingest and a 100 TB backfill share one definition:
+ *  - as-of model binding: [[graft.temporal.Temporal.asOfJoin]] against a
+ *    static version table (a stream-static interval join, no stream-side
+ *    state); the flagship featurize is
+ *    [[graft.pipeline.FeaturePipeline.featurize]] over that join;
+ *  - exact dedup: `withWatermark` + `dropDuplicatesWithinWatermark`;
+ *  - in-flight scoring and filtering: the row-local broadcast expressions
+ *    `LmExpressions.lm_score`/`sb_score`, `NbExpressions.nb_lang`,
+ *    `DsirExpressions.dsir_score`, [[graft.ml.Classifier.scoreColumn]],
+ *    [[graft.operators.Dedup.bloomSuspect]] and
+ *    [[graft.operators.Curation.filterBlocklist]]. The broadcast
+ *    expressions are the only LM, NB and DSIR scorers that compose as an
+ *    append-mode transform: the join paths (`TextOps.lmScore` and its
+ *    kin) end in a per-document aggregate, which an append-mode stream
+ *    refuses without a watermark.
+ * What is here is what Spark's streaming API does not already give a
+ * caller: watermarked windows, stateful sessionize, and the `foreachBatch`
+ * queries that commit each micro-batch to snapshot tables — the snapshot
+ * sink and the four incremental dedup doors.
  */
 object StreamingOps {
 
@@ -26,44 +45,35 @@ object StreamingOps {
       .groupBy(window(col(tsCol), windowLen, slide), col(keyCol))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
-  /** Streaming exact dedup: first row per content key wins, duplicates in
-    * later batches are dropped by the state store; the watermark bounds state
-    * the way Dedup.exactGroups's shuffle is bounded by the batch (the
-    * streaming twin of F2 + exact dedup — at 100 TB/day ingest this is the
-    * de-dup-at-the-door path). */
-  def dedupByKey(events: DataFrame, keyCols: Seq[String], tsCol: String,
-                 watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
+  /** The query behind every snapshot-committing door: an append-mode
+    * `foreachBatch` over `stream`, checkpointed at `checkpointDir`, whose
+    * `body` gets each micro-batch and the `stream_batch_id` lineage its
+    * commits record. Returns the started query. */
+  private def eachBatch(stream: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Map[String, String]) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch.toDF(), Map("stream_batch_id" -> batchId.toString))
+      }
+      .start()
 
-  /** Streaming as-of model binding (the J4 twin): each in-flight event binds
-    * the latest version row with `valid_from <= ts` for its key — the exact
-    * batch semantics of Temporal.asOfJoin, reused verbatim. The version side
-    * is STATIC (a model/dimension table), so the interval formulation is
-    * directly stream-compatible: validity windows are computed once on the
-    * static side and the stream-static inner join needs no watermark or
-    * stream-side state. Batch parity is asserted in StreamingSpec. */
-  def asOfBind(events: DataFrame, versions: DataFrame,
-               leftTs: String, rightTs: String,
-               keys: Seq[String] = Seq.empty,
-               lookback: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    graft.temporal.Temporal.asOfJoin(events, versions, leftTs, rightTs, keys,
-      joinType = "inner", lookback = lookback)
+  /** A door's history table, or `empty` (a frame with its schema) before
+    * the first commit. */
+  private def historyOr(table: String)(read: => DataFrame)(
+      empty: => DataFrame): DataFrame =
+    if (SnapshotSink.lastSnapshot(table).isDefined) read else empty
 
-  /** Streaming flagship-ingest twin (§2.10 × the P-pipeline): image rows
-    * arrive as a stream, bind their as-of model version against the STATIC
-    * model table (stream-static interval join, no stream-side state), then
-    * run the full decode→extract→VLAD→PCA→PQ featurize — literally the batch
-    * `FeaturePipeline.featurize` call, which is a stateless mapPartitions
-    * over broadcast model state and therefore directly stream-compatible.
-    * A live ingest and a 100 TB backfill share one featurize definition;
-    * batch parity is asserted in StreamingSpec. */
-  def featurizeStream(images: DataFrame, modelDf: DataFrame,
-                      bundles: Map[Int, graft.model.ModelBundle],
-                      cfg: graft.pipeline.FeaturePipeline.PipelineConfig): DataFrame =
-    graft.pipeline.FeaturePipeline.featurize(
-      asOfBind(images, modelDf, "ts", "valid_from"), bundles, cfg)
+  /** Commits a door's near-dup pairs keyed `id_a:id_b`, so a replayed
+    * batch writes none twice. */
+  private def appendPairs(pairs: DataFrame, pairsTable: String,
+                          lineage: Map[String, String]): Unit = {
+    SnapshotSink.appendMissing(
+      pairs.withColumn("pair_key", concat_ws(":", col("id_a"), col("id_b"))),
+      pairsTable, "pair_key", Seq.empty, lineage)
+    ()
+  }
 
   /** Stream → snapshot table: each micro-batch commits through
     * `SnapshotSink.appendMissing`, so the sink inherits the batch resume
@@ -80,30 +90,21 @@ object StreamingOps {
     * batch and every earlier run — Structured Streaming's own batchId dedup
     * only covers replays of the same query). When keys are known to arrive
     * within a bounded window, pass `scopeOf`: per batch it yields a
-    * partition-column predicate and the probe becomes
-    * [[graft.sink.SnapshotSink.appendMissingScoped]] — a partition-pruned
-    * scan of only the live partitions, bounding per-batch cost (the caller
-    * guarantees keys cannot collide outside the scope). Periodic
-    * [[graft.sink.SnapshotSink.compact]] keeps the probed file set packed. */
+    * partition-column predicate, the `scope` of
+    * [[graft.sink.SnapshotSink.appendMissing]], and the probe becomes a
+    * partition-pruned scan of only the live partitions, bounding per-batch
+    * cost (the caller guarantees keys cannot collide outside the scope).
+    * Periodic [[graft.sink.SnapshotSink.compact]] keeps the probed file set
+    * packed. */
   def sinkToSnapshot(stream: DataFrame, table: String, keyCol: String,
                      partitionCols: Seq[String],
                      checkpointDir: String,
-                     scopeOf: Option[DataFrame => org.apache.spark.sql.Column] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val lineage = Map("stream_batch_id" -> batchId.toString)
-        scopeOf match {
-          case Some(f) => graft.sink.SnapshotSink.appendMissingScoped(
-            batch.toDF(), table, keyCol, partitionCols, f(batch.toDF()), lineage)
-          case None => graft.sink.SnapshotSink.appendMissing(
-            batch.toDF(), table, keyCol, partitionCols, lineage)
-        }
-        ()
-      }
-      .start()
+                     scopeOf: Option[DataFrame => Column] = None): StreamingQuery =
+    eachBatch(stream, checkpointDir) { (batch, lineage) =>
+      SnapshotSink.appendMissing(batch, table, keyCol, partitionCols, lineage,
+        scope = scopeOf.map(_(batch)))
+      ()
+    }
 
   /** Streaming door for INCREMENTAL near-dup — the live-ingest twin of
     * [[graft.operators.Dedup.minhashLshPairsIncremental]]: per micro-batch,
@@ -129,32 +130,17 @@ object StreamingOps {
   def nearDupDoor(docs: DataFrame, sigTable: String, pairsTable: String,
                   checkpointDir: String, idCol: String, textCol: String,
                   shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-                  threshold: Double = 0.5, maxBucket: Int = 1000)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val D = graft.operators.Dedup
-        val numHashes = bands * rowsPerBand
-        val oldSigs = graft.sink.SnapshotSink.lastSnapshot(sigTable) match {
-          case Some(_) =>
-            D.readMinhashSignatures(spark, sigTable, shingleN, numHashes)
-          case None => // first batch: empty frame with the signature schema
-            D.minhashSignatures(batch.toDF().limit(0), idCol, textCol,
-              shingleN, numHashes)
-        }
-        val pairs = D.minhashLshPairsIncremental(batch.toDF(), oldSigs,
-            idCol, textCol, shingleN, bands, rowsPerBand, threshold, maxBucket)
-          .withColumn("pair_key", concat_ws(":", col("id_a"), col("id_b")))
-        graft.sink.SnapshotSink.appendMissing(pairs, pairsTable, "pair_key",
-          Seq.empty, lineage = Map("stream_batch_id" -> batchId.toString))
-        D.persistMinhashSignatures(batch.toDF(), sigTable, idCol, textCol,
-          shingleN, numHashes)
-        ()
-      }
-      .start()
+                  threshold: Double = 0.5, maxBucket: Int = 1000): StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, lineage) =>
+      val numHashes = bands * rowsPerBand
+      val oldSigs = historyOr(sigTable)(
+        Dedup.readMinhashSignatures(batch.sparkSession, sigTable, shingleN, numHashes))(
+        Dedup.minhashSignatures(batch.limit(0), idCol, textCol, shingleN, numHashes))
+      appendPairs(Dedup.minhashLshPairsIncremental(batch, oldSigs, idCol, textCol,
+        shingleN, bands, rowsPerBand, threshold, maxBucket), pairsTable, lineage)
+      Dedup.persistMinhashSignatures(batch, sigTable, idCol, textCol, shingleN,
+        numHashes)
+    }
 
   /** Sink format of [[hammingNearDupDoor]]'s signature table. */
   private val hammingSigFormat = Map("op" -> "hamming_signatures")
@@ -171,29 +157,17 @@ object StreamingOps {
   def hammingNearDupDoor(items: DataFrame, sigTable: String, pairsTable: String,
                          checkpointDir: String, idCol: String, bitsCol: String,
                          maxHamming: Int = 3, chunks: Int = 4,
-                         maxBucket: Int = 1000)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    items.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val D = graft.operators.Dedup
-        val sigs = batch.toDF().select(col(idCol), col(bitsCol))
-        val oldSigs = graft.sink.SnapshotSink.lastSnapshot(sigTable) match {
-          case Some(_) => graft.sink.SnapshotSink.read(spark, sigTable, hammingSigFormat)
-          case None => sigs.limit(0)
-        }
-        val pairs = D.hammingPairs64Incremental(sigs, oldSigs, idCol, bitsCol,
-            maxHamming, chunks, maxBucket)
-          .withColumn("pair_key", concat_ws(":", col("id_a"), col("id_b")))
-        graft.sink.SnapshotSink.appendMissing(pairs, pairsTable, "pair_key",
-          Seq.empty, lineage = Map("stream_batch_id" -> batchId.toString))
-        graft.sink.SnapshotSink.appendMissing(sigs, sigTable, idCol, Seq.empty,
-          lineage = Map("stream_batch_id" -> batchId.toString), format = hammingSigFormat)
-        ()
-      }
-      .start()
+                         maxBucket: Int = 1000): StreamingQuery =
+    eachBatch(items, checkpointDir) { (batch, lineage) =>
+      val sigs = batch.select(col(idCol), col(bitsCol))
+      val oldSigs = historyOr(sigTable)(
+        SnapshotSink.read(batch.sparkSession, sigTable, hammingSigFormat))(sigs.limit(0))
+      appendPairs(Dedup.hammingPairs64Incremental(sigs, oldSigs, idCol, bitsCol,
+        maxHamming, chunks, maxBucket), pairsTable, lineage)
+      SnapshotSink.appendMissing(sigs, sigTable, idCol, Seq.empty, lineage,
+        format = hammingSigFormat)
+      ()
+    }
 
   /** Streaming door for INCREMENTAL SemDeDup — the embedding-space member
     * of the door family ([[nearDupDoor]] = text shingles,
@@ -212,29 +186,17 @@ object StreamingOps {
                           pairsTable: String, checkpointDir: String,
                           idCol: String, vecCol: String,
                           centroids: Array[Array[Double]],
-                          threshold: Double = 0.95, maxBucket: Int = 10000)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    items.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val S = graft.operators.Similarity
-        val oldAssign = graft.sink.SnapshotSink.lastSnapshot(assignTable) match {
-          case Some(_) => S.readSemanticAssignments(spark, assignTable, centroids)
-          case None => // first batch: empty frame with the assignment schema
-            S.semanticAssignments(batch.toDF().limit(0), idCol, vecCol, centroids)
-        }
-        val pairs = S.semanticNearDupPairsIncremental(batch.toDF(), oldAssign,
-            idCol, vecCol, centroids, threshold, maxBucket)
-          .withColumn("pair_key", concat_ws(":", col("id_a"), col("id_b")))
-        graft.sink.SnapshotSink.appendMissing(pairs, pairsTable, "pair_key",
-          Seq.empty, lineage = Map("stream_batch_id" -> batchId.toString))
-        S.persistSemanticAssignments(batch.toDF(), assignTable, idCol, vecCol,
-          centroids)
-        ()
-      }
-      .start()
+                          threshold: Double = 0.95,
+                          maxBucket: Int = 10000): StreamingQuery =
+    eachBatch(items, checkpointDir) { (batch, lineage) =>
+      val oldAssign = historyOr(assignTable)(
+        Similarity.readSemanticAssignments(batch.sparkSession, assignTable, centroids))(
+        Similarity.semanticAssignments(batch.limit(0), idCol, vecCol, centroids))
+      appendPairs(Similarity.semanticNearDupPairsIncremental(batch, oldAssign,
+        idCol, vecCol, centroids, threshold, maxBucket), pairsTable, lineage)
+      Similarity.persistSemanticAssignments(batch, assignTable, idCol, vecCol,
+        centroids)
+    }
 
   /** Streaming door for INCREMENTAL keep-first paragraph dedup — the
     * unit-level member of the door family: per micro-batch, each document's
@@ -248,100 +210,16 @@ object StreamingOps {
     * [[graft.operators.Curation.dedupParagraphs]] (StreamingSpec). */
   def paragraphDedupDoor(docs: DataFrame, fpTable: String, outTable: String,
                          checkpointDir: String, idCol: String,
-                         textCol: String, delim: String = "\n\n")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val C = graft.operators.Curation
-        val seen = graft.sink.SnapshotSink.lastSnapshot(fpTable) match {
-          case Some(_) => C.readParagraphFingerprints(spark, fpTable, delim)
-          case None => // first batch: empty frame with the fingerprint schema
-            C.paragraphFingerprints(batch.toDF().limit(0), idCol, textCol, delim)
-        }
-        val cleaned = C.dedupParagraphsIncremental(batch.toDF(), seen,
-          idCol, textCol, delim)
-        graft.sink.SnapshotSink.appendMissing(cleaned, outTable, idCol,
-          Seq.empty, lineage = Map("stream_batch_id" -> batchId.toString))
-        C.persistParagraphFingerprints(batch.toDF(), fpTable, idCol, textCol,
-          delim)
-        ()
-      }
-      .start()
-
-  /** In-flight LM quality scoring (the CCNet curation signal at the door):
-    * append `cross_entropy` via the row-local broadcast `lm_score`
-    * expression — stateless, so a live ingest and a 100 TB backfill share
-    * one scoring definition (term-for-term the batch
-    * [[graft.operators.TextOps.lmScore]] arithmetic; parity in
-    * StreamingSpec). Docs with < 2 tokens score NULL. Pair with a
-    * `.where(col("cross_entropy") <= τ)` to drop noise in flight. */
-  def scoreStream(docs: DataFrame, textCol: String,
-                  lm: org.apache.spark.broadcast.Broadcast[
-                    graft.functions.LmExpressions.LocalLm]): DataFrame =
-    docs.withColumn("cross_entropy",
-      graft.operators.TextOps.lmScoreBroadcast(col(textCol), lm))
-
-  /** In-flight decontamination (the streaming twin of
-    * [[graft.operators.Dedup.decontaminateBloom]]'s prefilter): drop every
-    * document the [[graft.operators.Dedup.BloomDoor]] cannot PROVE clean,
-    * row-locally, no state, no join. Conservative by construction — the
-    * kept set is a subset of batch `decontaminate`'s (Bloom false positives
-    * over-drop at rate ≤ fpp^minHits-ish; a benchmark-contaminated doc can
-    * never slip through, the direction that matters for training data).
-    * Batch parity bounds are asserted in StreamingSpec. */
-  def decontaminateAtDoor(docs: DataFrame, textCol: String,
-                          door: graft.operators.Dedup.BloomDoor): DataFrame =
-    docs.where(!graft.operators.Dedup.bloomSuspect(col(textCol), door))
-
-  /** In-flight model-based quality gate (the GPT-3 Wikipedia-vs-crawl
-    * filter shape at the door): append `quality_prob` = σ(w·x) via the
-    * row-local broadcast featurize+dot expression — stateless, so live
-    * ingest and batch backfill share [[graft.ml.Classifier]]'s one scoring
-    * definition. Pair with `.where(col("quality_prob") >= τ)`. */
-  def classifyStream(docs: DataFrame, textCol: String,
-                     model: graft.ml.Classifier.LogisticModel): DataFrame =
-    docs.withColumn("quality_prob",
-      graft.ml.Classifier.scoreColumn(col(textCol), model, docs.sparkSession))
-
-  /** In-flight DSIR importance weighting: append `dsir_log_weight` via the
-    * broadcast dense-ratio expression ([[graft.functions.DsirExpressions]])
-    * — term-identical to the batch join path up to summation order.
-    * Token-less docs score NULL. */
-  def dsirScoreStream(docs: DataFrame, textCol: String,
-                      ratios: org.apache.spark.broadcast.Broadcast[
-                        Array[Double]]): DataFrame =
-    docs.withColumn("dsir_log_weight",
-      graft.functions.DsirExpressions.dsir_score(col(textCol), ratios))
-
-  /** In-flight Stupid Backoff quality scoring: append `sb_logscore` via the
-    * broadcast count-table expression — the trigram upgrade of
-    * [[scoreStream]], same cascade as the batch join path term-by-term.
-    * Token-less docs score NULL. */
-  def sbScoreStream(docs: DataFrame, textCol: String,
-                    lm: org.apache.spark.broadcast.Broadcast[
-                      graft.functions.LmExpressions.LocalSb]): DataFrame =
-    docs.withColumn("sb_logscore",
-      graft.operators.TextOps.sbScoreBroadcast(col(textCol), lm))
-
-  /** In-flight language tagging: append `lang_pred` via the broadcast NB
-    * expression — the trained-langid door for language-filtered ingest
-    * (pair with `.where(col("lang_pred").isin(...))`). Docs shorter than
-    * the model's n characters tag NULL. */
-  def langIdStream(docs: DataFrame, textCol: String,
-                   model: org.apache.spark.broadcast.Broadcast[
-                     graft.functions.NbExpressions.LocalNb]): DataFrame =
-    docs.withColumn("lang_pred",
-      graft.operators.TextOps.nbLangIdBroadcast(col(textCol), model))
-
-  /** In-flight C4 bad-words door: drop any doc containing a blocklist term
-    * — one compiled regex pass, no state, batch-identical by construction
-    * ([[graft.operators.Curation.filterBlocklist]] is pure row-local). */
-  def blocklistAtDoor(docs: DataFrame, textCol: String,
-                      keywords: Seq[String]): DataFrame =
-    graft.operators.Curation.filterBlocklist(docs, textCol, keywords)
+                         textCol: String, delim: String = "\n\n"): StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, lineage) =>
+      val seen = historyOr(fpTable)(
+        Curation.readParagraphFingerprints(batch.sparkSession, fpTable, delim))(
+        Curation.paragraphFingerprints(batch.limit(0), idCol, textCol, delim))
+      SnapshotSink.appendMissing(
+        Curation.dedupParagraphsIncremental(batch, seen, idCol, textCol, delim),
+        outTable, idCol, Seq.empty, lineage)
+      Curation.persistParagraphFingerprints(batch, fpTable, idCol, textCol, delim)
+    }
 
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
   final case class SessionUpdate(user_id: Long, session_seq: Long, n_events: Long,

@@ -13,6 +13,23 @@ import graft.kernels.Imaging
 class FunctionsSqlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  test("GraftExtensions registers exactly the SQL functions registerAll registers") {
+    val injected = new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
+    new graft.functions.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        injected.registerFunction(f._1, f._2, f._3)
+    })
+    // a new session starts from the built-in functions alone
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val builtin = reg.listFunction().toSet
+    ImageExpressions.registerAll(s)
+    graft.functions.VectorExpressions.registerAll(s)
+    val registered = (reg.listFunction().toSet -- builtin).map(_.funcName)
+    assert(registered.size == 16, registered)
+    assert(injected.listFunction().map(_.funcName).sorted == registered.toSeq.sorted)
+  }
+
   test("decode_image / scale_max_pixels / phash64 / img_psnr work from SQL") {
     ImageExpressions.registerAll(spark)
     Synth.imageTable(spark, 12L).createOrReplaceTempView("graft_images")

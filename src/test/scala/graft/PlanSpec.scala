@@ -317,14 +317,27 @@ class PlanSpec extends AnyFunSuite {
       val before = spark.conf.getOption(key)
       spark.conf.set(key, 128L * 1024)
       try {
-        // the spread reads the scan's partition count from its RDD: no job
-        val (scanParts, jobs) = withJobs(graft.sources.Sources.parquet(spark,
-          s"$copy/documents.parquet").rdd.getNumPartitions)
-        assert(scanParts >= 4, s"the multi-file copy scans as $scanParts partitions")
-        assert(jobs.isEmpty, s"reading the partition count started ${jobs.size} jobs")
+        // the spread reads the scan's file and partition counts: no job
+        val ((files, scanParts), jobs) = withJobs {
+          val scan = graft.sources.Sources.parquet(spark, s"$copy/documents.parquet")
+          (scan.inputFiles.length, scan.rdd.getNumPartitions)
+        }
+        assert(files == 8 && scanParts >= 4,
+          s"the multi-file copy scans $files files as $scanParts partitions")
+        assert(jobs.isEmpty, s"reading the counts started ${jobs.size} jobs")
         roundRobin.foreach { q =>
           val multi = spreads(q, copy)
           assert(multi.isEmpty, s"$q over $scanParts scan partitions: $multi")
+        }
+        // the single file now reads as several byte-range splits, but its
+        // rows sit in the one split that holds its row group: still spread
+        val singleParts = graft.sources.Sources.parquet(spark,
+          s"$sf1/documents.parquet").rdd.getNumPartitions
+        assert(singleParts >= 4, s"the single file scans as $singleParts splits")
+        roundRobin.foreach { q =>
+          val single = spreads(q, sf1).map(_.outputPartitioning)
+          assert(single.nonEmpty && single.forall(_ == RoundRobinPartitioning(4)),
+            s"$q at sf0.1 over $singleParts splits: $single")
         }
       } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy))

@@ -164,7 +164,7 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(SnapshotSink.vacuum(table2, retainAsOf = 1).isEmpty)
   }
 
-  test("appendMissingScoped: partition-pruned probe dedups inside the scope " +
+  test("appendMissing with a scope: partition-pruned probe dedups inside the scope " +
     "only (bounded-stream resume; outside-scope collisions are the caller's " +
     "contract)") {
     val table = tmpTable()
@@ -174,8 +174,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val batch = Seq((2L, 2, "dup-in-scope"), (42L, 2, "new-in-scope"),
       (1L, 1, "dup-outside"), (45L, 1, "new-outside"))
       .toDF("id", "part", "payload")
-    val snap = SnapshotSink.appendMissingScoped(batch, table, "id", Seq("part"),
-      scope = col("part") === 2).get
+    val snap = SnapshotSink.appendMissing(batch, table, "id", Seq("part"),
+      scope = Some(col("part") === 2)).get
     // in-scope dup dropped, everything else written (incl. the outside-scope
     // dup — the documented trade for a bounded probe)
     assert(snap.rowCount == 3)
@@ -453,8 +453,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
         format = other)
     }
     intercept[IllegalArgumentException] {
-      SnapshotSink.appendMissingScoped(data(0 until 20), table, "id", Seq("part"),
-        col("part") === 1, format = other)
+      SnapshotSink.appendMissing(data(0 until 20), table, "id", Seq("part"),
+        format = other, scope = Some(col("part") === 1))
     }
     assert(state == before)
     val ex = intercept[IllegalArgumentException](SnapshotSink.read(spark, table, other))

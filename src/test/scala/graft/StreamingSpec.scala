@@ -10,7 +10,9 @@ import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.SessionEvent
 
 /** Streaming surface: watermarked windowed agg and stateful sessionize agree
-  * with the batch Temporal semantics on the same data. */
+  * with the batch Temporal semantics on the same data, the batch operators
+  * run unchanged on a stream, and the foreachBatch doors commit each
+  * micro-batch exactly once by key. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -74,8 +76,8 @@ class StreamingSpec extends AnyFunSuite {
       (2L, ts(6), 21L))
     val input = MemoryStream[(Long, Timestamp, Long)]
     val events = input.toDF().toDF("user_id", "ts", "event_id")
-    val bound = StreamingOps.asOfBind(events, versions, "ts", "valid_from",
-      keys = Seq("user_id"))
+    val bound = graft.temporal.Temporal.asOfJoin(events, versions, "ts",
+      "valid_from", keys = Seq("user_id"))
       .select("event_id", "version")
     val q = bound.writeStream.outputMode("append")
       .format("memory").queryName("asof_out").start()
@@ -107,8 +109,9 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(String, Array[Byte], String, Long, Timestamp, String)]
     val stream = input.toDF()
       .toDF("image_id", "bytes", "caption", "phash", "ts", "entity_id")
-    val out = StreamingOps.featurizeStream(stream, minted._1, minted._2,
-      graft.data.Synth.defaultConfig)
+    val out = graft.pipeline.FeaturePipeline.featurize(
+      graft.temporal.Temporal.asOfJoin(stream, minted._1, "ts", "valid_from"),
+      minted._2, graft.data.Synth.defaultConfig)
       .select("image_id", "model_version", "n_descriptors", "pq_code")
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("feat_out").start()
@@ -342,7 +345,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Timestamp, String)]
     val docs = input.toDF().toDF("content_key", "ts", "doc_id")
-    val deduped = StreamingOps.dedupByKey(docs, Seq("content_key"), "ts")
+    val deduped = docs.withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark(Seq("content_key"))
     val q = deduped.writeStream.outputMode("append")
       .format("memory").queryName("dedup_out").start()
     input.addData(
@@ -421,7 +425,7 @@ class StreamingSpec extends AnyFunSuite {
     lm.release()
     val data = Seq((1L, "spark scales out"), (2L, "zz yy xx"), (3L, "one"))
     def score(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
-      TextOps.lmScoreBroadcast(col("text"), bc).as("ce"))
+      graft.functions.LmExpressions.lm_score(col("text"), bc).as("ce"))
     val input = MemoryStream[(Long, String)]
     val q = score(input.toDF().toDF("doc_id", "text"))
       .writeStream.outputMode("append")
@@ -466,9 +470,10 @@ class StreamingSpec extends AnyFunSuite {
       .resolve("t").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_door_ckpt").toString
     val input = MemoryStream[(Long, String)]
-    val cleaned = StreamingOps.decontaminateAtDoor(
-      StreamingOps.scoreStream(input.toDF().toDF("doc_id", "text"), "text", lmBc),
-      "text", door)
+    val cleaned = input.toDF().toDF("doc_id", "text")
+      .withColumn("cross_entropy",
+        graft.functions.LmExpressions.lm_score(col("text"), lmBc))
+      .where(!Dedup.bloomSuspect(col("text"), door))
       .withColumn("part", (col("doc_id") % 2).cast("int"))
     val q = StreamingOps.sinkToSnapshot(cleaned, table, "doc_id", Seq("part"), ckpt)
     input.addData(corpus: _*)
@@ -523,13 +528,15 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "theorem proof with a badword here"), // blocked
       (4L, "plain bad stuff"))                   // blocked
     def curate(df: org.apache.spark.sql.DataFrame) =
-      StreamingOps.blocklistAtDoor(
-        StreamingOps.langIdStream(
-          StreamingOps.sbScoreStream(
-            StreamingOps.dsirScoreStream(
-              StreamingOps.classifyStream(df, "text", clf), "text", ratios),
-            "text", sbBc),
-          "text", nbBc),
+      graft.operators.Curation.filterBlocklist(df
+        .withColumn("quality_prob",
+          graft.ml.Classifier.scoreColumn(col("text"), clf, df.sparkSession))
+        .withColumn("dsir_log_weight",
+          graft.functions.DsirExpressions.dsir_score(col("text"), ratios))
+        .withColumn("sb_logscore",
+          graft.functions.LmExpressions.sb_score(col("text"), sbBc))
+        .withColumn("lang_pred",
+          graft.functions.NbExpressions.nb_lang(col("text"), nbBc)),
         "text", kws)
     val input = MemoryStream[(Long, String)]
     val q = curate(input.toDF().toDF("doc_id", "text"))

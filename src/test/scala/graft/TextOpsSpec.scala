@@ -384,7 +384,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(!lm.bigrams.storageLevel.useMemory, "bigram stage still cached")
   }
 
-  test("lmScoreBroadcast: term-identical to the join-based lmScore (order-" +
+  test("lm_score: term-identical to the join-based lmScore (order-" +
     "noise only), NULL under 2 tokens, collectLm size guard") {
     val train = Seq((1L, "a b a b c d e f a c"), (2L, "a b c a d"))
       .toDF("doc_id", "text")
@@ -396,7 +396,7 @@ class TextOpsSpec extends AnyFunSuite {
     val joinPath = TextOps.lmScore(docs, "doc_id", "text", lm)
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     val exprPath = docs.select(col("doc_id"),
-        TextOps.lmScoreBroadcast(col("text"), bc).as("ce"))
+        graft.functions.LmExpressions.lm_score(col("text"), bc).as("ce"))
       .as[(Long, Option[Double])].collect().toMap
     // same doc universe: join path omits bigram-less docs, expression NULLs them
     assert(exprPath(12L).isEmpty && exprPath(13L).isEmpty)
@@ -494,7 +494,7 @@ class TextOpsSpec extends AnyFunSuite {
     // size guard counted before collecting
     val bc = spark.sparkContext.broadcast(TextOps.collectNb(model))
     val exprPath = test.select(col("doc_id"),
-        TextOps.nbLangIdBroadcast(col("text"), bc).as("p"))
+        graft.functions.NbExpressions.nb_lang(col("text"), bc).as("p"))
       .as[(Long, Option[String])].collect().toMap
     assert(exprPath(1L).contains("xx") && exprPath(2L).contains("yy"))
     assert(exprPath(3L).isEmpty)
@@ -502,7 +502,7 @@ class TextOpsSpec extends AnyFunSuite {
     model.release(); model.release() // idempotent
   }
 
-  test("sbScoreBroadcast: term-identical to the join-based sbScore (order-" +
+  test("sb_score: term-identical to the join-based sbScore (order-" +
     "noise only) incl. under pruning; NULL for token-less docs; size guard") {
     val train = Seq((1L, "a b c a b d e f a b c"), (2L, "b c a d e"))
       .toDF("doc_id", "text")
@@ -514,7 +514,7 @@ class TextOpsSpec extends AnyFunSuite {
       val joinPath = TextOps.sbScore(docs, "doc_id", "text", lm)
         .select("doc_id", "sb_logscore").as[(Long, Double)].collect().toMap
       val exprPath = docs.select(col("doc_id"),
-          TextOps.sbScoreBroadcast(col("text"), bc).as("s"))
+          graft.functions.LmExpressions.sb_score(col("text"), bc).as("s"))
         .as[(Long, Option[Double])].collect().toMap
       assert(joinPath.keySet == Set(10L, 11L, 12L))
       assert(exprPath(13L).isEmpty, "whitespace-only doc must score NULL")

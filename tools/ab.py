@@ -10,8 +10,13 @@ BENCHMARK.json's run_seconds (the parent first on even pairs, the change
 first on odd ones). A comma-separated --workload runs the workloads one
 after the other. Then prints, per workload, for every end-to-end metric in the
 change's BENCHMARK.json: each side's median and quartiles, the parent's IQR,
-the change's win count (ties count for neither), and whether the pairs support
-a gain (wins >= 9/10 of pairs and median gap > parent IQR). Failed operations
+the change's win count (ties count for neither), whether the pairs support
+a gain (wins >= 9/10 of pairs and median gap > parent IQR), and a
+no-regression verdict against the metric's `bound` in BENCHMARK.json:
+`worse` when the change's median is worse than the parent's by more than
+bound x the parent's median; otherwise `unresolved` when the parent's IQR
+exceeds bound x the parent's median and not every change run beats every
+parent run; otherwise `within`. Failed operations
 are summed per side. A run that exits non-zero, or prints no result, is
 reported with its seed, side and exit code; its pair is left out of the
 quartiles and win counts, and each side's crashed runs are counted next to its
@@ -39,6 +44,17 @@ def run(checkout, workload, seed, seconds):
 def quartiles(xs):
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def regression(p, c, med, iqr, bound, lower):
+    """`worse`, `unresolved` or `within` (see the module doc)."""
+    worse_by = (statistics.median(c) - med) if lower else (med - statistics.median(c))
+    if worse_by > bound * abs(med):
+        return "worse"
+    beats_all = max(c) < min(p) if lower else min(c) > max(p)
+    if iqr > bound * abs(med) and not beats_all:
+        return "unresolved"
+    return "within"
 
 
 def compare(sides, workload, spec, first, last):
@@ -72,7 +88,7 @@ def compare(sides, workload, spec, first, last):
         print("too few complete pairs for quartiles")
     else:
         print(f"{'metric':<12} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
-              f"{'parent IQR':>10} {'gap':>8} {'wins':>6}  gain")
+              f"{'parent IQR':>10} {'gap':>8} {'wins':>6}  gain  no-regression")
     for m in spec["end_to_end"] if pairs >= 2 else []:
         name, lower = m["name"], m["better"] == "lower"
         p = [r["metrics"][name]["value"] for r in results["parent"]]
@@ -82,9 +98,11 @@ def compare(sides, workload, spec, first, last):
         gap = cq[1] - pq[1]
         wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
         gain = wins * 10 >= pairs * 9 and abs(gap) > iqr and (gap < 0) == lower
+        verdict = regression(p, c, pq[1], iqr, m["bound"], lower)
         fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
         print(f"{name:<12} {fmt(pq):>26} {fmt(cq):>26} {iqr:>10.4g} "
-              f"{gap / pq[1]:>+8.1%} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no'}")
+              f"{gap / pq[1]:>+8.1%} {wins:>3}/{pairs:<2}  {'yes' if gain else 'no':<4}  "
+              f"{verdict}")
     for side in ("parent", "change"):
         failed = sum(r["failed"] for r in results[side])
         attempted = sum(r["attempted"] for r in results[side])
